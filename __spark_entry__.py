@@ -34,6 +34,7 @@ from beats_spark.operators.actions import (
 )
 from beats_spark.operators.enrich import BroadcastLookup, dim_roles, dim_tools
 from beats_spark.operators.selector import Rule, compile_selector
+from beats_spark.session import local_frame
 from beats_spark.synth import TRANSCRIPTS_FROM_EVENTS_SQL, transcripts_from_events
 
 # ---------------------------------------------------------------------------
@@ -253,8 +254,8 @@ def q_enrich_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sum_priority").alias("m1"),
         )
     )
-    dim = spark.createDataFrame(
-        ASOF_DIM_ROWS, "role string, vts string, config_rev long"
+    dim = local_frame(
+        spark, ASOF_DIM_ROWS, "role string, vts string, config_rev long"
     ).select("role", F.to_timestamp("vts").alias("version_ts"), "config_rev")
     asof = (
         AsofLookup(dim=dim, on=["role"], ts_col="ts")
@@ -624,12 +625,13 @@ def q_ua_geo_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("/x-json.log"),
         ),
     ).withColumn("process.pid", F.pmod("event_id", F.lit(4)) + F.lit(100))
-    docker_dim = spark.createDataFrame(
+    docker_dim = local_frame(
+        spark,
         [(cids[0], "web-1", "nginx:1.25", {}), (cids[1], "db-1", "postgres:16", {})],
         "id string, name string, image string, labels map<string,string>",
     )
-    proc_dim = spark.createDataFrame(
-        [(100, "nginx"), (101, "python"), (102, "bash")], "pid long, name string"
+    proc_dim = local_frame(
+        spark, [(100, "nginx"), (101, "python"), (102, "bash")], "pid long, name string"
     )
     out = UserAgentEnrich(
         dim=dim_user_agents(spark), field="ua", target_prefix="user_agent",

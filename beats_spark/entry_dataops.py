@@ -70,6 +70,7 @@ from .operators.multimodal import (
     resize_payload,
     with_binary_payload,
 )
+from .session import local_frame
 from .operators.similarity import (
     ann_ivf_topk,
     ann_ivf_topk_sql,
@@ -781,8 +782,15 @@ def q_framing_charsets(spark, sf_dir):
       a genuine JVM-vs-literal cross-check;
     - UTF-16 BOM ladder + UTF-8 replacement semantics on fixed blobs
       (BOM detected AND stripped; BOM-required mode NULL without one;
-      invalid UTF-8 byte → U+FFFD)."""
+      invalid UTF-8 byte → U+FFFD).
+
+    Sets the two decode confs it relies on (the multi-byte JVM codecs
+    and replace-not-abort decoding) on the session itself, so the row
+    holds on a default-conf session, not only under ``build_session``."""
     from .functions.framing import decode_blob
+
+    spark.conf.set("spark.sql.legacy.javaCharsets", "true")
+    spark.conf.set("spark.sql.legacy.codingErrorAction", "true")
 
     bytes_df = _docs(spark, sf_dir).where(
         (F.col("doc_id") >= 1) & (F.col("doc_id") <= 255)
@@ -1263,7 +1271,8 @@ def q_bpe_tokenize(spark, sf_dir):
         F.col("n_tokens").cast("long").alias("n_tokens"),
         F.array_join("tokens", " ").alias("tokens"),
     )
-    merge_rows = spark.createDataFrame(
+    merge_rows = local_frame(
+        spark,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank long, a string, b string",
     ).select(

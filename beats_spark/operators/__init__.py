@@ -1,3 +1,3 @@
 """Pipeline operators: field actions, processor-chain compiler,
-enrichment joins, output selector/router, metrics, manifest,
+enrichment joins, output selector/router, manifest,
 dedup/similarity operators."""

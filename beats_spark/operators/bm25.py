@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 #: Okapi defaults (the Lucene/ES values)
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -74,7 +76,8 @@ def bm25_topk(
     lexical and embedding retrieval unify under one schema."""
     spark = df.sparkSession
     all_terms = sorted({t for ts in queries.values() for t in ts})
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(int(q), t) for q, ts in sorted(queries.items()) for t in ts],
         "q_id long, term string",
     )

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from ..plans.materialize import materialize as _materialize
+from ..session import local_frame
 
 from ..functions.textstats import (
     FP_MOD,
@@ -1535,14 +1536,11 @@ def bloom_words_df(spark, bitmap: list[int]) -> DataFrame:
     1-billion-key example) ≤ 128M rows: past broadcast range the same
     join degrades gracefully to a shuffled hash join, still never
     joining the HISTORY itself."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(
+    return local_frame(
+        spark,
         [(w, b) for w, b in enumerate(bitmap) if b != 0],
-        columns=["w", "bits"],
-        dtype="int64",
+        "w long, bits long",
     )
-    return spark.createDataFrame(pdf, schema="w long, bits long")
 
 
 def bloom_flag_join(

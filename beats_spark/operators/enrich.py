@@ -16,6 +16,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .actions import Processor, guard_added_columns
 
 
@@ -27,6 +28,13 @@ class BroadcastLookup(Processor):
     libbeat/processors/add_process_metadata/add_process_metadata.go:107
     — pid → cached process info). A missing dim row leaves the new
     columns NULL, like a cache miss leaves the event unenriched.
+
+    The join never shuffles the fact side, but each action that plans
+    it (every run, every micro-batch) builds and ships the broadcast.
+    Build ``dim`` with ``session.local_frame`` or from a table scan: a
+    list-backed ``createDataFrame`` dim makes that broadcast a
+    Python-worker job (≈0.3–0.55 s on a 4-vCPU VM); a LocalRelation
+    is collected on the driver in milliseconds.
     """
 
     dim: DataFrame
@@ -94,9 +102,10 @@ class DnsEnrich(Processor):
                 " resolve via a precomputed dim table instead"
             )
         addrs = resolver(names)
-        dim = spark.createDataFrame(
-            list(zip(names, addrs)) or [(None, None)],
-            f"{self.field} string, {self.target} string",
+        dim = local_frame(
+            spark,
+            zip(names, addrs),
+            f"`{self.field}` string, `{self.target}` string",
         )
         out = df.join(F.broadcast(dim), on=self.field, how="left")
         if self.action == "replace":
@@ -449,8 +458,8 @@ def dim_user_agents(spark) -> DataFrame:
     """Demo UA-family dimension (FIXTURES.md §2 shape): exact UA
     string → browser/os/device, the worked example the user_agent
     ingest step joins against."""
-    return spark.createDataFrame(
-        UA_DIM_ROWS, "ua string, name string, os string, device string"
+    return local_frame(
+        spark, UA_DIM_ROWS, "ua string, name string, os string, device string"
     )
 
 
@@ -467,30 +476,31 @@ GEO_DIM_ROWS = [
 def dim_geoip(spark) -> DataFrame:
     """Demo CIDR→geo dimension: overlapping prefixes (8.8.8.0/24
     inside 8.0.0.0/8) so longest-prefix selection is observable."""
-    return spark.createDataFrame(
-        GEO_DIM_ROWS, "cidr string, country string, city string"
-    )
+    return local_frame(spark, GEO_DIM_ROWS, "cidr string, country string, city string")
+
+
+#: built-in role and tool dims (FIXTURES.md §2): DDL + rows
+ROLE_DIM_SCHEMA = "role string, role_group string, priority int"
+ROLE_DIM_ROWS = [
+    ("user", "human", 1),
+    ("assistant", "agent", 2),
+    ("system", "control", 3),
+    ("tool", "agent", 2),
+]
+TOOL_DIM_SCHEMA = "tool string, tool_family string, risk_level string, owner string"
+TOOL_DIM_ROWS = [
+    ("bash", "shell", "high", "infra"),
+    ("search", "retrieval", "low", "platform"),
+    ("edit", "fs", "medium", "infra"),
+    ("none", "none", "none", "none"),
+]
 
 
 def dim_roles(spark) -> DataFrame:
     """Built-in role metadata dim (FIXTURES.md §2)."""
-    rows = [
-        ("user", "human", 1),
-        ("assistant", "agent", 2),
-        ("system", "control", 3),
-        ("tool", "agent", 2),
-    ]
-    return spark.createDataFrame(rows, "role string, role_group string, priority int")
+    return local_frame(spark, ROLE_DIM_ROWS, ROLE_DIM_SCHEMA)
 
 
 def dim_tools(spark) -> DataFrame:
     """Built-in tool metadata dim (FIXTURES.md §2)."""
-    rows = [
-        ("bash", "shell", "high", "infra"),
-        ("search", "retrieval", "low", "platform"),
-        ("edit", "fs", "medium", "infra"),
-        ("none", "none", "none", "none"),
-    ]
-    return spark.createDataFrame(
-        rows, "tool string, tool_family string, risk_level string, owner string"
-    )
+    return local_frame(spark, TOOL_DIM_ROWS, TOOL_DIM_SCHEMA)

@@ -33,6 +33,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .actions import Processor, guard_added_columns
 
 #: container.id is a 64-char hex string (matchers.go:74)
@@ -69,7 +70,7 @@ def _resolve_dim(
     if schema is not None:
         ddl, fields = schema
         data = [tuple(r.get(f) for f in fields) for r in rows]
-        return spark.createDataFrame(data, ddl)
+        return local_frame(spark, data, ddl)
     # uniform string metadata (k8s): key column + whatever flat dotted
     # metadata names the rows carry
     cols = list(rows[0].keys())
@@ -77,7 +78,7 @@ def _resolve_dim(
         if k not in cols:
             raise ValueError(f"metadata dim rows need a {k!r} field")
     data = [tuple(str(r[c]) if r.get(c) is not None else None for c in cols) for r in rows]
-    return spark.createDataFrame(data, ", ".join(f"`{c}` string" for c in cols))
+    return local_frame(spark, data, ", ".join(f"`{c}` string" for c in cols))
 
 
 def _first_present(df: DataFrame, fields: Sequence[str]) -> Column:

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 _MICRO = 1_000_000
 
 #: metric labels, emitted in the `metric` column
@@ -79,11 +81,11 @@ def eval_topk(truth: DataFrame, cand: DataFrame, k: int) -> DataFrame:
     spark = truth.sparkSession
     disc = _discounts_micro(k)
     ideal = _ideal_micro(k)
-    disc_df = spark.createDataFrame(
-        [(r + 1, d) for r, d in enumerate(disc)], "rank int, disc long"
+    disc_df = local_frame(
+        spark, [(r + 1, d) for r, d in enumerate(disc)], "rank int, disc long"
     )
-    ideal_df = spark.createDataFrame(
-        [(n + 1, v) for n, v in enumerate(ideal)], "n int, ideal long"
+    ideal_df = local_frame(
+        spark, [(n + 1, v) for n, v in enumerate(ideal)], "n int, ideal long"
     )
 
     t = truth.where(F.col("rank") <= k).select(

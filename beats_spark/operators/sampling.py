@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textstats import token_count_ws, word_code
+from ..session import local_frame
 
 SAMPLE_MOD = 1_000_000
 
@@ -580,7 +581,8 @@ def histogram_pack(
     ]
     slots = _nfd_fold(hist, token_budget)
     spark = df.sparkSession
-    slot_df = spark.createDataFrame(
+    slot_df = local_frame(
+        spark,
         [
             (
                 s["len"],

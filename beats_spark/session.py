@@ -5,13 +5,18 @@ configs are what we would pass to ``spark-submit`` on a real cluster —
 AQE (incl. skew-join splitting), Arrow for pandas UDFs, UTC session
 time zone (required for DuckDB-oracle comparison), and shuffle
 partitions sized to parallelism instead of the 200 default.
+
+``local_frame`` is the one way program code turns driver-side rows
+(dims, manifest and metrics rows, query sets) into a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -54,3 +59,38 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: str | StructType
+) -> DataFrame:
+    """Driver-side rows as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>)`` is ``parallelize`` over a
+    pickled PythonRDD (``Scan ExistingRDD``): every action that reads
+    it — each dim broadcast, in every micro-batch, and each commit
+    write — runs tasks that wait on Python workers (≈0.3–0.55 s per
+    job on a 4-vCPU VM). An Arrow table crosses to the JVM once, at
+    build time, and Spark 4.1 plans it as a ``LocalRelation`` whether
+    or not ``spark.sql.execution.arrow.pyspark.enabled`` is set.
+
+    ``schema`` is a DDL string or a ``StructType``; each row is a tuple
+    in schema order (dicts for map columns, tuples for struct ones).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    width = len(arrow_schema)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"local_frame: every row needs {width} values")
+    columns = list(zip(*rows)) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

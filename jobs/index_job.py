@@ -88,6 +88,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from beats_spark.operators.pq import ivf_pq_topk, pq_encode, pq_train
     from beats_spark.operators.similarity import kmeans_ivf
+    from beats_spark.session import local_frame
 
     t0 = time.monotonic()
     embs = spark.read.parquet(args.embeddings)
@@ -113,8 +114,8 @@ def main(argv: list[str] | None = None) -> int:
         for j, book in enumerate(books)
         for cell, cvec in book
     ]
-    spark.createDataFrame(
-        meta_rows, "book int, cell int, centroid array<double>"
+    local_frame(
+        spark, meta_rows, "book int, cell int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{args.output}/meta")
 
     n_vecs = spark.read.parquet(f"{args.output}/index").count()

@@ -6,17 +6,22 @@ column names, and an order-insensitive value hash (rows rendered to
 canonical strings, sorted, md5). Usage:
 
     python tools/check_correctness.py [sf_dir] [query ...]
+
+The session is a default-conf one (master and memory only), not
+``build_session``: whoever calls ``queries()`` brings their own
+session, so a row that leans on a ``build_session`` conf fails here.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -53,9 +58,14 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry_mod
-    from beats_spark.session import build_session
+    from pyspark.sql import SparkSession
 
-    spark = build_session("correctness-check", cores=8)
+    spark = (
+        SparkSession.builder.master("local[*]")
+        .appName("correctness-check")
+        .config("spark.driver.memory", os.environ.get("BEATS_SPARK_DRIVER_MEM", "8g"))
+        .getOrCreate()
+    )
 
     con = duckdb.connect()
     for t in TABLES:
