@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beats_spark.functions.conditions import compile_condition
@@ -34,32 +34,23 @@ from beats_spark.operators.actions import (
 )
 from beats_spark.operators.enrich import BroadcastLookup, dim_roles, dim_tools
 from beats_spark.operators.selector import Rule, compile_selector
+from beats_spark.plans.headline import PARSE, ROUTES, headline_pipeline
 from beats_spark.session import local_frame
 from beats_spark.synth import TRANSCRIPTS_FROM_EVENTS_SQL, transcripts_from_events
 
 # ---------------------------------------------------------------------------
 # shared config
 
-#: dissect tokenizer for the derived-transcript logfmt text — lowers to
-#: one JVM-side anchored regex (no Python in the hot path).
-LOGFMT_TOKENIZER = 'level=%{level} ts=%{ts_epoch} caller=%{caller} msg="%{message}"'
-
-#: routing rules (outil.Selector semantics: ordered, first non-empty wins)
-ROUTES = [
-    Rule(value="errors", when={"equals": {"level": "error"}}),
-    Rule(value="tool-%{[tool]}", when={"not": {"equals": {"tool": "none"}}}),
-    Rule(value="conv-%{[role]}"),
-]
-
-#: the same routes as ANSI SQL (kept in lock-step with ROUTES)
+#: the headline ROUTES (beats_spark.plans.headline) as ANSI SQL, kept
+#: in lock-step
 ROUTES_SQL = """
 CASE WHEN level = 'error' THEN 'errors'
      WHEN tool <> 'none' THEN 'tool-' || tool
      ELSE 'conv-' || role END
 """
 
-#: the dissect parse as ANSI SQL (lock-step with LOGFMT_TOKENIZER over
-#: the derived text, which is always well-formed logfmt)
+#: the headline PARSE as ANSI SQL over the derived text, which is
+#: always well-formed logfmt; its ``timestamp`` key is named ts_epoch
 PARSE_SQL = """
   regexp_extract(text, '^level=(.*?) ts=', 1) AS level,
   regexp_extract(text, ' ts=(.*?) caller=', 1) AS ts_epoch,
@@ -91,9 +82,7 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return apply_chain(
-        _transcripts(spark, sf_dir), [Dissect(tokenizer=LOGFMT_TOKENIZER)]
-    )
+    return apply_chain(_transcripts(spark, sf_dir), [PARSE])
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,7 +102,8 @@ def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dissect_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dissect processor, native regex tier (§2.2)."""
     return _parsed(spark, sf_dir).select(
-        "conv_id", "turn_idx", "level", "ts_epoch", "caller", "message"
+        "conv_id", "turn_idx", "level",
+        F.col("timestamp").alias("ts_epoch"), "caller", "message",
     )
 
 
@@ -136,7 +126,7 @@ def q_conditions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (conditions/network.go). Shared schema (variant, key, n_rows,
     extra) so the union hashes cleanly."""
     drop_chain = [
-        Dissect(tokenizer=LOGFMT_TOKENIZER),
+        PARSE,
         When(
             condition={
                 "or": [
@@ -341,7 +331,7 @@ def q_metrics_tallies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _transcripts(spark, sf_dir)
     chain = [
-        Dissect(tokenizer=LOGFMT_TOKENIZER),
+        PARSE,
         When(condition={"equals": {"level": "warn"}}, then=DropEvent()),
     ]
     routed = apply_chain(t, chain).withColumn("sink", compile_selector(ROUTES))
@@ -986,17 +976,11 @@ def q_dissect_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full parse → enrich → route pipeline on sf0.001,
-    returning per-sink tallies (the reference's per-output observer)."""
+    """Flagship: the headline parse → enrich → route pipeline on
+    sf0.001, returning per-sink tallies (the reference's per-output
+    observer)."""
     sf_dir = "/root/testdata/sf0.001"
-    chain = [
-        Dissect(tokenizer=LOGFMT_TOKENIZER),
-        BroadcastLookup(dim=dim_roles(spark), on=["role"]),
-        BroadcastLookup(dim=dim_tools(spark), on=["tool"]),
-    ]
-    routed = apply_chain(_transcripts(spark, sf_dir), chain).withColumn(
-        "sink", compile_selector(ROUTES)
-    )
+    routed = headline_pipeline(spark).transform(_transcripts(spark, sf_dir))
     return routed.groupBy("sink", "role_group", "tool_family").agg(
         F.count("*").alias("events_published"),
         F.countDistinct("conv_id").alias("n_convs"),

@@ -364,26 +364,6 @@ def dissect_single_pass(df, source: str, tokenizer: str):
     return df, out, okc, ["_d_ok", "_d_arr"]
 
 
-def dissect_struct(col, tokenizer: str, flags_col=None):
-    """Native tier packaged as (struct_column, flags_column).
-
-    struct has one string field per output key (NULL on parse failure);
-    flags gains FLAG_PARSING_ERROR on failure, mirroring
-    ``processor.go:64-75``.
-    """
-    from pyspark.sql import functions as F
-
-    cols, ok = dissect_columns(col, tokenizer)
-    struct = F.struct(*[c.alias(k) for k, c in cols.items()])
-    err = F.when(
-        ~ok,
-        F.array(F.lit(FLAG_PARSING_ERROR)),
-    ).otherwise(F.array().cast("array<string>"))
-    if flags_col is not None:
-        err = F.array_union(F.coalesce(flags_col, F.array().cast("array<string>")), err)
-    return struct, err
-
-
 def dissect_pandas_udf(tokenizer: str):
     """Arrow-batched fallback for modifier-heavy tokenizers.
 

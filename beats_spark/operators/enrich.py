@@ -197,18 +197,8 @@ class AsofLookup(Processor):
         return out.drop("_hist", "_asof")
 
 
-def ip_to_long(c) -> Column:
-    """Dotted-quad IPv4 → long, pure column arithmetic (same recipe on
-    the DuckDB side — see ``IP_TO_LONG_SQL``)."""
-    parts = F.split(c, r"\.")
-    return (
-        parts[0].cast("long") * 16777216
-        + parts[1].cast("long") * 65536
-        + parts[2].cast("long") * 256
-        + parts[3].cast("long")
-    )
-
-
+#: DuckDB twin of ``functions.conditions._ipv4_to_long`` (dotted-quad
+#: IPv4 → long) for the oracle's GeoIP lookup; only valid IPv4 reaches it
 IP_TO_LONG_SQL = (
     "(split_part({c}, '.', 1)::BIGINT * 16777216"
     " + split_part({c}, '.', 2)::BIGINT * 65536"

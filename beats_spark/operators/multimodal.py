@@ -94,18 +94,6 @@ def extract_features(
     return df.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def multimodal_features_sql(table: str, text_col: str = "text") -> str:
-    """Oracle for the fake-decoder path: the payload is md5(text)
-    bytes, so n_bytes = 16 and header_hex = first 8 hex chars."""
-    return f"""
-SELECT doc_id,
-       'fake' AS modality,
-       CAST(16 AS BIGINT) AS n_bytes,
-       substr(md5({text_col}), 1, 8) AS header_hex
-FROM {table}
-"""
-
-
 RESIZE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -213,38 +201,6 @@ def frame_sample(
             )
 
     return df.mapInPandas(run, FRAME_SCHEMA)
-
-
-def resize_payload_sql(
-    table: str, out_bytes: int, text_col: str = "text"
-) -> str:
-    """Oracle for resize over the fake payload (md5 bytes, n=16):
-    byte i of the resized payload is hex pair floor(i*16/out)+1 of
-    the md5 hex string — unrolled into a concat of substrs."""
-    pairs = ", ".join(
-        f"substr(h, {2 * ((i * 16) // out_bytes) + 1}, 2)"
-        for i in range(out_bytes)
-    )
-    return f"""
-SELECT doc_id, 'fake' AS modality, CAST(16 AS BIGINT) AS n_bytes_in,
-       concat({pairs}) AS payload_hex
-FROM (SELECT doc_id, md5({text_col}) AS h FROM {table})
-"""
-
-
-def frame_sample_sql(
-    table: str, frame_bytes: int, stride: int, text_col: str = "text"
-) -> str:
-    """Oracle for frame-sample over the 16-byte fake payload: frames
-    are fixed hex slices, sampled indices known statically."""
-    n_frames = (16 + frame_bytes - 1) // frame_bytes
-    selects = [
-        f"""SELECT doc_id, 'fake' AS modality, CAST({fi} AS BIGINT) AS frame_idx,
-       substr(md5({text_col}), {2 * fi * frame_bytes + 1}, {2 * frame_bytes}) AS frame_hex
-FROM {table}"""
-        for fi in range(0, n_frames, stride)
-    ]
-    return "\nUNION ALL\n".join(selects)
 
 
 # ---------------------------------------------------------------------------

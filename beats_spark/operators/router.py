@@ -131,7 +131,3 @@ def write_fanout(
     sort_for_fanout(routed, salt=salt).write.mode(mode).option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("sink", PART_COL).parquet(root)
-
-
-def read_sink(spark, root: str, sink: str) -> DataFrame:
-    return spark.read.parquet(root).filter(F.col("sink") == sink)

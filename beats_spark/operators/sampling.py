@@ -16,32 +16,13 @@ operators/chunking.py)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textstats import token_count_ws, word_code
 from ..session import local_frame
 
 SAMPLE_MOD = 1_000_000
-
-
-def _threshold(rate: float) -> int:
-    """floor(rate·1e6) — floor EXPLICITLY on every engine. Python
-    ``int()`` truncates, DuckDB ``CAST(... AS BIGINT)`` rounds
-    half-to-even, Spark long-cast truncates: a rate whose rate·1e6 is
-    not exactly representable (0.29 → 289999.99…) would otherwise give
-    an off-by-one keep boundary between engines."""
-    import math
-
-    return math.floor(rate * SAMPLE_MOD)
-
-
-def sample_hash(key: Column, rate: float) -> Column:
-    """Deterministic keep-decision: md5-derived code of the key mod
-    1e6 < floor(rate·1e6). Same row → same verdict on any engine."""
-    return F.pmod(word_code(key.cast("string")), F.lit(SAMPLE_MOD)) < _threshold(
-        rate
-    )
 
 
 def stratified_sample(
@@ -67,8 +48,9 @@ def stratified_sample(
         if rate is not None
         else F.lit(float(default_rate))
     )
-    # floor() before the long-cast: plain cast truncates in Spark but
-    # DuckDB's BIGINT cast rounds — see _threshold
+    # floor() before the long-cast on every engine: Spark's cast
+    # truncates but DuckDB's BIGINT cast rounds, so a rate whose
+    # rate·1e6 is inexact (0.29 → 289999.99…) would shift the boundary
     keep = F.pmod(
         word_code(F.col(key_col).cast("string")), F.lit(SAMPLE_MOD)
     ) < F.floor(rate_col * SAMPLE_MOD).cast("long")

@@ -18,7 +18,10 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: ``SPARK_GRAFT_CPUS``, else the cores this process may run on
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 
 def build_session(

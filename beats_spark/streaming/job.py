@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.router import PART_COL, with_partition_id
+from ..operators.router import with_partition_id, write_fanout
 from ..plans.pipeline import Pipeline
 from ..schema import TRANSCRIPT_SCHEMA
 
@@ -52,13 +52,7 @@ def run_stream(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         routed = pipeline.transform(with_partition_id(batch_df, pipeline.n_buckets))
-        (
-            routed.repartition(F.col("sink"), F.col(PART_COL))
-            .sortWithinPartitions("sink", PART_COL, "conv_id", "turn_idx")
-            .write.mode("append")
-            .partitionBy("sink", PART_COL)
-            .parquet(f"{output_root}/data")
-        )
+        write_fanout(routed, f"{output_root}/data", mode="append")
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -88,26 +88,9 @@ def main(argv: list[str] | None = None) -> int:
 
 
 def _default_pipeline(spark, buckets: int):
-    from beats_spark.operators.actions import Dissect
-    from beats_spark.operators.enrich import BroadcastLookup, dim_roles, dim_tools
-    from beats_spark.operators.selector import Rule
-    from beats_spark.plans.pipeline import Pipeline
-    from beats_spark.synth import TOK_LOGFMT
+    from beats_spark.plans.headline import headline_pipeline
 
-    return Pipeline(
-        processors=[
-            Dissect(tokenizer=TOK_LOGFMT, field="text"),
-            BroadcastLookup(dim=dim_roles(spark), on=["role"]),
-            BroadcastLookup(dim=dim_tools(spark), on=["tool"]),
-        ],
-        routes=[
-            Rule(value="errors", when={"equals": {"level": "error"}}),
-            Rule(value="tool-%{[tool]}", when={"not": {"equals": {"tool": "none"}}}),
-            Rule(value="conv-%{[role]}"),
-        ],
-        default_sink="default",
-        n_buckets=buckets,
-    )
+    return headline_pipeline(spark, buckets)
 
 
 if __name__ == "__main__":
