@@ -100,7 +100,7 @@ def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dissect_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dissect processor, native regex tier (§2.2)."""
+    """dissect processor, modifier-free tokenizer (§2.2)."""
     return _parsed(spark, sf_dir).select(
         "conv_id", "turn_idx", "level",
         F.col("timestamp").alias("ts_epoch"), "caller", "message",
@@ -955,9 +955,9 @@ def q_selector_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dissect_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dissect append-modifier tokenizer (field.go:175-189) through the
-    Arrow pandas-UDF tier: ordinals reorder the captures and the join
-    uses the field's preceding delimiter."""
+    """dissect append-modifier tokenizer (field.go:175-189), on the same
+    JVM kernel as every tokenizer: ordinals reorder the captures and
+    the join uses the field's preceding delimiter."""
     t = _transcripts(spark, sf_dir).withColumn(
         "pair_src", F.concat_ws(" ", "role", "tool")
     )

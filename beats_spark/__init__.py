@@ -9,8 +9,8 @@ tables of multi-turn conversation transcripts.
 Design principles (see SURVEY.md):
 - DataFrame/SQL first; Catalyst does pushdown/pruning/reordering.
 - Vectorized pandas/Arrow UDFs only where built-ins can't express the
-  semantics (full dissect modifier set); the common path lowers to
-  JVM-side ``regexp_extract`` — no Python in the hot loop.
+  semantics; dissect, modifiers included, lowers to JVM-side
+  ``position``/``substr`` expressions — no Python in the hot loop.
 - Fan-out writes are a single ``partitionBy("sink")`` pass, not N
   filtered scans.
 - Checkpoint/resume via a manifest table (registrar semantics).

@@ -33,22 +33,16 @@ Matching algorithm (reference ``dissect.go:71-126``):
    fields are produced.
 
 Execution tiers:
-- :func:`Dissector.dissect` — pure-Python kernel. Used as the test
-  oracle and as the body of the pandas-UDF slow path.
-- :func:`Dissector.to_regex` — lowers eligible tokenizers to a single
-  anchored regex with ATOMIC groups ``(?>...)``, which reproduces the
-  no-backtracking first-occurrence commit exactly. Valid in both
-  Python ``re`` (3.11+) and Java ``java.util.regex`` — so the hot path
-  runs entirely JVM-side via ``regexp_extract`` (no Python).
-- :func:`dissect_columns` — Spark Column expressions (native tier).
-- :func:`dissect_pandas_udf` — Arrow-batched fallback for tokenizers
-  using append/indirect/pointer modifiers.
+- :meth:`Dissector.dissect` — pure-Python kernel, the test oracle.
+- :func:`dissect_frame` — the same algorithm as built-in Spark Column
+  expressions (``position``/``substr`` offsets, a fold for the
+  modifiers), for every tokenizer; no regex and no Python worker.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 from functools import lru_cache
 
 # ---------------------------------------------------------------------------
@@ -145,7 +139,7 @@ class Dissector:
                     f"indirect key %{{&{name}}} has no matching source reference"
                 )
 
-    # -- pure-Python kernel (oracle + pandas fallback body) -----------------
+    # -- pure-Python kernel (test oracle) -----------------------------------
 
     def extract(self, s: str) -> list[tuple[int, int]] | None:
         """Return per-key (start, end) spans, or None on parse failure."""
@@ -215,8 +209,6 @@ class Dissector:
                 del m[k.name]
         return m
 
-    # -- regex lowering (JVM-native tier) ------------------------------------
-
     @property
     def output_keys(self) -> list[str]:
         """Keys the dissect emits (normal + append targets), first-seen order."""
@@ -226,62 +218,6 @@ class Dissector:
                 seen.append(k.name)
         return seen
 
-    def lowerable(self) -> bool:
-        """True if semantics are expressible as one atomic-group regex:
-        only normal/skip keys, and greedy only before 1-char delimiters
-        (multi-char greedy uses overlap-by-one stepping regex can't say)."""
-        for k in self.keys:
-            if k.kind in (NAMED_SKIP, POINTER, APPEND, INDIRECT):
-                return False
-            if k.greedy and len(self.delims[k.idx + 1]) != 1:
-                return False
-        return True
-
-    def to_regex(self) -> tuple[str, list[str | None]]:
-        """Lower to an anchored atomic-group regex.
-
-        Returns (pattern, group_names) where group_names[i] is the key
-        captured by group i+1 (None for skip groups). The pattern is
-        valid in both Python ``re`` and Java ``java.util.regex`` —
-        atomic groups reproduce the first-occurrence commit without
-        backtracking, so match/fail behavior is byte-identical to the
-        kernel.
-        """
-        if not self.lowerable():
-            raise DissectError(f"tokenizer not lowerable to regex: {self.raw!r}")
-        parts: list[str] = ["^", _rx_quote(self.delims[0])]
-        names: list[str | None] = []
-        n = len(self.keys)
-        for i, k in enumerate(self.keys):
-            nxt = self.delims[i + 1]
-            names.append(k.name if k.kind == NORMAL else None)
-            if nxt == "":
-                if i == n - 1:
-                    # last key, no trailing delimiter: rest of string
-                    parts.append("((?s:.*))")
-                else:
-                    # zero-width mid delimiter: key always captures ""
-                    parts.append("()")
-            else:
-                q = _rx_quote(nxt)
-                if self.greedy_at[i]:
-                    # value up to first occurrence, then consume the run
-                    parts.append(f"(?>((?s:.*?)){q}+)")
-                else:
-                    parts.append(f"(?>((?s:.*?)){q})")
-        # trailing delimiter already consumed inside the last atomic group;
-        # remaining content after it is ignored (no $ anchor).
-        return "".join(parts), names
-
-
-def _rx_quote(s: str) -> str:
-    """Quote a literal for a regex valid in BOTH Python and Java.
-
-    Escapes every non-alphanumeric char with a backslash — both engines
-    treat ``\\<punct>`` as the literal char; alnums are never special.
-    """
-    return "".join(c if c.isalnum() else "\\" + c for c in s)
-
 
 @lru_cache(maxsize=256)
 def compile_tokenizer(tokenizer: str) -> Dissector:
@@ -289,101 +225,88 @@ def compile_tokenizer(tokenizer: str) -> Dissector:
 
 
 # ---------------------------------------------------------------------------
-# Spark bindings
+# Spark binding
 
 
-def dissect_columns(col, tokenizer: str):
-    """Native tier: dict of key -> Column plus an ``_ok`` match Column.
+def dissect_frame(df, text, tokenizer: str):
+    """The Spark kernel: :meth:`Dissector.dissect` as built-in Column
+    expressions, for every tokenizer — no regex, no Python worker.
 
-    Uses one ``rlike`` for match detection and ``regexp_extract`` per
-    output key — all JVM-side, whole-stage-codegen friendly, no Python.
-    Non-matching rows yield NULL for every key (the reference emits no
-    fields and tags the row instead).
+    Offsets follow :meth:`Dissector.extract` (1-based): each value ends
+    at ``position(delim, text, start)``. A greedy key before a
+    delimiter made of one repeated char skips the whole run of that
+    char, which is what the reference's step-by-one loop does; before
+    any other delimiter that loop is a no-op. The match gate is
+    ``text <> ''``, ``startswith(delims[0])`` and every delimiter found;
+    a NULL source gives a NULL gate (no failure flag, NULL fields).
+
+    One projection materialises the gate and the (start, end) offset
+    array, NULL on a failed match. Each offset is built once from the
+    one before it, and values are ``substr`` reads of array elements,
+    so the expression stays linear in the key count and a key nobody
+    reads costs no ``substr``. Values then resolve like
+    :meth:`Dissector.dissect`, folding ``apply_order`` over the static
+    key names with NULL for "absent".
+
+    Returns ``(df2, cols, ok, tmp_cols)``: ``cols`` maps each of
+    :attr:`Dissector.output_keys` to a Column over ``df2``; drop
+    ``tmp_cols`` once ``cols`` and ``ok`` are assigned.
     """
     from pyspark.sql import functions as F
 
     d = compile_tokenizer(tokenizer)
-    pattern, names = d.to_regex()
-    ok = col.rlike(pattern) & (col != F.lit(""))
-    out: dict[str, object] = {}
-    for gi, name in enumerate(names, start=1):
-        if name is None:
-            continue
-        out[name] = F.when(ok, F.regexp_extract(col, pattern, gi))
-    return out, ok
-
-
-#: 2-char field separator for single-pass extraction (RS + ETB; a
-#: colliding row falls back per-row to regexp_extract)
-_SEP = "\x1e\x17"
-
-
-def dissect_single_pass(df, source: str, tokenizer: str):
-    """Hot-path native tier: ~2 regex runs per row TOTAL instead of
-    one per key (``dissect_columns`` costs k+1 ``regexp_extract``
-    executions for a k-key tokenizer — the headline logfmt tokenizer
-    has 7). One ``rlike`` for the match flag; one ``regexp_replace``
-    rewriting the line to a separator-joined group list, split once
-    into a MATERIALIZED array (a Column reused k× is recomputed k× —
-    CLAUDE.md gotcha) that key columns read with ``F.get``. Rows whose
-    field text contains the separator (size mismatch) fall back lazily
-    to per-key extraction.
-
-    Returns ``(df2, cols, ok, tmp_cols)`` — assign ``cols`` on the
-    returned frame, then drop ``tmp_cols``.
-    """
-    from pyspark.sql import functions as F
-
-    d = compile_tokenizer(tokenizer)
-    pattern, names = d.to_regex()
-    col = F.col("`" + source + "`")
-    ok = col.rlike(pattern) & (col != F.lit(""))
-    named = [(gi, nm) for gi, nm in enumerate(names, start=1) if nm]
-    if not named:
-        return df.withColumn("_d_ok", ok), {}, F.col("_d_ok"), ["_d_ok"]
-    # the dissect regex deliberately carries no trailing $ (content
-    # after the last delimiter is ignored) — consume the tail so the
-    # replacement covers the WHOLE string
-    full = pattern + "(?s:.*)$"
-    repl = _SEP.join(f"${gi}" for gi, _ in named)
+    n = len(d.keys)
+    start = F.lit(len(d.delims[0]) + 1)
+    ends, offsets = [], []
+    for i, k in enumerate(d.keys):
+        nxt = d.delims[i + 1]
+        if nxt == "":
+            # zero-width mid delimiter: ""; last key: rest of the line
+            end = start if i < n - 1 else F.length(text) + 1
+        else:
+            end = F.position(F.lit(nxt), text, start)
+            ends.append(end)
+        offsets += [start, end]
+        if k.greedy and len(set(nxt)) == 1:
+            start = F.length(text) + 1 - F.length(F.ltrim(F.substr(text, end), F.lit(nxt[0])))
+        else:
+            start = end + len(nxt)
+    # least() leads the gate: it evaluates every offset unconditionally,
+    # so the offset array below reuses them (And/CaseWhen branches are
+    # lazy, which would stop subexpression elimination)
+    ok = text != F.lit("")
+    if ends:
+        ok = (F.least(*ends) > 0 if len(ends) > 1 else ends[0] > 0) & ok
+    if d.delims[0]:
+        ok = ok & text.startswith(d.delims[0])
+    # position() reads a NULL start as 0, so a NULL source fails the
+    # gate like a non-matching line; OR-ing in NULL for it keeps its ok
+    # NULL (no failure flag) and the gate unconditional
+    null_src = F.when(text.isNotNull(), F.lit(False))
     df = df.withColumns(
-        {
-            "_d_ok": ok,
-            "_d_arr": F.when(
-                ok, F.split(F.regexp_replace(col, full, repl), _SEP, -1)
-            ),
-        }
+        {"_dissect_ok": ok | null_src, "_dissect_o": F.when(ok, F.array(*offsets))}
     )
-    okc, arr = F.col("_d_ok"), F.col("_d_arr")
-    k = len(named)
-    out: dict[str, object] = {}
-    for j, (gi, name) in enumerate(named):
-        fast = F.when(F.size(arr) == k, F.get(arr, j))
-        slow = F.when(okc, F.regexp_extract(col, pattern, gi))
-        out[name] = F.coalesce(fast, slow)
-    return df, out, okc, ["_d_ok", "_d_arr"]
+    o = F.col("_dissect_o")
 
+    def value(i: int):
+        start = F.get(o, 2 * i)
+        return F.substr(text, start, F.get(o, 2 * i + 1) - start)
 
-def dissect_pandas_udf(tokenizer: str):
-    """Arrow-batched fallback for modifier-heavy tokenizers.
-
-    Returns a pandas UDF producing ``map<string,string>`` (NULL on
-    parse failure). The Dissector compiles once per executor (closure),
-    not per batch; the loop is per-row *inside* an Arrow batch, which is
-    the sanctioned slow path for semantics regex can't express
-    (append-with-ordinal joins, indirection).
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    d = compile_tokenizer(tokenizer)
-
-    def _dissect(s):
-        kernel = d.dissect
-        return s.map(lambda x: kernel(x) if isinstance(x, str) else None)
-
-    # real-object annotations: the module's postponed (string) hints
-    # can't be resolved by pyspark because pandas is imported locally
-    _dissect.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_dissect, T.MapType(T.StringType(), T.StringType()))
+    absent = F.lit(None).cast("string")
+    state = {k.name: absent for k in d.keys if k.kind != SKIP}
+    for k in d.apply_order:
+        v = value(k.idx)
+        if k.kind in (NORMAL, NAMED_SKIP, POINTER):
+            state[k.name] = v
+        elif k.kind == APPEND:
+            join = F.lit(k.prev_delim or " ")
+            state[k.name] = F.coalesce(F.concat(state[k.name], join, v), v)
+        elif k.kind == INDIRECT:
+            ref = state[k.name]
+            for name in state:
+                state[name] = F.when(ref == F.lit(name), v).otherwise(state[name])
+    dropped = {k.name for k in d.keys if not k.saveable}
+    cols = {
+        name: absent if name in dropped else state[name] for name in d.output_keys
+    }
+    return df, cols, F.col("_dissect_ok"), ["_dissect_ok", "_dissect_o"]

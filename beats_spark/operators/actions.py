@@ -24,12 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.conditions import compile_condition
-from ..functions.dissect import (
-    FLAG_PARSING_ERROR,
-    compile_tokenizer,
-    dissect_columns,
-    dissect_pandas_udf,
-)
+from ..functions.dissect import FLAG_PARSING_ERROR, compile_tokenizer, dissect_frame
 from ..schema import FLAGS_FIELD
 
 
@@ -676,13 +671,13 @@ class ExtractField(Processor):
 class Dissect(Processor):
     """dissect (libbeat/processors/dissect/processor.go:53-83).
 
-    Modifier-free tokenizers lower to JVM-side regexp_extract columns
-    (one rlike + one extract per key); modifier tokenizers fall back to
-    the Arrow pandas-UDF kernel returning map<string,string>. Parse
-    failure tags the row with ``dissect_parsing_error`` in
-    ``log_flags`` and produces NULL fields; existing columns are never
-    overwritten (processor.go:85-108 refuses) — we fail at compile time
-    instead.
+    Every tokenizer, modifiers included, runs on one JVM-side kernel
+    (:func:`~beats_spark.functions.dissect.dissect_frame`: delimiter
+    offsets, then a fold for append/indirect). Parse failure tags the
+    row with ``dissect_parsing_error`` in ``log_flags`` and produces
+    NULL fields; a NULL source gets NULL fields and no flag. Existing
+    columns are never overwritten (processor.go:85-108 refuses) — we
+    fail at compile time instead.
     """
 
     tokenizer: str
@@ -709,31 +704,15 @@ class Dissect(Processor):
                 raise ValueError(
                     f"dissect would overwrite existing columns: {clash}"
                 )
-        src = _fcol(df, self.field)
-        tmp = None
-        tmp_cols: list[str] = []
-        if d.lowerable():
-            from ..functions.dissect import dissect_single_pass
-
-            # single-pass: ~2 regex runs per row instead of one per
-            # key — this is the headline parse path
-            df, cols, ok, tmp_cols = dissect_single_pass(
-                df, self.field, self.tokenizer
-            )
-            df = df.withColumns(
-                {
-                    self._out(k): self._guarded(df, guard, self._out(k), c)
-                    for k, c in cols.items()
-                }
-            )
-        else:
-            udf = dissect_pandas_udf(self.tokenizer)
-            tmp = "_dissect_m"
-            df = df.withColumn(tmp, udf(src))
-            ok = F.col(tmp).isNotNull()
-            for k in d.output_keys:
-                c = F.element_at(F.col(tmp), k)
-                df = df.withColumn(self._out(k), self._guarded(df, guard, self._out(k), c))
+        df, cols, ok, tmp_cols = dissect_frame(
+            df, _fcol(df, self.field), self.tokenizer
+        )
+        df = df.withColumns(
+            {
+                self._out(k): self._guarded(df, guard, self._out(k), c)
+                for k, c in cols.items()
+            }
+        )
         err = F.when(
             ~F.coalesce(ok, F.lit(True)), F.array(F.lit(FLAG_PARSING_ERROR))
         ).otherwise(F.array().cast("array<string>"))
@@ -744,9 +723,7 @@ class Dissect(Processor):
         )
         flags = F.array_union(base, err)
         df = df.withColumn(FLAGS_FIELD, self._guarded(df, guard, FLAGS_FIELD, flags))
-        if tmp:
-            df = df.drop(tmp)
-        return df.drop(*tmp_cols) if tmp_cols else df
+        return df.drop(*tmp_cols)
 
 
 @dataclass

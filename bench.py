@@ -174,17 +174,42 @@ def _ensure_synth_input(path: str, rows: int, partitions: int = 256) -> None:
     spark.stop()
 
 
+#: the running ``--one`` worker: a run cut short must stop it, or it
+#: and its JVM keep loading whatever runs next
+_worker: subprocess.Popen | None = None
+
+
+def _run_worker(argv: list[str]) -> str | None:
+    """Run ``argv`` in its own session, so one ``killpg`` stops it and
+    everything it started; its stdout, or None on timeout."""
+    global _worker
+    _worker = subprocess.Popen(
+        argv, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        cwd=REPO, start_new_session=True,
+    )
+    try:
+        return _worker.communicate(timeout=RUN_TIMEOUT_S)[0]
+    except subprocess.TimeoutExpired:
+        _stop_worker()
+        _worker.wait()
+        return None
+    finally:
+        _worker = None
+
+
+def _stop_worker() -> None:
+    if _worker is not None and _worker.poll() is None:
+        try:
+            os.killpg(_worker.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+
+
 def _scaling_run(cores: int, path: str) -> dict | None:
     """One ``--one`` worker in a fresh JVM; None if it failed or timed
     out."""
-    try:
-        proc = subprocess.run(
-            [sys.executable, __file__, "--one", str(cores), path],
-            capture_output=True, text=True, cwd=REPO, timeout=RUN_TIMEOUT_S,
-        )
-    except subprocess.TimeoutExpired:
-        return None
-    for line in proc.stdout.splitlines():
+    stdout = _run_worker([sys.executable, __file__, "--one", str(cores), path])
+    for line in (stdout or "").splitlines():
         if line.startswith("BENCH_ONE "):
             return json.loads(line[len("BENCH_ONE "):])
     return None
@@ -261,6 +286,21 @@ def _queries(out: dict) -> None:
     spark.stop()
 
 
+def _emit_on_signal(out: dict) -> None:
+    """On SIGTERM/SIGINT, stop the scaling worker, print what ``out``
+    holds so far as the one JSON line (``"partial": true``) and exit:
+    an outer harness timeout still gets a line instead of nothing."""
+
+    def _emit_and_exit(signum, frame):  # noqa: ARG001
+        _stop_worker()
+        out.setdefault("partial", True)
+        emit(out)
+        os._exit(0)
+
+    signal.signal(signal.SIGTERM, _emit_and_exit)
+    signal.signal(signal.SIGINT, _emit_and_exit)
+
+
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--one":
         cores, path = int(sys.argv[2]), sys.argv[3]
@@ -284,15 +324,7 @@ def main() -> None:
         "headline_sec": 0.0,
     }
 
-    # an outer harness timeout still gets everything done so far as
-    # the one JSON line instead of nothing
-    def _emit_and_exit(signum, frame):  # noqa: ARG001
-        out.setdefault("partial", True)
-        emit(out)
-        os._exit(0)
-
-    signal.signal(signal.SIGTERM, _emit_and_exit)
-    signal.signal(signal.SIGINT, _emit_and_exit)
+    _emit_on_signal(out)
 
     if os.environ.get("BENCH_HEADLINE", "1") != "0":
         one = run_one(CPUS, synth(BENCH_ROWS, 256))

@@ -2,16 +2,25 @@
 
 The harness keeps only the tail of the bench output, so the line must
 stay under ``bench.LINE_BUDGET`` bytes while carrying the gate numbers.
-No JVM: ``emit`` only formats a record.
+No JVM: ``emit`` only formats a record, and the SIGTERM test drives a
+fake scaling worker.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import signal
+import subprocess
+import sys
+import time
+from pathlib import Path
 
 import pytest
 
 import bench
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _record(n_queries: int, name_len: int = 12) -> dict:
@@ -73,3 +82,58 @@ def test_over_budget_falls_back_to_suite_total(
     )
     assert parsed["scaling"]["efficiency"] == 0.827
     assert parsed["throughput_turns_per_sec"] == 950000.0
+
+
+#: a stand-in for the ``--one`` worker: it starts a child of its own
+#: (the JVM's place), records both pids, then sleeps
+_FAKE_WORKER = """
+import subprocess, sys, time
+child = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(600)"])
+with open(sys.argv[1], "w") as f:
+    f.write(f"{__import__('os').getpid()} {child.pid}")
+time.sleep(600)
+"""
+
+_CUT_BENCH = """
+import sys
+sys.path.insert(0, sys.argv[1])
+import bench
+bench.DETAIL_PATH = sys.argv[2]
+bench._emit_on_signal({"metric": "parse_route_turns_per_sec", "value": 1.5})
+bench._run_worker([sys.executable, "-c", sys.argv[3], sys.argv[4]])
+"""
+
+
+def _gone(pid: int) -> bool:
+    """Exited (a zombie awaiting an absent reaper counts as exited)."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] == "Z"
+    except FileNotFoundError:
+        return True
+
+
+def test_sigterm_stops_the_scaling_worker(tmp_path):
+    pidfile = tmp_path / "pids"
+    proc = subprocess.Popen(
+        [sys.executable, "-c", _CUT_BENCH, str(REPO),
+         str(tmp_path / "detail.json"), _FAKE_WORKER, str(pidfile)],
+        stdout=subprocess.PIPE, text=True,
+    )
+    deadline = time.monotonic() + 60
+    while not (pidfile.exists() and len(pidfile.read_text().split()) == 2):
+        assert time.monotonic() < deadline and proc.poll() is None
+        time.sleep(0.1)
+    pids = [int(p) for p in pidfile.read_text().split()]
+    try:
+        proc.send_signal(signal.SIGTERM)
+        out, _ = proc.communicate(timeout=30)
+        assert json.loads(out.splitlines()[-1])["partial"] is True
+        deadline = time.monotonic() + 10
+        while not all(_gone(p) for p in pids) and time.monotonic() < deadline:
+            time.sleep(0.1)
+        assert all(_gone(p) for p in pids)
+    finally:
+        for p in pids:
+            if not _gone(p):
+                os.kill(p, signal.SIGKILL)

@@ -1,4 +1,5 @@
-"""Dissect kernel conformance — pure Python, no Spark session needed.
+"""Dissect conformance: the pure-Python kernel against the corpus, and
+``Dissect.apply`` on Spark against the pure-Python kernel.
 
 Corpus: tests/data/dissect_corpus.json, vendored from the reference's
 shared logstash-filter-dissect conformance suite
@@ -10,11 +11,20 @@ from __future__ import annotations
 
 import json
 import pathlib
-import re
+import time
 
 import pytest
 
-from beats_spark.functions.dissect import DissectError, Dissector, compile_tokenizer
+from beats_spark.functions.dissect import (
+    FLAG_PARSING_ERROR,
+    DissectError,
+    Dissector,
+    compile_tokenizer,
+)
+from beats_spark.operators.actions import Dissect
+from beats_spark.schema import FLAGS_FIELD
+from beats_spark.session import local_frame
+from beats_spark.synth import TOK_LOGFMT, TOK_TOOL
 
 CORPUS = json.loads(
     (pathlib.Path(__file__).parent / "data" / "dissect_corpus.json").read_text()
@@ -30,29 +40,6 @@ def test_corpus_kernel(case):
     if case["fail"]:
         assert got is None
     else:
-        assert got == case["expected"]
-
-
-@pytest.mark.parametrize("case", CORPUS, ids=[c["name"] for c in CORPUS])
-def test_corpus_regex_lowering(case):
-    """Where the tokenizer lowers to a regex, the regex must agree
-    byte-for-byte with the kernel (and thus the corpus)."""
-    if case.get("skip"):
-        pytest.skip("skipped in reference corpus")
-    d = Dissector(case["tok"])
-    if not d.lowerable():
-        pytest.skip("tokenizer uses modifiers → pandas tier")
-    pattern, names = d.to_regex()
-    m = re.compile(pattern).match(case["msg"])
-    if case["fail"]:
-        assert m is None
-    else:
-        got = {
-            name: m.group(i + 1)
-            for i, name in enumerate(names)
-            if name is not None
-        }
-        assert m is not None
         assert got == case["expected"]
 
 
@@ -72,6 +59,11 @@ ADVERSARIAL = [
     # preceded by the zero-width start delimiter → default " " join
     ("%{+k/2},%{+k/1}", "b,a", {"k": "a b"}),
     ("%{*k} %{&k}", "color blue", {"color": "blue"}),
+    # control chars in field text extract like any other text
+    ("%{a} %{b}=%{c}", "a\x1e\x17b k=v", {"a": "a\x1e\x17b", "b": "k", "c": "v"}),
+    # a NULL source: no fields and, on Spark, no parse-error flag
+    ("%{a} %{b}", None, None),
+    ("%{+k} %{+k}", None, None),
 ]
 
 
@@ -79,21 +71,6 @@ ADVERSARIAL = [
 def test_adversarial_kernel(tok, msg, expected):
     d = compile_tokenizer(tok)
     assert d.dissect(msg) == expected
-
-
-@pytest.mark.parametrize("tok,msg,expected", ADVERSARIAL)
-def test_adversarial_regex_agrees(tok, msg, expected):
-    d = compile_tokenizer(tok)
-    if not d.lowerable():
-        pytest.skip("modifier tokenizer")
-    pattern, names = d.to_regex()
-    m = re.compile(pattern).match(msg)
-    if expected is None or msg == "":
-        assert m is None or msg == ""
-    else:
-        assert m is not None
-        got = {n: m.group(i + 1) for i, n in enumerate(names) if n is not None}
-        assert got == expected
 
 
 def test_append_ordinal_ordering():
@@ -108,43 +85,77 @@ def test_invalid_tokenizer():
         Dissector("%{+&bad}")
 
 
-class TestSinglePass:
-    """dissect_single_pass: one regexp_replace+split per row instead
-    of one regexp_extract per key, with per-row fallback when field
-    text contains the \\x1e\\x17 separator."""
+def spark_vs_kernel(spark, tok: str, msgs: list) -> list[str]:
+    """Run ``Dissect.apply`` over ``msgs`` as ONE DataFrame and return
+    a description of every row that differs from ``Dissector.dissect``.
 
-    def test_matches_per_key_extraction(self, spark):
-        from pyspark.sql import functions as F
-        from beats_spark.functions.dissect import (
-            dissect_columns,
-            dissect_single_pass,
-        )
+    Spark emits only :attr:`Dissector.output_keys`, so the oracle's dict
+    is projected onto them (an indirect value lands only under a static
+    key name). A failed parse must carry the flag and NULL fields; a
+    NULL source carries neither flag nor fields.
+    """
+    d = compile_tokenizer(tok)
+    rows = [(i, m) for i, m in enumerate(msgs)]
+    df = local_frame(spark, rows, "i int, text string")
+    out = Dissect(tokenizer=tok, field="text", target_prefix="o_").apply(df)
+    keys = d.output_keys
+    got_rows = out.select(
+        "i", FLAGS_FIELD, *[out["`o_" + k + "`"] for k in keys]
+    ).orderBy("i").collect()
+    bad = []
+    for m, r in zip(msgs, got_rows):
+        want = d.dissect(m) if m is not None else None
+        flagged = FLAG_PARSING_ERROR in (r[FLAGS_FIELD] or [])
+        got = dict(zip(keys, list(r)[2:]))
+        if want is None:
+            ok = flagged == (m is not None) and set(got.values()) <= {None}
+        else:
+            ok = not flagged and got == {k: want.get(k) for k in keys}
+        if not ok:
+            bad.append(f"{tok!r} on {m!r}: spark {got} flagged={flagged}, kernel {want}")
+    return bad
 
-        tok = "%{a} %{b}=%{c}"
-        df = spark.createDataFrame(
-            [("x y=z",), ("p q=r extra",), ("nodissect",), ("",), (None,)],
-            "text string",
-        )
-        cols, ok = dissect_columns(F.col("text"), tok)
-        want = df.select(
-            *[c.alias(k) for k, c in cols.items()], ok.alias("ok")
-        ).collect()
-        df2, cols2, ok2, tmps = dissect_single_pass(df, "text", tok)
-        got = df2.select(
-            *[c.alias(k) for k, c in cols2.items()], ok2.alias("ok")
-        ).collect()
-        assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
-    def test_separator_collision_falls_back(self, spark):
-        from beats_spark.functions.dissect import dissect_single_pass
+def _adversarial_id(i: int, tok: str, msg: str, expected) -> str:
+    return f"{tok}-{msg}-{'None' if expected is None else f'expected{i}'}"
 
-        evil = "a\x1e\x17b"
-        df = spark.createDataFrame(
-            [(f"{evil} k=v",), ("plain k=v",)], "text string"
-        )
-        df2, cols, ok, tmps = dissect_single_pass(df, "text", "%{a} %{b}=%{c}")
-        rows = df2.select(
-            cols["a"].alias("a"), cols["c"].alias("c")
-        ).collect()
-        assert (rows[0]["a"], rows[0]["c"]) == (evil, "v")
-        assert (rows[1]["a"], rows[1]["c"]) == ("plain", "v")
+
+SPARK_CASES = [
+    pytest.param(c["tok"], c["msg"], id=c["name"])
+    for c in CORPUS
+    if not c.get("skip")
+] + [
+    pytest.param(tok, msg, id=_adversarial_id(i, tok, msg, exp))
+    for i, (tok, msg, exp) in enumerate(ADVERSARIAL)
+]
+
+
+@pytest.mark.parametrize("tok,msg", SPARK_CASES)
+def test_dissect_apply_matches_kernel(spark, tok, msg):
+    assert spark_vs_kernel(spark, tok, [msg]) == []
+
+
+@pytest.mark.parametrize(
+    "tok",
+    [TOK_LOGFMT, TOK_TOOL, "%{+pair/2} %{+pair/1}"],
+    ids=["logfmt", "tool", "append"],
+)
+def test_no_python_worker_in_plan(spark, tok):
+    """Every tokenizer, modifiers included, plans JVM-side only."""
+    df = spark.createDataFrame([("x",)], "text string")
+    out = Dissect(tokenizer=tok, target_prefix="o_").apply(df)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
+
+
+def test_expression_stays_linear_in_key_count(spark):
+    """20 greedy keys plan and run in seconds: no offset is nested
+    inside its own run-length, which would double the expression per
+    key."""
+    n = 20
+    tok = " ".join(f"%{{k{i}->}}" for i in range(n)) + " "
+    line = "   ".join(f"v{i}" for i in range(n)) + "  "
+    t0 = time.monotonic()
+    assert spark_vs_kernel(spark, tok, [line, line.replace("v7   ", "v7"), None]) == []
+    assert time.monotonic() - t0 < 30

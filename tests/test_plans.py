@@ -67,16 +67,16 @@ class TestScanPushdown:
         self, spark, transcripts_on_disk
     ):
         # parse 4 keys but consume 1 → optimizer must drop the other 3
-        # regexp_extracts entirely (projection pruning through the
-        # parse stage)
+        # value extractions entirely (projection pruning through the
+        # parse stage; the delimiter offsets all stay, the match gate
+        # needs them)
         df = spark.read.parquet(transcripts_on_disk)
         parsed = apply_chain(df, [Dissect(tokenizer=TOK_LOGFMT)])
         q = parsed.select("level")
         opt = _optimized(q)
-        # one regexp_extract (for `level`) survives — the other three
-        # keys' extracts are pruned (the tokenizer literal text appears
-        # inside the pattern, so count expressions, not key names)
-        assert opt.count("regexp_extract") == 1
+        # one substr (for `level`) survives — the other three keys'
+        # are pruned
+        assert opt.count("substr(") == 1
 
 
 class TestFanoutShuffleCount:
@@ -130,7 +130,7 @@ class TestWholeStageCodegen:
         assert "isFinalPlan=true" in plan
         # the parse+route projection runs inside WholeStageCodegen —
         # final plans mark codegen stages with "*(n)"; no
-        # BatchEvalPython / ArrowEvalPython stage for the native tier
+        # BatchEvalPython / ArrowEvalPython stage for the parse
         import re
 
         assert re.search(r"\*\(\d+\)", plan)
