@@ -146,7 +146,7 @@ def compile_rules(output: Mapping[str, Any]) -> list[Rule]:
 
 
 _TOP_KEYS = {"processors", "output"}
-_OUTPUT_KEYS = {"key", "keys", "default", "n_buckets", "salt"}
+_OUTPUT_KEYS = {"key", "keys", "default", "n_buckets"}
 
 
 def compile_pipeline(config: Mapping[str, Any]) -> Pipeline:
@@ -158,13 +158,11 @@ def compile_pipeline(config: Mapping[str, Any]) -> Pipeline:
     unknown = set(output) - _OUTPUT_KEYS
     if unknown:
         raise ConfigError(f"unknown output config keys: {sorted(unknown)}")
-    salt = output.get("salt")
     return Pipeline(
         processors=processors,
         routes=compile_rules(output),
         default_sink=output.get("default", "default"),
         n_buckets=int(output.get("n_buckets", 64)),
-        salt=int(salt) if salt is not None else None,
     )
 
 

@@ -1705,9 +1705,9 @@ def q_heavy_hitters(spark, sf_dir):
     the oracle, same SQL); 'cms' = count-min sketch estimates for the
     top-k terms next to their exact counts (d×w register state, no
     term-keyed shuffle; frac = est/exact ≥ 1 overcount ratio);
-    'skew' = hot-key report over events.user_id with the recommended
-    salt factor for router.sort_for_fanout (the north rule's salted
-    repartitioning, sized from data); 'hq' = histogram-quantile
+    'skew' = hot-key report over events.user_id, whose rec_salt row
+    is a diagnostic (the hottest key's size in average-key shares);
+    'hq' = histogram-quantile
     sketch of the doc-length distribution (mergeable fixed-bin
     counters — the 10^12-row replacement for exact percentile)."""
     from .operators.heavyhitters import (

@@ -30,13 +30,13 @@ The 100-TB questions this module answers:
   minhash affine family, dedup.py). Estimates only ever OVERCOUNT
   (point query = min over d rows), overshoot ≤ e·N/w w.h.p.
 
-- "is this key column skewed enough to need salting?" —
-  :func:`skew_report`: per-key count distribution (max, mean,
-  p50/p90/p99, top-1/top-10 share) plus the recommended fan-out
-  ``rec_salt = ceil(max_cnt / mean_cnt)`` — the salt factor
-  router.sort_for_fanout takes to spread a hot conversation over
-  that many writer tasks (the north rule's "salted repartitioning on
-  conv_id" knob, sized from data instead of guessed).
+- "how skewed is this key column?" — :func:`skew_report`: per-key
+  count distribution (max, mean, p50/p90/p99, top-1/top-10 share)
+  plus ``rec_salt = ceil(max_cnt / mean_cnt)``, a diagnostic: the
+  number of equal shares the hottest key would need to level it with
+  the average. Nothing reads it as a setting; the fan-out write
+  (router.sort_for_fanout) has AQE split an oversized hot bucket
+  from the shuffle's own statistics instead.
 
 No reference-repo counterpart (training-data extension per the
 brief); the nearest beats concept is the fnv32a partition-hash
@@ -569,8 +569,9 @@ def skew_report(df: DataFrame, key: Column) -> DataFrame:
     (metric, value) rows — n_rows, n_keys, max_cnt, mean_cnt,
     p50/p90/p99 of the per-key count distribution, top-1 and top-10
     share of total rows, and ``rec_salt = ceil(max_cnt / mean_cnt)``
-    — the salt factor that spreads the hottest key over enough tasks
-    to level it with the average (router.sort_for_fanout's knob).
+    — how many average-sized shares the hottest key holds. It is a
+    diagnostic only: no writer takes it as a setting, because the
+    fan-out write's AQE rebalance splits a hot bucket by itself.
 
     Shape: one keyed groupBy (map-side combined), then ALL statistics
     in one aggregation over the per-key count frame (n_keys rows —

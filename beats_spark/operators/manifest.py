@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import hadoop_fs
+
 STATUS_DONE = "done"
 
 
@@ -57,11 +59,11 @@ def gc_manifest(
     ``keep_last_runs`` runs, keeping at least the latest row per
     bucket so resume still sees every committed partition. Returns the
     number of rows kept. Rewrite is atomic-enough for a maintenance
-    op: write compact → swap directory.
+    op: write the compacted copy next to the manifest
+    (``_manifest.gc_new``), then swap directories with Hadoop
+    ``FileSystem`` renames, so executors and the driver agree on where
+    it lives under any warehouse scheme.
     """
-    import shutil
-    import tempfile
-
     path = manifest_path(root)
     try:
         m = spark.read.parquet(path)
@@ -85,15 +87,17 @@ def gc_manifest(
         .unionByName(latest_per_part)
         .dropDuplicates(["run_id", "partition_id", "updated_ts"])
     )
-    tmp = tempfile.mkdtemp(prefix="manifest_gc_")
-    kept.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
+    new = f"{path}.gc_new"
+    kept.write.mode("overwrite").parquet(new)
+    n = spark.read.parquet(new).count()
     # rename old aside BEFORE installing the new dir — a crash between
     # the two steps must never leave the output with NO manifest (the
-    # .old copy is recoverable by hand; losing it only costs recompute)
-    old = f"{path}.gc_old"
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
+    # .gc_old copy is recoverable by hand; losing it only costs
+    # recompute)
+    fs, cur = hadoop_fs(spark, path)
+    old = cur.suffix(".gc_old")
+    fs.delete(old, True)
+    if not (fs.rename(cur, old) and fs.rename(cur.suffix(".gc_new"), cur)):
+        raise OSError(f"manifest GC could not swap {new} into {path}")
+    fs.delete(old, True)
     return n

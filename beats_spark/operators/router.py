@@ -9,9 +9,11 @@ a resumed run replaces exactly the (sink, part_id) directories it
 recomputes (idempotent fan-out, FIXTURES.md §6).
 
 Deterministic in-sink ordering (the per-turn text-equality invariant)
-comes from hash-distributing on conv_id and sorting within partitions
-by (conv_id, turn_idx) — the same stable order the reference gets from
-per-file byte order (SURVEY.md §2.9).
+comes from one AQE ``REBALANCE`` exchange on (sink, part_id) and a sort
+within partitions by (conv_id, turn_idx) — the same stable order the
+reference gets from per-file byte order (SURVEY.md §2.9). AQE sizes
+that exchange from its own map output, so a hot bucket is split over
+several writer tasks without any configuration.
 """
 
 from __future__ import annotations
@@ -53,70 +55,39 @@ def with_row_hash(df: DataFrame) -> DataFrame:
     return df.withColumn(ROW_HASH_COL, F.xxhash64(*exprs))
 
 
-def sort_for_fanout(
-    routed: DataFrame,
-    partition_cols: tuple[str, str] = ("sink", PART_COL),
-    salt: int | None = None,
-) -> DataFrame:
+def sort_for_fanout(routed: DataFrame) -> DataFrame:
     """Co-locate each (sink, bucket) and fix the stable
     (conv_id, turn_idx) order inside every output file — the per-turn
     ordering invariant. Shared by the parquet and Iceberg writers.
 
-    ``salt`` handles hot conversations (the synth's Zipf head, or one
-    run-away agent session at 100 TB): a bucket whose conv dominates
-    the data would otherwise land on ONE writer task. Salting adds
-    ``hash(conv_id, turn_idx) % salt`` to the SHUFFLE key only — the
-    on-disk partitioning (sink, part_id) is unchanged, the hot bucket
-    just arrives as ≤``salt`` sorted files instead of one. Reading a
-    sink and sorting by (conv_id, turn_idx) is identical either way,
-    which is what the per-turn equality invariant is defined over
-    (mirrors the kafka hash-partitioner's random fallback for hot
-    keys, outputs/kafka/partition.go:216-275).
+    The one exchange is a ``REBALANCE`` on (sink, part_id), so AQE
+    sizes it from the shuffle's own map-output statistics: it
+    coalesces small (sink, bucket) partitions, and it splits any
+    partition above ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+    into several sorted files. That split is the hot-key spread the
+    kafka hash partitioner gets from its random fallback
+    (outputs/kafka/partition.go:216-275): a bucket one run-away
+    conversation dominates is written by several tasks, with no
+    extra input pass. Reading a sink and sorting by
+    (conv_id, turn_idx) is identical either way, which is what the
+    per-turn equality invariant is defined over.
+
+    Without AQE the hint plans no exchange at all, and every input
+    task would write every (sink, bucket) it sees, so AQE off is an
+    error here rather than a second plan.
     """
-    keys = [F.col(c) for c in partition_cols]
-    if salt and salt > 1:
-        keys.append(F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt)))
-    return routed.repartition(*keys).sortWithinPartitions(
-        *partition_cols, "conv_id", "turn_idx"
-    )
-
-
-def recommend_salt(
-    df: DataFrame,
-    *key_cols: str,
-    cap: int = 64,
-) -> int:
-    """Data-derived ``salt`` for :func:`sort_for_fanout`:
-    ``ceil(max_cnt / mean_cnt)`` of the per-key count distribution
-    (the factor that levels the hottest key with the average),
-    clamped to [1, cap]. One map-side-combining keyed agg plus a
-    1-row collect — run it on a sample or a prior batch when the
-    extra input pass matters; the answer only needs to be
-    order-of-magnitude right (heavyhitters.skew_report is the
-    full diagnostic this is the one-number form of)."""
-    keys = [F.col(c) for c in key_cols] or [F.col("conv_id")]
-    row = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .agg(
-            F.max("cnt").alias("mx"),
-            F.count(F.lit(1)).alias("nk"),
-            F.sum("cnt").alias("n"),
+    spark = routed.sparkSession
+    if spark.conf.get("spark.sql.adaptive.enabled").lower() != "true":
+        raise ValueError(
+            "the fan-out write needs spark.sql.adaptive.enabled=true: "
+            "its REBALANCE exchange is planned only under AQE"
         )
-        .collect()[0]
+    return routed.hint("rebalance", "sink", PART_COL).sortWithinPartitions(
+        "sink", PART_COL, "conv_id", "turn_idx"
     )
-    if not row["n"]:
-        return 1
-    salt = -(-row["mx"] * row["nk"] // row["n"])  # ceil in exact ints
-    return max(1, min(cap, int(salt)))
 
 
-def write_fanout(
-    routed: DataFrame,
-    root: str,
-    mode: str = "overwrite",
-    salt: int | None = None,
-) -> None:
+def write_fanout(routed: DataFrame, root: str, mode: str = "overwrite") -> None:
     """Single-pass fan-out write (parquet layout; see
     sources/tables.py for the Iceberg-backed variant).
 
@@ -128,6 +99,6 @@ def write_fanout(
     # would DELETE every previously-committed (sink, part_id) partition
     # the manifest still marks done. The per-write option pins it
     # regardless of the caller's session conf.
-    sort_for_fanout(routed, salt=salt).write.mode(mode).option(
+    sort_for_fanout(routed).write.mode(mode).option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("sink", PART_COL).parquet(root)

@@ -16,11 +16,13 @@ Catalyst handles pushdown/pruning/reordering; the write is ONE pass
 scan); the manifest aggregation re-reads only 3 columns of the written
 parquet (column pruning makes it ~free relative to the main pass).
 
-Scale notes (100 TB): the only shuffle is the pre-write repartition by
-(sink, part_id), which is required anyway to control output file
-counts, and it keys on the bucket — not raw conv_id — so hot
-conversations spread across no more than one bucket; AQE skew handling
-plus the quadratic-hash bucket spread keep reducers balanced. The
+Scale notes (100 TB): the only shuffle is the pre-write AQE rebalance
+by (sink, part_id), which is required anyway to control output file
+counts. It keys on the bucket — not raw conv_id — and AQE sizes it
+from the shuffle's map output: small (sink, bucket) partitions are
+coalesced, and one above the advisory partition size (a bucket a hot
+conversation dominates) is split over several writer tasks, so no
+reducer carries a whole hot bucket and no setting has to predict it. The
 enrich joins are broadcast (no shuffle), but not free: every action
 that plans one rebuilds the broadcast, once per run and once per
 micro-batch in a stream. The dims and the commit rows are therefore
@@ -50,7 +52,7 @@ from ..operators.router import (
     write_fanout,
 )
 from ..operators.selector import Rule, compile_selector
-from ..session import local_frame
+from ..session import hadoop_fs, local_frame
 
 
 def _clear_output(spark: SparkSession, output_root: str) -> None:
@@ -62,13 +64,9 @@ def _clear_output(spark: SparkSession, output_root: str) -> None:
     aggregation would attribute their rows to the new run_id — and a
     stale manifest would poison a later resume. Hadoop FS API, so any
     warehouse scheme works."""
-    jconf = spark._jsc.hadoopConfiguration()
-    jvm = spark._jvm
     for sub in ("data", "_manifest", "_metrics"):
-        path = jvm.org.apache.hadoop.fs.Path(f"{output_root}/{sub}")
-        fs = path.getFileSystem(jconf)
-        if fs.exists(path):
-            fs.delete(path, True)
+        fs, path = hadoop_fs(spark, f"{output_root}/{sub}")
+        fs.delete(path, True)
 
 
 @dataclass
@@ -89,12 +87,6 @@ class Pipeline:
     routes: Sequence[Rule | Mapping] = dc_field(default_factory=tuple)
     default_sink: str = "default"
     n_buckets: int = 64
-    #: spread hot conversations over ≤salt writer tasks per bucket
-    #: (see router.sort_for_fanout); None = no salting; "auto" =
-    #: derive ceil(max/mean) from the input's conv_id distribution
-    #: (router.recommend_salt — one extra counting pass over the
-    #: input before the write)
-    salt: int | str | None = None
 
     # -- lazy plan ----------------------------------------------------------
 
@@ -154,15 +146,12 @@ class Pipeline:
         routed = routed.observe(obs_out, F.count(F.lit(1)).alias("n"))
 
         data_root = f"{output_root}/data"
-        salt = self.salt
-        if salt == "auto":
-            from beats_spark.operators.router import recommend_salt
+        write_fanout(routed, data_root, mode="overwrite")
 
-            salt = recommend_salt(df, "conv_id")
-        write_fanout(routed, data_root, mode="overwrite", salt=salt)
-
-        # Observation rows are missing when the observed subtree saw no
-        # rows (e.g. cached-empty input); fall back to on-disk counts.
+        # An Observation has no row when its subtree ran no task: a
+        # zero-row parquet input plans a scan with no partitions, so
+        # ``get`` raises; count that as 0 events. (``limit(0)`` and a
+        # cached-empty input still run a task and report n = 0.)
         try:
             events_total = int(obs_in.get["n"])
         except Exception:

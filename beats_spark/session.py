@@ -7,7 +7,8 @@ time zone (required for DuckDB-oracle comparison), and shuffle
 partitions sized to parallelism instead of the 200 default.
 
 ``local_frame`` is the one way program code turns driver-side rows
-(dims, manifest and metrics rows, query sets) into a DataFrame.
+(dims, manifest and metrics rows, query sets) into a DataFrame, and
+``hadoop_fs`` the one way it deletes or renames output directories.
 """
 
 from __future__ import annotations
@@ -97,3 +98,14 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the JVM's Hadoop API.
+
+    Directory deletes and renames go through the same filesystem layer
+    as Spark's own writers, so a plain path, a ``file://`` URI or any
+    cluster scheme behaves alike; Python's ``os``/``shutil`` would see
+    only the driver's local disk."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath

@@ -93,37 +93,24 @@ class TableIO:
     # -- fan-out write ------------------------------------------------------
 
     def write_fanout(
-        self,
-        routed: DataFrame,
-        target: str,
-        partition_cols: tuple[str, str] = ("sink", "part_id"),
-        mode: str = "overwrite",
-        salt: int | None = None,
+        self, routed: DataFrame, target: str, mode: str = "overwrite"
     ) -> None:
         """Single-pass fan-out (see operators/router.py for the plan
         shape). Iceberg: ``overwritePartitions`` — an atomic snapshot
         replacing exactly the recomputed (sink, bucket) partitions.
-        Parquet: dynamic partition overwrite does the same directory-
-        level replace, with atomicity carried by the manifest commit
-        that follows."""
-        spark = routed.sparkSession
-        from ..operators.router import sort_for_fanout
+        Parquet: ``router.write_fanout``, whose dynamic partition
+        overwrite does the same directory-level replace, with
+        atomicity carried by the manifest commit that follows."""
+        from ..operators.router import sort_for_fanout, write_fanout
 
-        ordered = sort_for_fanout(routed, partition_cols, salt=salt)
-        if self.resolve(spark) == "iceberg":
-            writer = ordered.writeTo(target).using("iceberg")
-            if mode == "overwrite":
-                writer.overwritePartitions()
-            else:
-                writer.append()
+        if self.resolve(routed.sparkSession) != "iceberg":
+            write_fanout(routed, target, mode)
+            return
+        writer = sort_for_fanout(routed).writeTo(target).using("iceberg")
+        if mode == "overwrite":
+            writer.overwritePartitions()
         else:
-            # per-write dynamic overwrite (mirrors router.write_fanout):
-            # the docstring's directory-level replace must not depend on
-            # the caller's session conf — a static overwrite would
-            # delete every previously-committed partition
-            ordered.write.mode(mode).option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy(*partition_cols).parquet(target)
+            writer.append()
 
 
 # ---------------------------------------------------------------------------

@@ -27,15 +27,10 @@ from ..plans.pipeline import Pipeline
 from ..schema import TRANSCRIPT_SCHEMA
 
 
-def read_transcript_stream(
-    spark: SparkSession, input_path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def read_transcript_stream(spark: SparkSession, input_path: str) -> DataFrame:
     """Parquet-directory stream source (the harvester analog: new files
     under the path are discovered per trigger, like scan_frequency)."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_path)
+    return spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_path)
 
 
 def run_stream(

@@ -10,8 +10,9 @@ rows to exercise the parse-failure tagging path
 (libbeat/processors/dissect/processor.go:64-75).
 
 conv_id frequency is Zipf-ish skewed (quadratic transform of a hash
-uniform) so a few conversations are hot — exercising the salting /
-AQE-skew path at bench scale.
+uniform) so a few conversations are hot — exercising the fan-out
+write's AQE rebalance, which splits an oversized bucket, at bench
+scale.
 """
 
 from __future__ import annotations

@@ -111,6 +111,7 @@ output:
             "unknown if-processor",
         ),
         ("3", "must be a mapping"),
+        ("output: {salt: 4}", "unknown output config keys"),
     ],
 )
 def test_config_errors_at_compile_time(yaml_text, match):

@@ -135,7 +135,7 @@ class TestCMS:
 class TestSkewReport:
     def test_values_and_duckdb_parity(self, spark):
         """One hot key (80% of rows) among uniform cold keys: the
-        report sees it and recommends a salt ≈ max/mean."""
+        report sees it, and rec_salt ≈ max/mean."""
         rows = [(0,)] * 800 + [(k,) for k in range(1, 201)]
         df = spark.createDataFrame(rows, "k long")
         rep = {r["metric"]: r["value"] for r in skew_report(df, F.col("k")).collect()}
@@ -227,45 +227,6 @@ class TestHistogramQuantiles:
             for r in histogram_bins(df, F.col("v"), 0, 128, n_bins=8).collect()
         }
         assert bins == {0: 1, 7: 1}
-
-
-class TestRecommendSalt:
-    def test_hot_key_drives_salt(self, spark):
-        from beats_spark.operators.router import recommend_salt
-
-        rows = [("hot", i) for i in range(800)] + [
-            (f"c{k}", 0) for k in range(1, 201)
-        ]
-        df = spark.createDataFrame(rows, "conv_id string, turn_idx long")
-        # ceil(800 / (1000/201)) = 161, clamped to the 64 cap
-        assert recommend_salt(df, "conv_id") == 64
-        assert recommend_salt(df, "conv_id", cap=256) == 161
-
-    def test_uniform_is_one(self, spark):
-        from beats_spark.operators.router import recommend_salt
-
-        df = spark.createDataFrame(
-            [(f"c{i % 50}", i) for i in range(1000)],
-            "conv_id string, turn_idx long",
-        )
-        assert recommend_salt(df, "conv_id") == 1
-
-    def test_pipeline_auto_salt_runs(self, spark, tmp_path):
-        """salt='auto' resolves from the input and the run completes
-        with identical routed counts."""
-        from beats_spark.operators.actions import Dissect
-        from beats_spark.plans.pipeline import Pipeline
-        from beats_spark.synth import TOK_LOGFMT, synth_transcripts
-
-        df = synth_transcripts(spark, 2_000, seed=11)
-        out = str(tmp_path / "out")
-        res = Pipeline(
-            processors=[Dissect(tokenizer=TOK_LOGFMT, field="text")],
-            default_sink="all",
-            n_buckets=4,
-            salt="auto",
-        ).run(spark, df, out, run_id="autosalt")
-        assert res.events_published == 2_000
 
 
 class TestGroupedHistogramQuantiles:

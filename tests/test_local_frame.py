@@ -109,9 +109,15 @@ def test_default_pipeline_has_no_python_scan(spark):
     assert "ExistingRDD" not in plan
 
 
-def test_run_on_empty_input_commits(spark, tmp_path):
+@pytest.mark.parametrize("source", ["limit0", "empty_parquet"])
+def test_run_on_empty_input_commits(spark, tmp_path, source):
     out = str(tmp_path / "out")
     df = synth_transcripts(spark, 50, seed=5).limit(0)
+    if source == "empty_parquet":
+        # a zero-row parquet scan runs no task, so the run's
+        # Observations report no row at all
+        df.write.parquet(str(tmp_path / "empty"))
+        df = spark.read.parquet(str(tmp_path / "empty"))
     res = _default_pipeline(spark, 4).run(spark, df, out, run_id="empty")
     assert (res.events_total, res.events_published) == (0, 0)
     manifest = spark.read.parquet(f"{out}/_manifest")

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from beats_spark.operators.actions import Dissect
 from beats_spark.operators.manifest import gc_manifest, read_done_parts
 from beats_spark.operators.selector import Rule
@@ -9,9 +11,12 @@ from beats_spark.plans.pipeline import Pipeline
 from beats_spark.synth import TOK_LOGFMT, synth_transcripts
 
 
-def test_gc_compacts_but_preserves_resume(spark, tmp_path):
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
+def test_gc_compacts_but_preserves_resume(spark, tmp_path, as_uri):
     df = synth_transcripts(spark, 2_000, seed=7)
-    out = str(tmp_path / "out")
+    # a scheme-qualified root must compact through the same Hadoop FS
+    # the writers use, not the driver's local disk
+    out = (tmp_path / "out").as_uri() if as_uri else str(tmp_path / "out")
     p = Pipeline(
         processors=[Dissect(tokenizer=TOK_LOGFMT, field="text")],
         routes=[Rule(value="errors", when={"equals": {"level": "error"}})],

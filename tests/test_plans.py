@@ -3,7 +3,7 @@
 These assert the plan SHAPE, not results: enrich lookups must stay
 broadcast joins (no shuffle of the fact table), parse/filter columns
 must push down to the parquet scan, and the fan-out transform must
-introduce exactly one exchange (the pre-write repartition). A change
+introduce exactly one exchange (the pre-write AQE rebalance). A change
 that silently turns a broadcast into a sort-merge join or defeats
 pushdown would still pass the value tests at sf0.001 and then fall
 over at scale — this file is the guard.
@@ -11,12 +11,18 @@ over at scale — this file is the guard.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from beats_spark.operators.actions import Dissect, apply_chain
 from beats_spark.operators.enrich import BroadcastLookup, dim_roles, dim_tools
-from beats_spark.operators.router import with_partition_id
+from beats_spark.operators.router import (
+    sort_for_fanout,
+    with_partition_id,
+    write_fanout,
+)
 from beats_spark.operators.selector import Rule, compile_selector
 from beats_spark.plans.pipeline import Pipeline
 from beats_spark.synth import TOK_LOGFMT, synth_transcripts
@@ -91,14 +97,29 @@ class TestFanoutShuffleCount:
             default_sink="misc",
             n_buckets=8,
         )
-        routed = with_partition_id(p.transform(df), 8).repartition(
-            F.col("sink"), F.col("part_id")
-        )
+        routed = sort_for_fanout(with_partition_id(p.transform(df), 8))
         plan = _plan(routed)
-        # exactly one shuffle: the pre-write repartition on
+        # exactly one shuffle: the writer's AQE rebalance on
         # (sink, part_id); parse/route/enrich must not add exchanges
-        assert plan.count("Exchange hashpartitioning") == 1
         assert plan.count("Exchange") - plan.count("BroadcastExchange") == 1
+        assert re.search(
+            r"Exchange hashpartitioning\(sink#\d+, part_id#\d+, \d+\), "
+            r"REBALANCE_PARTITIONS_BY_COL",
+            plan,
+        ), plan
+
+    def test_fanout_write_needs_aqe(self, spark, tmp_path):
+        # without AQE the rebalance hint plans no exchange, so every
+        # input task would write every (sink, bucket) it sees
+        df = with_partition_id(synth_transcripts(spark, 100, seed=3), 4)
+        out = tmp_path / "out"
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            with pytest.raises(ValueError, match="spark.sql.adaptive.enabled"):
+                write_fanout(df.withColumn("sink", F.lit("s")), str(out))
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+        assert not out.exists()
 
     def test_selector_folds_to_case(self, spark, transcripts_on_disk):
         # constant rules fold at plan time (outil does this by hand;

@@ -1,12 +1,22 @@
-"""Salted fan-out for hot conversations (router.sort_for_fanout)."""
+"""Hot-bucket spread in the fan-out write (router.sort_for_fanout).
+
+The writer's AQE rebalance splits any (sink, bucket) partition above
+``spark.sql.adaptive.advisoryPartitionSizeInBytes`` over several
+writer tasks — the kafka partitioner's random fallback for hot keys
+(outputs/kafka/partition.go:216-275), sized from the shuffle's own
+statistics. A small advisory size stands in for a 100 TB hot bucket.
+"""
 
 from __future__ import annotations
 
 import glob
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
 from beats_spark.operators.router import with_partition_id, write_fanout
+
+ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
 
 def _skewed_df(spark, n=20_000, hot_frac=0.8):
@@ -30,37 +40,40 @@ def _hot_bucket_files(root: str) -> dict[str, int]:
     return out
 
 
+@contextmanager
+def _small_advisory_size(spark):
+    spark.conf.set(ADVISORY, "16k")
+    try:
+        yield
+    finally:
+        spark.conf.unset(ADVISORY)
+
+
 class TestSaltedFanout:
     def test_salt_spreads_hot_bucket(self, spark, tmp_path):
         df = _skewed_df(spark)
-        unsalted = str(tmp_path / "u")
-        salted = str(tmp_path / "s")
-        # AQE rightly coalesces the tiny salted partitions at toy
-        # scale (a 100 TB hot bucket would stay split); turn the
-        # coalescer off to observe the spread itself
-        key = "spark.sql.adaptive.coalescePartitions.enabled"
-        spark.conf.set(key, "false")
-        try:
-            write_fanout(df, unsalted)
-            write_fanout(df, salted, salt=4)
-        finally:
-            spark.conf.set(key, "true")
+        whole = str(tmp_path / "u")
+        split = str(tmp_path / "s")
+        write_fanout(df, whole)
+        with _small_advisory_size(spark):
+            write_fanout(df, split)
 
-        # the hot conversation's bucket: one file without salt, several
-        # (≤4, >1) with — i.e. it was written by multiple tasks
-        hot_u = max(_hot_bucket_files(unsalted).values())
-        hot_s = max(_hot_bucket_files(salted).values())
-        assert hot_u == 1
-        assert 1 < hot_s <= 4
+        # the hot conversation's bucket: one file at the default
+        # advisory size, several once it exceeds it — i.e. it was
+        # written by multiple tasks
+        assert max(_hot_bucket_files(whole).values()) == 1
+        assert max(_hot_bucket_files(split).values()) > 1
 
     def test_salting_preserves_content_and_order(self, spark, tmp_path):
         df = _skewed_df(spark, n=5_000)
-        salted = str(tmp_path / "s2")
-        write_fanout(df, salted, salt=4)
-        back = spark.read.parquet(salted)
+        split = str(tmp_path / "s2")
+        with _small_advisory_size(spark):
+            write_fanout(df, split)
+        assert max(_hot_bucket_files(split).values()) > 1
+        back = spark.read.parquet(split)
         assert back.count() == 5_000
         # the invariant is defined over (conv_id, turn_idx)-sorted
-        # reads: same rows, same order, salt or no salt
+        # reads: same rows, same order, split or not
         got = [
             (r["conv_id"], r["turn_idx"])
             for r in back.orderBy("conv_id", "turn_idx").collect()
