@@ -5,10 +5,11 @@ programs for the ES ingest node (e.g.
 ``filebeat/module/apache/access/ingest/default.json:3-27``: patterns +
 ``convert`` types + multi-pattern fallback). This module re-expresses
 that surface natively: a ``%{PATTERN:field:type}`` expression expands
-to a single Java regex; each field becomes one ``regexp_extract``
-column (whole-stage codegen, no Python); multi-pattern programs
-become per-field ``coalesce`` over the alternatives — the ingest
-node's first-match-wins.
+to a single Java regex (:func:`compile_grok`), and
+:func:`grok_single_pass` extracts every field of a pattern from one
+``regexp_replace`` + ``split`` per row (whole-stage codegen, no
+Python); multi-pattern programs become per-field ``coalesce`` over
+the alternatives — the ingest node's first-match-wins.
 
 The pattern library is a from-scratch subset of the public grok
 pattern names (the names are an ecosystem convention; the regexes
@@ -162,6 +163,18 @@ class CompiledGrok:
     #: anchor (alternation branches, wrappers that can match empty)
     #: fall back to treating '' as unset.
     anchors: dict[int, int] = field(default_factory=dict)
+
+    @property
+    def search(self) -> str:
+        """The pattern as a FIND regex: ES/logstash grok searches for a
+        substring, never a full-line match (es/audit greps
+        ``^%{CHAR:first_char}`` against whole JSON lines);
+        ``rlike``/``regexp_extract`` are find()-based already."""
+        return f"(?s:{self.pattern})"
+
+    def matches(self, col: Column) -> Column:
+        """The per-row match flag (NULL for a NULL input)."""
+        return col.rlike(self.search)
 
 
 def _expand(
@@ -523,56 +536,6 @@ def _escape_bare_braces(pattern: str) -> str:
     return "".join(out)
 
 
-def grok_columns(
-    col: Column, expr: str, definitions: dict[str, str] | None = None
-) -> tuple[dict[str, Column], Column]:
-    """One pattern → dict of field Columns + an ``_ok`` match Column.
-    Non-matching rows yield NULL fields (ingest node sets nothing and
-    fails the document; callers tag via the ok column). A field
-    captured by MORE THAN ONE group (alternation branches) reads as
-    the first branch that captured non-empty text."""
-    g = compile_grok(expr, definitions)
-    # ES/logstash grok is a FIND (substring search), not a full-line
-    # match — es/audit greps `^%{CHAR:first_char}` against whole JSON
-    # lines. rlike/regexp_extract are find()-based already.
-    search = f"(?s:{g.pattern})"
-    ok = col.rlike(search)
-    cols: dict[str, Column] = {}
-    dup = {name for name, _, _ in g.fields
-           if sum(1 for n, _, _ in g.fields if n == name) > 1}
-    mixed = _mixed_type_fields(g.fields)
-    for name, idx, cast in g.fields:
-        if name in mixed:
-            cast = None
-        c = F.when(ok, F.regexp_extract(col, search, idx))
-        anchor = g.anchors.get(idx)
-        if anchor is not None:
-            # runtime participation: the anchor wrapper extracted ''
-            # ⇔ its optional group didn't participate — the field
-            # stays unset; a participating wrapper keeps the field's
-            # genuine (possibly empty) capture
-            c = F.when(
-                F.regexp_extract(col, search, anchor) != "", c
-            )
-        if cast:
-            # try_cast: a typed capture that fails to convert fails
-            # only that document (ingest grok), never the job (ANSI
-            # cast of a non-participating optional group's '' would)
-            c = c.try_cast(cast)
-        elif anchor is None and idx in g.conditional:
-            # no anchor (alternation branch / empty-matching wrapper):
-            # '' is treated as unset — see CompiledGrok.conditional
-            c = F.nullif(c, F.lit(""))
-        if name in dup:
-            # first branch that captured (non-null) wins
-            cols[name] = (
-                F.coalesce(cols[name], c) if name in cols else c
-            )
-        else:
-            cols[name] = c
-    return cols, ok
-
-
 def _mixed_type_fields(
     fields: list[tuple[str, int, str | None]]
 ) -> set[str]:
@@ -591,7 +554,7 @@ def _mixed_type_fields(
 
 #: 2-char field separator for single-pass extraction (RS + ETB —
 #: vanishingly unlikely in log text; a colliding row falls back to
-#: per-field extraction, see grok_single_pass)
+#: per-row ``regexp_extract``, see grok_single_pass)
 _SEP = "\x1e\x17"
 
 
@@ -601,36 +564,41 @@ def grok_single_pass(
     exprs: list[str],
     definitions: dict[str, str] | None = None,
 ) -> tuple:
-    """Single-regex-run-per-pattern extraction for the HOT PATH.
+    """Grok extraction: the program's patterns over ``source``, first
+    match wins per row (ES ingest grok).
 
-    ``grok_columns`` runs the compiled regex once per field per row
-    (one ``regexp_extract`` each) — k+1 executions of a heavyweight
-    pattern per row for a k-field program (the apache access pattern
-    has 10+ fields). Here each pattern runs ~twice per row total:
-    one ``rlike`` for the match flag and one ``regexp_replace`` that
-    rewrites the line to ``$g1\\x1e\\x17$g2…``, split into an array.
-    The arrays are MATERIALIZED as temp columns in one projection
-    (a Column reused k× is recomputed k× — CLAUDE.md gotcha), and
-    field columns are cheap ``F.get`` reads. A row whose text
-    contains the separator (array size mismatch) falls back, per row
-    and lazily via ``coalesce``, to classic ``regexp_extract``.
+    Each pattern runs ~twice per row, whatever its field count: one
+    ``rlike`` for the match flag and one ``regexp_replace`` that
+    rewrites the line to ``$g1\\x1e\\x17$g2…``, split into an array
+    (one ``regexp_extract`` per field would run a heavyweight pattern
+    k+1 times for a k-field program — the apache access pattern has
+    10+ fields). Flags and arrays are MATERIALIZED as temp columns in
+    one projection (a Column reused k× is recomputed k× — CLAUDE.md
+    gotcha), and field columns are cheap ``F.get`` reads. A row whose
+    text contains the separator (array size mismatch) falls back, per
+    row and lazily via ``coalesce``, to ``regexp_extract``.
 
     Returns ``(df2, cols, masks, any_ok, tmp_cols)`` — apply the
-    returned frame, assign ``cols`` (gated per-field by ``masks`` as
-    in :func:`grok_first_match_masked`), then drop ``tmp_cols``.
+    returned frame, assign ``cols``, then drop ``tmp_cols``. A field
+    is NULL where its pattern did not win. ``masks[name]`` is its SET
+    mask: true exactly where the winning pattern defines the field.
+    The ingest node sets only the matching pattern's fields and
+    touches nothing on a non-match or null input — a later grok over
+    another source must not null-overwrite fields an earlier step set
+    (the nats module re-groks ``nats.log.msg.info``, whose fallback
+    rows are null, after ``nats.log.msg.data`` is already captured —
+    filebeat/module/nats/log/ingest/pipeline.json).
     """
     col = F.col("`" + source + "`")
     compiled = [compile_grok(e, definitions) for e in exprs]
     tmp: dict[str, Column] = {}
     oks: list[Column] = []
     for i, g in enumerate(compiled):
-        # find() semantics (see grok_columns); the REPLACEMENT regex
-        # must still consume the whole string so the rewritten line is
-        # exactly the joined groups — lazy prefix picks the same
-        # leftmost match find() would
-        search = f"(?s:{g.pattern})"
-        full = f"^(?s:.*?){search}(?s:.*)$"
-        ok = col.rlike(search)
+        # the REPLACEMENT regex must consume the whole string so the
+        # rewritten line is exactly the joined groups — lazy prefix
+        # picks the same leftmost match the find() flag does
+        full = f"^(?s:.*?){g.search}(?s:.*)$"
+        ok = g.matches(col)
         oks.append(F.col(f"_g_ok_{i}"))
         tmp[f"_g_ok_{i}"] = ok
         if g.fields:
@@ -661,14 +629,13 @@ def grok_single_pass(
         arr = F.col(f"_g_arr_{i}") if g.fields else None
         anchor_idxs = sorted(set(g.anchors.values()))
         k = len(g.fields) + len(anchor_idxs)
-        search = f"(?s:{g.pattern})"
         dup = {n for n, _, _ in g.fields
                if sum(1 for m, _, _ in g.fields if m == n) > 1}
         mixed = _mixed_type_fields(g.fields)
 
         def _grp(pos: int, idx: int) -> Column:
             fast = F.when(F.size(arr) == k, F.get(arr, pos))
-            slow = F.when(ok, F.regexp_extract(col, search, idx))
+            slow = F.when(ok, F.regexp_extract(col, g.search, idx))
             return F.coalesce(fast, slow)
 
         pat_cols: dict[str, Column] = {}
@@ -678,16 +645,24 @@ def grok_single_pass(
             c = _grp(j, idx)
             anchor = g.anchors.get(idx)
             if anchor is not None:
-                # runtime participation via the anchor wrapper's
-                # extract (see grok_columns / CompiledGrok.anchors)
+                # runtime participation: the anchor wrapper extracted
+                # '' ⇔ its optional group didn't participate — the
+                # field stays unset; a participating wrapper keeps the
+                # field's genuine (possibly empty) capture
                 apos = len(g.fields) + anchor_idxs.index(anchor)
                 c = F.when(_grp(apos, anchor) != "", c)
             if cast:
+                # try_cast: a typed capture that fails to convert fails
+                # only that document (ingest grok), never the job (ANSI
+                # cast of a non-participating optional group's '' would)
                 c = c.try_cast(cast)
             elif anchor is None and idx in g.conditional:
-                # non-participating group → unset (see grok_columns)
+                # no anchor (alternation branch / empty-matching
+                # wrapper): '' is treated as unset — see
+                # CompiledGrok.conditional
                 c = F.nullif(c, F.lit(""))
             if name in dup:
+                # first branch that captured (non-null) wins
                 pat_cols[name] = (
                     F.coalesce(pat_cols[name], c) if name in pat_cols else c
                 )
@@ -701,52 +676,3 @@ def grok_single_pass(
                 masks[name] = gg if name not in masks else (masks[name] | gg)
         prev_not = ~ok if prev_not is None else prev_not & ~ok
     return df, out, masks, any_ok, list(tmp)
-
-
-def grok_first_match(
-    col: Column,
-    exprs: list[str],
-    definitions: dict[str, str] | None = None,
-) -> tuple[dict[str, Column], Column]:
-    """Multi-pattern program: first matching pattern wins per row
-    (ES ingest grok semantics) — per-field coalesce over alternatives
-    guarded by each pattern's match flag."""
-    cols, _, any_ok = grok_first_match_masked(col, exprs, definitions)
-    return cols, any_ok
-
-
-def grok_first_match_masked(
-    col: Column,
-    exprs: list[str],
-    definitions: dict[str, str] | None = None,
-) -> tuple[dict[str, Column], dict[str, Column], Column]:
-    """Like :func:`grok_first_match`, also returning each field's SET
-    mask: true exactly where the winning pattern defines that field.
-    The ingest node sets only the matching pattern's fields and
-    touches nothing on a non-match or null input — a later grok over
-    another source must not null-overwrite fields an earlier step set
-    (the nats module re-groks ``nats.log.msg.info``, whose fallback
-    rows are null, after ``nats.log.msg.data`` is already captured —
-    filebeat/module/nats/log/ingest/pipeline.json)."""
-    compiled = [grok_columns(col, e, definitions) for e in exprs]
-    any_ok = compiled[0][1]
-    for _, ok in compiled[1:]:
-        any_ok = any_ok | ok
-    all_fields: list[str] = []
-    for cols, _ in compiled:
-        for k in cols:
-            if k not in all_fields:
-                all_fields.append(k)
-    out: dict[str, Column] = {}
-    masks: dict[str, Column] = {}
-    prev_not: Column | None = None
-    for cols, ok in compiled:
-        gate = ok if prev_not is None else prev_not & ok
-        for k in all_fields:
-            if k in cols:
-                c = F.when(gate, cols[k])
-                out[k] = c if k not in out else F.coalesce(out[k], c)
-                g = F.coalesce(gate, F.lit(False))
-                masks[k] = g if k not in masks else (masks[k] | g)
-        prev_not = ~ok if prev_not is None else prev_not & ~ok
-    return out, masks, any_ok

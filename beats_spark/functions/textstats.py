@@ -541,7 +541,7 @@ def ngram_repetition_df(
     for them). Output columns match :func:`repetition_features`.
 
     ``materialize=True`` lineage-cuts the tokenized base (tier per
-    ``spark.beats.materialize``) so each
+    the session, ``plans/materialize.py``) so each
     per-n branch reads it instead of re-scanning + re-tokenizing
     (same trade as dedup's PPJoin shingle table): right when the
     corpus slice fits executor local disk. On a 100-TB input prefer

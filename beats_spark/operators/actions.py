@@ -72,6 +72,25 @@ class Processor:
         old = F.col(f"`{col}`") if col in df.columns else F.lit(None)
         return F.when(guard, new).otherwise(old)
 
+    def _add_flag(
+        self, df: DataFrame, guard: Column | None, hit: Column, flag: str
+    ) -> DataFrame:
+        """Add ``flag`` to the row's ``log_flags`` set where the
+        NULL-safe ``hit`` holds (the reference's ``log.flags`` tags,
+        beat.FlagField). The result is always a set union, so repeated
+        entries already in ``log_flags`` collapse to one."""
+        empty = F.array().cast("array<string>")
+        base = (
+            F.coalesce(F.col(FLAGS_FIELD), empty)
+            if FLAGS_FIELD in df.columns
+            else empty
+        )
+        err = F.when(hit, F.array(F.lit(flag))).otherwise(empty)
+        return df.withColumn(
+            FLAGS_FIELD,
+            self._guarded(df, guard, FLAGS_FIELD, F.array_union(base, err)),
+        )
+
 
 @dataclass
 class AddFields(Processor):
@@ -549,7 +568,6 @@ class TruncateFields(Processor):
 
     fields: Sequence[str]
     max_characters: int
-    tag_truncated: bool = True
 
     def apply(self, df, guard=None):
         # column refs resolve lazily by name — capture the pre-truncate
@@ -563,19 +581,9 @@ class TruncateFields(Processor):
         for f in self.fields:
             new = F.substring(_fcol(df, f), 1, self.max_characters)
             df = df.withColumn(f, self._guarded(df, guard, f, new))
-        if self.tag_truncated:
-            base = (
-                F.coalesce(F.col(FLAGS_FIELD), F.array().cast("array<string>"))
-                if FLAGS_FIELD in df.columns
-                else F.array().cast("array<string>")
-            )
-            flags = F.when(
-                F.coalesce(changed, F.lit(False)),
-                F.array_union(base, F.array(F.lit("truncated"))),
-            ).otherwise(base)
-            df = df.withColumn(
-                FLAGS_FIELD, self._guarded(df, guard, FLAGS_FIELD, flags)
-            )
+        df = self._add_flag(
+            df, guard, F.coalesce(changed, F.lit(False)), "truncated"
+        )
         return df.drop(tmp)
 
 
@@ -629,17 +637,7 @@ class DecodeJsonFields(Processor):
             )
             df = df.withColumn(tgt, self._guarded(df, guard, tgt, new))
         if self.add_error_key:
-            base = (
-                F.coalesce(F.col(FLAGS_FIELD), F.array().cast("array<string>"))
-                if FLAGS_FIELD in df.columns
-                else F.array().cast("array<string>")
-            )
-            flags = F.when(
-                failed, F.array_union(base, F.array(F.lit("json_decode_error")))
-            ).otherwise(base)
-            df = df.withColumn(
-                FLAGS_FIELD, self._guarded(df, guard, FLAGS_FIELD, flags)
-            )
+            df = self._add_flag(df, guard, failed, "json_decode_error")
         return df
 
 
@@ -713,16 +711,9 @@ class Dissect(Processor):
                 for k, c in cols.items()
             }
         )
-        err = F.when(
-            ~F.coalesce(ok, F.lit(True)), F.array(F.lit(FLAG_PARSING_ERROR))
-        ).otherwise(F.array().cast("array<string>"))
-        base = (
-            F.coalesce(F.col(FLAGS_FIELD), F.array().cast("array<string>"))
-            if FLAGS_FIELD in df.columns
-            else F.array().cast("array<string>")
+        df = self._add_flag(
+            df, guard, ~F.coalesce(ok, F.lit(True)), FLAG_PARSING_ERROR
         )
-        flags = F.array_union(base, err)
-        df = df.withColumn(FLAGS_FIELD, self._guarded(df, guard, FLAGS_FIELD, flags))
         return df.drop(*tmp_cols)
 
 
@@ -800,17 +791,8 @@ class Grok(Processor):
         # `message`) can't poison the later extracts (CLAUDE.md
         # lazy-column-resolution gotcha)
         df = df.withColumns(assigns)
-        err = F.when(
-            ~F.coalesce(ok, F.lit(True)), F.array(F.lit("grok_parsing_error"))
-        ).otherwise(F.array().cast("array<string>"))
-        base = (
-            F.coalesce(F.col(FLAGS_FIELD), F.array().cast("array<string>"))
-            if FLAGS_FIELD in df.columns
-            else F.array().cast("array<string>")
-        )
-        flags = F.array_union(base, err)
-        df = df.withColumn(
-            FLAGS_FIELD, self._guarded(df, guard, FLAGS_FIELD, flags)
+        df = self._add_flag(
+            df, guard, ~F.coalesce(ok, F.lit(True)), "grok_parsing_error"
         )
         return df.drop(*tmp_cols)
 

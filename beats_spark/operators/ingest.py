@@ -620,9 +620,13 @@ class IngestPipeline:
             # re-captures `message` out of `message`), and a lazy
             # Column re-resolved post-apply would re-test the REWRITTEN
             # value and wrongly fail every row that matched
-            from ..functions.grok import grok_first_match
+            from ..functions.grok import compile_grok
 
-            _, ok = grok_first_match(_fcol(field), list(conf["patterns"]), defs)
+            oks = [compile_grok(p, defs).matches(_fcol(field))
+                   for p in conf["patterns"]]
+            ok = oks[0]
+            for o in oks[1:]:
+                ok = ok | o
             flag = "_grok_fail"
             failed = _fcol(field).isNotNull() & ~F.coalesce(ok, F.lit(False))
             if cond is not None:

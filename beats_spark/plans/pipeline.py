@@ -12,9 +12,11 @@ This is the libbeat publisher pipeline re-expressed as one Spark job
 
 Everything before the write is lazily-composed Column expressions, so
 Catalyst handles pushdown/pruning/reordering; the write is ONE pass
-(partitioned by sink × bucket); metrics ride on Observations (no extra
-scan); the manifest aggregation re-reads only 3 columns of the written
-parquet (column pruning makes it ~free relative to the main pass).
+(partitioned by sink × bucket); the run's events-in and published
+counts ride on Observations (no extra scan); the per-sink metrics and
+the per-bucket manifest come from one re-read of only 3 columns of the
+written parquet (column pruning makes it ~free relative to the main
+pass).
 
 Scale notes (100 TB): the only shuffle is the pre-write AQE rebalance
 by (sink, part_id), which is required anyway to control output file

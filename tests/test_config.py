@@ -104,6 +104,11 @@ output:
     [
         ("processors: [{nope: {}}]", "unknown processor"),
         ("processors: [{dissect: {bogus_param: 1}}]", "bad params"),
+        (
+            "processors: [{truncate_fields: {fields: [text], "
+            "max_characters: 3, tag_truncated: false}}]",
+            "bad params",
+        ),
         ("output: {keys: [{when: {equals: {a: b}}}]}", "needs a key"),
         ("output: {keys: [{key: k, typo: 1}]}", "unknown selector rule"),
         (

@@ -6,14 +6,8 @@ from __future__ import annotations
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
-from beats_spark.functions.grok import (
-    GrokError,
-    compile_grok,
-    grok_columns,
-    grok_first_match,
-)
+from beats_spark.functions.grok import GrokError, compile_grok, grok_single_pass
 from beats_spark.operators.actions import Grok, apply_chain
 
 APACHE = (
@@ -21,6 +15,14 @@ APACHE = (
     '%{NOTSPACE:url} HTTP/%{NUMBER:ver}" %{INT:status:int} %{INT:bytes:long}'
 )
 LINE = '10.0.0.1 - frank [10/Oct/2000:13:55:36 -0700] "GET /x.gif HTTP/1.0" 200 2326'
+
+
+def _grok_rows(df, exprs):
+    """Rows of every field column plus the program's ``ok`` flag."""
+    df2, cols, _, ok, _ = grok_single_pass(df, "text", exprs)
+    return df2.select(
+        *[c.alias(k) for k, c in cols.items()], ok.alias("ok")
+    ).collect()
 
 
 class TestCompile:
@@ -65,24 +67,17 @@ class TestCompile:
     def test_module_pipeline_composites(self, spark):
         # system/syslog module grok line shape
         # (filebeat/module/system/syslog/ingest/pipeline.json)
-        from pyspark.sql import functions as F
-
-        from beats_spark.functions.grok import grok_first_match
-
         df = spark.createDataFrame(
             [("Oct 11 22:14:15 web-1 sshd[4123]: Accepted publickey",)],
             "text string",
         )
-        cols, ok = grok_first_match(
-            F.col("text"),
+        (row,) = _grok_rows(
+            df,
             [
                 "%{SYSLOGTIMESTAMP:ts} %{HOSTNAME:host} "
                 "%{SYSLOGPROG:prog}: %{GREEDYDATA:msg}"
             ],
         )
-        row = df.select(
-            *[c.alias(k) for k, c in cols.items()], ok.alias("ok")
-        ).collect()[0]
         assert row["ok"] is True
         assert row["ts"] == "Oct 11 22:14:15"
         assert row["host"] == "web-1"
@@ -96,13 +91,9 @@ class TestCompile:
 
 
 class TestSparkGrok:
-    def test_grok_columns(self, spark):
+    def test_single_pattern_fields(self, spark):
         df = spark.createDataFrame([(LINE,), ("garbage",)], "text string")
-        cols, ok = grok_columns(F.col("text"), APACHE)
-        out = df.select(
-            *[c.alias(k) for k, c in cols.items()], ok.alias("ok")
-        ).collect()
-        good, bad = out
+        good, bad = _grok_rows(df, [APACHE])
         assert good["ok"] and good["ip"] == "10.0.0.1" and good["status"] == 200
         assert good["bytes"] == 2326 and good["method"] == "GET"
         assert not bad["ok"] and bad["ip"] is None
@@ -115,10 +106,7 @@ class TestSparkGrok:
             "level=%{WORD:level} %{GREEDYDATA:rest}",
             "%{LOGLEVEL:level} %{GREEDYDATA:rest}",
         ]
-        cols, ok = grok_first_match(F.col("text"), exprs)
-        rows = df.select(
-            *[c.alias(k) for k, c in cols.items()], ok.alias("ok")
-        ).collect()
+        rows = _grok_rows(df, exprs)
         assert rows[0]["level"] == "info" and rows[0]["rest"] == "x"
         assert rows[1]["level"] == "INFO"
         assert not rows[2]["ok"] and rows[2]["level"] is None
@@ -134,33 +122,76 @@ class TestSparkGrok:
         assert "grok_parsing_error" not in rows[0]["log_flags"]
 
 
+def _re_oracle(exprs, line):
+    """The expected ``_grok_rows`` row of ``line``, from Python ``re``."""
+    compiled = [compile_grok(e) for e in exprs]
+    row = {}
+    for g in compiled:
+        for name, _, _ in g.fields:
+            row.setdefault(name, None)
+    if line is None:
+        return {**row, "ok": None}
+    for g in compiled:
+        m = re.search(f"(?s:{g.pattern})", line)
+        if not m:
+            continue
+        types = {}
+        for name, _, cast in g.fields:
+            types.setdefault(name, set()).add(cast)
+        for name, idx, cast in g.fields:
+            v = m.group(idx)
+            if len(types[name]) > 1:
+                cast = None
+            if cast and v is not None:
+                v = int(v) if re.fullmatch(r"[+-]?\d+", v) else None
+            elif v == "" and idx in g.conditional and idx not in g.anchors:
+                v = None
+            if row[name] is None:
+                row[name] = v
+        return {**row, "ok": True}
+    return {**row, "ok": False}
+
+
 class TestSinglePass:
     """grok_single_pass: one regexp_replace+split per pattern instead
     of one regexp_extract per FIELD (~3x on the 8-field apache
     pattern), with a per-row fallback when the field text contains
     the \\x1e\\x17 separator."""
 
-    def test_matches_per_field_extraction(self, spark):
-        from beats_spark.functions.grok import grok_columns, grok_single_pass
-
-        df = spark.createDataFrame(
-            [("a=1 b=two",), ("a=9 b=ten",), ("junk",), (None,)],
-            "text string",
-        )
-        expr = "a=%{INT:a:int} b=%{WORD:b}"
-        cols, ok = grok_columns(F.col("text"), expr)
-        want = df.select(
-            *[c.alias(k) for k, c in cols.items()], ok.alias("ok")
-        ).collect()
-        df2, cols2, masks, ok2, tmps = grok_single_pass(df, "text", [expr])
-        got = df2.select(
-            *[c.alias(k) for k, c in cols2.items()], ok2.alias("ok")
-        ).collect()
-        assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    def test_matches_python_re_search(self, spark):
+        """Differential: every field and match flag equals Python
+        ``re.search`` over the compiled pattern, with the module's
+        documented per-field rules applied to the match groups — a
+        non-participating group is unset, '' of a conditional group
+        without an anchor is unset, typed captures convert (or read
+        NULL), mixed-type duplicates stay strings, the first branch
+        that captured wins, and the first matching pattern wins."""
+        programs = [
+            [APACHE],
+            [r'%{INT:code:int}( "%{DATA:referrer}")?( "%{DATA:ua}")?'],
+            [
+                r"(?:Id: %{NUMBER:tid:long}|Thread_id: %{NUMBER:tid}|"
+                r"Conn: %{INT:conn:int}) %{WORD:op}"
+            ],
+            [
+                "level=%{WORD:level} %{INT:n:int}",
+                "%{LOGLEVEL:level} %{GREEDYDATA:rest}",
+            ],
+        ]
+        lines = [
+            None, "", LINE, "garbage", "200", '200 "-" "curl/8.4.0"',
+            '200 "" "x"', '404 "ref"', '500 "a\x1e\x17b" "c"',
+            "Id: 12 select", "Thread_id: 7 update", "Conn: 9 quit",
+            "Conn: x9 quit", "level=info 5", "level=info x",
+            "INFO something", "zzz",
+        ]
+        df = spark.createDataFrame([(t,) for t in lines], "text string")
+        for exprs in programs:
+            got = [r.asDict() for r in _grok_rows(df, exprs)]
+            want = [_re_oracle(exprs, t) for t in lines]
+            assert got == want, exprs
 
     def test_separator_collision_falls_back(self, spark):
-        from beats_spark.functions.grok import grok_single_pass
-
         evil = "x\x1e\x17y"  # captured text contains the separator
         df = spark.createDataFrame(
             [(f"v={evil} n=7",), ("v=ok n=8",)], "text string"

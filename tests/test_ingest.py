@@ -486,6 +486,42 @@ class TestOnFailureExecution:
         assert "convert" in rows[3]["error.message"]
         assert "_ingest_error" not in pipe.apply(df).columns
 
+    def test_grok_into_own_source_field(self, spark):
+        """A grok that captures into its own source field (kafka grok 2
+        re-captures ``message`` out of ``message``) decides failure on
+        the PRE-grok value: "started" alone no longer matches, so a
+        flag re-tested after the grok would fail every matched row."""
+        df = spark.createDataFrame(
+            [(1, "INFO started"), (2, "???"), (3, "WARN disk-full")],
+            "id long, message string",
+        )
+        pipe = IngestPipeline(
+            steps=[
+                {"grok": {
+                    "field": "message",
+                    "patterns": ["%{WORD:level} %{GREEDYDATA:message}"],
+                    "on_failure": [
+                        {"set": {"field": "error.type", "value": "nomatch"}}
+                    ],
+                }},
+            ],
+            on_failure=[
+                {"set": {"field": "error.message",
+                         "value": "{{ _ingest.on_failure_message }}"}},
+            ],
+        )
+        rows = {r["id"]: r for r in pipe.apply(df).collect()}
+        for i, level, message in [(1, "INFO", "started"),
+                                  (3, "WARN", "disk-full")]:
+            assert rows[i]["level"] == level
+            assert rows[i]["message"] == message
+            assert rows[i]["error.type"] is None
+            assert rows[i]["error.message"] is None
+        assert rows[2]["message"] == "???" and rows[2]["level"] is None
+        assert rows[2]["error.type"] == "nomatch"
+        # the per-processor handler caught the failure
+        assert rows[2]["error.message"] is None
+
     def test_ignore_failure_suppresses_record(self, spark):
         df = spark.createDataFrame([(1, "x")], "id long, n string")
         out = IngestPipeline(
