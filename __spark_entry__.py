@@ -992,14 +992,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     correctness check appears to window at the first ~50 registrations
     (r2 verdict item #1 — 4 of 54 got no row), so the previously
     driver-unverified queries register FIRST, the total is held at
-    ≤ 50, and new operators slot in ahead of the long-green tail."""
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    try:
-        from beats_spark.entry_dataops import dataops_queries_front
+    exactly 50, and new operators slot in ahead of the long-green tail.
+    The dataops rows are imported unguarded: an import error there
+    must fail loudly, not shrink the registry."""
+    from beats_spark.entry_dataops import (
+        dataops_queries_front,
+        dataops_queries_rest,
+    )
 
-        q.update(dataops_queries_front())
-    except ImportError:
-        pass
+    q = dataops_queries_front()
     q.update(
         {
             # new in r3 — register ahead of the long-green tail
@@ -1024,12 +1025,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "dissect_append": q_dissect_append,
         }
     )
-    try:
-        from beats_spark.entry_dataops import dataops_queries_rest
-
-        q.update(dataops_queries_rest())
-    except ImportError:
-        pass
+    q.update(dataops_queries_rest())
     return q
 
 
@@ -1431,10 +1427,7 @@ SELECT tool || ' ' || role AS pair, count(*) AS n_rows
 FROM transcripts GROUP BY 1
 """,
     }
-    try:
-        from beats_spark.entry_dataops import dataops_oracles
+    from beats_spark.entry_dataops import dataops_oracles
 
-        o.update(dataops_oracles())
-    except ImportError:
-        pass
+    o.update(dataops_oracles())
     return o

@@ -1873,10 +1873,6 @@ def dataops_queries_rest() -> dict[str, Callable[[SparkSession, str], DataFrame]
     }
 
 
-def dataops_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {**dataops_queries_front(), **dataops_queries_rest()}
-
-
 #: merged driver rows → their variant-column values. bench.py times
 #: each variant separately into BENCH_DETAIL.json (gate line keeps the
 #: merged-row totals), so a regression in one variant stays visible
@@ -1902,11 +1898,6 @@ _VARIANT_ROWS: dict[str, tuple[str, list[str]]] = {
     "decontaminate": ("variant", ["exact", "frac", "fuzzy"]),
     "pack_sequences": ("variant", ["contig", "hist", "zorder", "offsets", "hilbert"]),
     "heavy_hitters": ("variant", ["topk", "mg", "cms", "skew", "hq"]),
-}
-
-#: merged rows registered in __spark_entry__ itself (not dataops) —
-#: resolved lazily in variant_queries to avoid a circular import
-_ENTRY_VARIANT_ROWS: dict[str, tuple[str, list[str]]] = {
     "grok_apache": ("variant", ["parse", "date"]),
     "enrich_lookup": ("variant", ["lookup", "asof"]),
     "metrics_tallies": ("variant", ["pub", "hllg"]),
@@ -1919,8 +1910,13 @@ def variant_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     filtered on its variant column. The filter constant-folds the
     other union branches away (lit('span')='doc' → false →
     PropagateEmptyRelation drops the branch), so each timing runs
-    only that variant's plan — no separate code path to drift."""
-    all_q = dataops_queries()
+    only that variant's plan — no separate code path to drift. The
+    query registry (``__spark_entry__.queries``, which holds the
+    dataops rows too) is imported here, not at module level, because
+    it imports this module."""
+    import __spark_entry__
+
+    all_q = __spark_entry__.queries()
 
     def _one(row: str, col: str, val) -> Callable:
         def run(spark, sf_dir):
@@ -1928,34 +1924,11 @@ def variant_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return run
 
-    out = {
+    return {
         f"{row}/{val}": _one(row, col, val)
         for row, (col, vals) in _VARIANT_ROWS.items()
         for val in vals
     }
-    try:
-        import __spark_entry__ as entry_mod
-
-        entry_q = entry_mod.queries()
-
-        def _one_entry(row: str, col: str, val) -> Callable:
-            def run(spark, sf_dir):
-                return entry_q[row](spark, sf_dir).where(
-                    F.col(col) == F.lit(val)
-                )
-
-            return run
-
-        out.update(
-            {
-                f"{row}/{val}": _one_entry(row, col, val)
-                for row, (col, vals) in _ENTRY_VARIANT_ROWS.items()
-                for val in vals
-            }
-        )
-    except ImportError:
-        pass
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -691,6 +691,15 @@ class Dissect(Processor):
         return f"{self.target_prefix}{key}"
 
     def apply(self, df, guard=None):
+        df, _, tmp_cols = self.parse(df, guard)
+        return df.drop(*tmp_cols)
+
+    def parse(self, df, guard=None):
+        """:meth:`apply` without dropping the kernel's columns: returns
+        ``(df, failed, tmp_cols)``. ``failed`` reads the kernel's
+        materialized match gate, so it stays the per-row parse failure
+        of THIS step (whatever ``log_flags`` held before) until
+        ``tmp_cols`` are dropped."""
         d = compile_tokenizer(self.tokenizer)
         if not self.overwrite:
             clash = [
@@ -711,10 +720,8 @@ class Dissect(Processor):
                 for k, c in cols.items()
             }
         )
-        df = self._add_flag(
-            df, guard, ~F.coalesce(ok, F.lit(True)), FLAG_PARSING_ERROR
-        )
-        return df.drop(*tmp_cols)
+        failed = ~F.coalesce(ok, F.lit(True))
+        return self._add_flag(df, guard, failed, FLAG_PARSING_ERROR), failed, tmp_cols
 
 
 @dataclass
@@ -736,6 +743,15 @@ class Grok(Processor):
     overwrite: bool = False
 
     def apply(self, df, guard=None):
+        df, _, tmp_cols = self.parse(df, guard)
+        return df.drop(*tmp_cols)
+
+    def parse(self, df, guard=None):
+        """:meth:`apply` without dropping the kernel's columns: returns
+        ``(df, failed, tmp_cols)``. ``failed`` reads the kernel's
+        materialized per-pattern match columns, so it still tests the
+        PRE-grok source after a capture overwrote it, until
+        ``tmp_cols`` are dropped."""
         from ..functions.grok import grok_single_pass
 
         # backtick-quote: module pipelines grok dotted ECS fields
@@ -791,10 +807,8 @@ class Grok(Processor):
         # `message`) can't poison the later extracts (CLAUDE.md
         # lazy-column-resolution gotcha)
         df = df.withColumns(assigns)
-        df = self._add_flag(
-            df, guard, ~F.coalesce(ok, F.lit(True)), "grok_parsing_error"
-        )
-        return df.drop(*tmp_cols)
+        failed = ~F.coalesce(ok, F.lit(True))
+        return self._add_flag(df, guard, failed, "grok_parsing_error"), failed, tmp_cols
 
 
 @dataclass

@@ -113,11 +113,9 @@ class DnsEnrich(Processor):
                 # matching rows take the resolved value (NULL on a
                 # miss, like the unguarded path); others keep the
                 # original field
+                resolved = F.col(f"`{self.target}`")
                 return out.withColumn(
-                    self.field,
-                    F.when(guard, F.col(f"`{self.target}`")).otherwise(
-                        F.col(f"`{self.field}`")
-                    ),
+                    self.field, self._guarded(out, guard, self.field, resolved)
                 ).drop(self.target)
             return out.drop(self.field).withColumnRenamed(
                 self.target, self.field
@@ -184,16 +182,11 @@ class AsofLookup(Processor):
         )
         out = picked
         for c in payload:
+            # matching rows take the as-of value; others keep a
+            # pre-existing target column (or NULL if it's new)
             tgt = f"{self.prefix}{c}"
             new = F.col("_asof").getField(c)
-            if guard is not None:
-                # matching rows take the as-of value; others keep a
-                # pre-existing target column (or NULL if it's new)
-                old = (
-                    F.col(f"`{tgt}`") if tgt in df.columns else F.lit(None)
-                )
-                new = F.when(guard, new).otherwise(old)
-            out = out.withColumn(tgt, new)
+            out = out.withColumn(tgt, self._guarded(df, guard, tgt, new))
         return out.drop("_hist", "_asof")
 
 

@@ -26,8 +26,8 @@ Here the step list compiles to DataFrame transforms, all JVM-side:
                   provides ``ua_dim`` / ``geo_dim`` — the ingest node
                   ships regexes.yaml / GeoLite2 databases; here the
                   database IS a dimension table
-- ``on_failure`` → executed as per-row error routing (failure message
-                  column populated on exactly the failed rows)
+- ``on_failure`` → per-row error routing, per processor and pipeline
+                  level: handler steps run on exactly the failed rows
 
 Field names keep the reference's dotted ECS spelling
 (``source.address``) as FLAT column names; every internal reference is
@@ -61,10 +61,9 @@ def load_ingest_pipeline(
 
     Accepts a JSON string or an already-parsed mapping. The
     ``on_failure`` block is EXECUTED as per-row error routing (see
-    :class:`IngestPipeline`): rows whose grok/date/convert/json step
-    fails carry the first failure message, and the handler steps
-    (the modules' ``set error.message`` shape) populate their columns
-    on exactly those rows."""
+    :class:`IngestPipeline`): rows where a failable step fails carry
+    the first failure message, and the handler steps (the modules'
+    ``set error.message`` shape) run on exactly those rows."""
     import json
 
     if isinstance(source, str):
@@ -302,6 +301,9 @@ _CONVERT_TYPES = {
 #: hidden per-row column carrying the FIRST failure message while an
 #: ``on_failure`` block is in effect (dropped before returning)
 _ERR_COL = "_ingest_error"
+#: hidden per-row "this step failed" column while a step's failure is
+#: routed (materialized before the step writes its outputs)
+_FAIL_COL = "_ingest_step_failed"
 
 def painless_condition(expr: str, df: DataFrame) -> Column:
     """Compile a painless step-level ``if`` guard to a Column via the
@@ -388,12 +390,18 @@ class IngestPipeline:
     geoip steps without dimension tables — pass ``ua_dim`` /
     ``geo_dim`` to execute those too, see operators/enrich.py).
 
-    ``on_failure`` (pipeline-level handler steps, e.g. the apache
-    module's ``set error.message = {{ _ingest.on_failure_message }}``
-    — /root/reference/filebeat/module/apache/access/ingest/default.json)
-    is EXECUTED: grok/date/convert/json steps record a per-row failure
-    message (first failure wins), and after the chain the handler
-    steps populate their target columns on exactly the failed rows.
+    ``on_failure`` is EXECUTED, at both levels ES has it. Each failable
+    step (grok, dissect, date, convert, urldecode, json, rename) hands
+    its per-row failure to one route (:meth:`_route_failure`): a row
+    its ``if`` guard skips never fails; a per-processor ``on_failure``
+    runs its handler steps on the failed rows and the pipeline-level
+    block never sees that failure; otherwise ``ignore_failure`` drops
+    it, or the row records the step's message (first failure wins).
+    Pipeline-level handler steps (the apache module's ``set
+    error.message = {{ _ingest.on_failure_message }}`` —
+    filebeat/module/apache/access/ingest/default.json)
+    then run through the same executor (:meth:`_run_handlers`) on the
+    rows that recorded a failure, reading that first message.
     Documented divergence from the ingest node: subsequent steps are
     not per-row SKIPPED after a failure — they operate on the NULLs
     the failed step produced (for module programs the downstream steps
@@ -453,7 +461,10 @@ class IngestPipeline:
             else:
                 raise IngestError(f"'if' guard not supported on {name}")
         if self.on_failure:
-            df = self._apply_on_failure(df)
+            err = F.col(_ERR_COL)
+            df = self._run_handlers(
+                df, self.on_failure, err.isNotNull(), err
+            ).drop(_ERR_COL)
         if shadowed:
             df = df.withColumnRenamed(_ERR_COL + "_outer", _ERR_COL)
         return df
@@ -519,76 +530,73 @@ class IngestPipeline:
 
     # -- failure routing ------------------------------------------------
 
-    def _record_failure(
-        self, df: DataFrame, conf: Mapping[str, Any], fail: Column, msg: str
+    def _route_failure(
+        self,
+        df: DataFrame,
+        conf: Mapping[str, Any],
+        cond: Column | None,
+        failed: Column,
+        msg: str,
+        write=lambda d: d,
     ) -> DataFrame:
-        """First-failure-wins error capture (only while an on_failure
-        block is in effect; ``ignore_failure`` suppresses the record,
-        mirroring the ingest node)."""
-        if not self.on_failure or conf.get("ignore_failure"):
-            return df
+        """The one failure route of every failable step. ``failed`` is
+        the step's per-row failure read on ``df``; ``write`` assigns the
+        step's outputs. The failure is materialized BEFORE ``write``
+        runs, because a step may overwrite its own source (convert in
+        place, json into its own field, kafka's grok re-capturing
+        ``message``). A row the ``if`` guard skips never fails. A
+        per-processor ``on_failure`` catches the failure: its handler
+        steps run on the failed rows and the pipeline-level block never
+        sees it (ES ingest semantics). Otherwise ``ignore_failure``
+        drops it, or the row records ``msg`` (first failure wins)."""
+        handlers = conf.get("on_failure")
+        if not handlers and (not self.on_failure or conf.get("ignore_failure")):
+            return write(df)
+        if cond is not None:
+            failed = failed & F.coalesce(cond, F.lit(False))
+        flag = _FAIL_COL
+        while flag in df.columns:  # a failable handler step routes too
+            flag += "_"
+        df = write(df.withColumn(flag, F.coalesce(failed, F.lit(False))))
+        if handlers:
+            df = self._run_handlers(df, handlers, F.col(flag), F.lit(msg))
+        else:
+            df = self._record_failure(df, F.col(flag), msg)
+        return df.drop(flag)
+
+    @staticmethod
+    def _record_failure(df: DataFrame, fail: Column, msg: str) -> DataFrame:
         return df.withColumn(
             _ERR_COL, F.coalesce(F.col(_ERR_COL), F.when(fail, F.lit(msg)))
         )
 
-    def _apply_on_failure(self, df: DataFrame) -> DataFrame:
-        failed = F.col(_ERR_COL).isNotNull()
-        for step in self.on_failure:
+    def _run_handlers(
+        self,
+        df: DataFrame,
+        handlers: Sequence[Mapping[str, Mapping[str, Any]]],
+        fail: Column,
+        msg: Column,
+    ) -> DataFrame:
+        """Run ``on_failure`` handler steps, each guarded to the
+        ``fail`` rows; a ``value`` naming ``_ingest.on_failure_message``
+        takes the ``msg`` column whole. The one handler
+        executor, for per-processor blocks (kafka/log sets
+        ``kafka.log.component = "unknown"`` when its component grok
+        misses — filebeat/module/kafka/log/ingest/pipeline.json:22-47)
+        and the pipeline-level block alike."""
+        for step in handlers:
             if len(step) != 1:
-                raise IngestError(f"on_failure step must have one processor: {step}")
-            (name, conf), = step.items()
-            if name not in ("set", "append", "remove"):
-                raise IngestError(f"unsupported on_failure processor: {name}")
-            if name == "remove":
-                # failed rows lose the listed fields (a name may be an
-                # object prefix — cisco asa clears its _temp_ scratch
-                # object); others keep theirs, so NULL not drop. The
-                # two-homes rule applies: a field living in a kv/json
-                # MAP must be filtered out of the map as well
-                fields = conf["field"]
-                if isinstance(fields, str):
-                    fields = [fields]
-                for f in fields:
-                    for c in list(df.columns):
-                        if c == f or c.startswith(f + "."):
-                            df = df.withColumn(
-                                c, F.when(~failed, _fcol(c))
-                            )
-                    mp = _map_parent(df, f)
-                    if mp is not None:
-                        parent, key, residual = mp
-                        full = key + "." + residual if residual else key
-                        df = df.withColumn(
-                            parent,
-                            F.when(~failed, _fcol(parent)).otherwise(
-                                F.map_filter(
-                                    _fcol(parent),
-                                    lambda k, _: (k != full)
-                                    & ~k.startswith(full + "."),
-                                )
-                            ),
-                        )
-                continue
-            field = conf["field"]
-            val = conf["value"]
-            if isinstance(val, str) and "_ingest.on_failure_message" in val:
-                v: Column = F.col(_ERR_COL)
-            else:
-                v = F.lit(val)
-            existing = (
-                _fcol(field)
-                if field in df.columns
-                else F.lit(None).cast("string")
-            )
-            if name == "append":
-                v = F.array(v)
-                existing = (
-                    _fcol(field)
-                    if field in df.columns
-                    else F.lit(None).cast("array<string>")
+                raise IngestError(
+                    f"on_failure step must have one processor: {step}"
                 )
-            df = df.withColumn(field, F.when(failed, v).otherwise(existing))
-        return df.drop(_ERR_COL)
+            (name, conf), = step.items()
+            if name not in self._GUARDABLE:
+                raise IngestError(f"unsupported on_failure processor: {name}")
+            val = conf.get("value")
+            if isinstance(val, str) and "_ingest.on_failure_message" in val:
+                conf = {**conf, "value": msg}  # F.lit passes a Column through
+            df = getattr(self, f"_step_{name}")(df, conf, fail)
+        return df
 
     # -- steps ----------------------------------------------------------
 
@@ -611,77 +619,24 @@ class IngestPipeline:
             tmp = "_grok_src"
             df = df.withColumn(tmp, src)
             field = tmp
-        defs = dict(conf.get("pattern_definitions") or {})
-        handlers = conf.get("on_failure")
-        flag = None
-        if self.on_failure or handlers:
-            # the failure flag must be MATERIALIZED before the grok
-            # runs: grok overwrites its own source field (kafka grok 2
-            # re-captures `message` out of `message`), and a lazy
-            # Column re-resolved post-apply would re-test the REWRITTEN
-            # value and wrongly fail every row that matched
-            from ..functions.grok import compile_grok
-
-            oks = [compile_grok(p, defs).matches(_fcol(field))
-                   for p in conf["patterns"]]
-            ok = oks[0]
-            for o in oks[1:]:
-                ok = ok | o
-            flag = "_grok_fail"
-            failed = _fcol(field).isNotNull() & ~F.coalesce(ok, F.lit(False))
-            if cond is not None:
-                # a guarded-out row can never fail this step
-                failed = failed & F.coalesce(cond, F.lit(False))
-            df = df.withColumn(flag, failed)
-        out = Grok(
+        out, failed, tmp_cols = Grok(
             patterns=list(conf["patterns"]),
             field=field,
-            pattern_definitions=defs,
+            pattern_definitions=dict(conf.get("pattern_definitions") or {}),
             # ingest-node grok overwrites existing fields (31/42
             # module pipelines re-grok fields earlier steps created)
             overwrite=True,
-        ).apply(df, guard=cond)
-        if flag is not None:
-            fail = F.col(flag)
-            msg = f"Provided Grok expressions do not match field [{field}]"
-            if handlers:
-                # a per-processor handler CATCHES the failure: the
-                # handler steps run against just the failing documents
-                # and the pipeline continues — the pipeline-level
-                # on_failure never sees it (ES ingest semantics)
-                out = self._run_handlers(out, handlers, fail, msg)
-            else:
-                out = self._record_failure(out, conf, fail, msg)
-            out = out.drop(flag)
-        return out.drop(tmp) if tmp else out
-
-    def _run_handlers(
-        self,
-        df: DataFrame,
-        handlers: Sequence[Mapping[str, Mapping[str, Any]]],
-        fail: Column,
-        msg: str,
-    ) -> DataFrame:
-        """Per-processor ``on_failure``: run each handler step guarded
-        to the failing documents (kafka/log sets ``kafka.log.component
-        = "unknown"`` when its component grok misses and removes the
-        half-parsed trace object when the trace grok misses —
-        filebeat/module/kafka/log/ingest/pipeline.json:22-47)."""
-        for step in handlers:
-            if len(step) != 1:
-                raise IngestError(
-                    f"on_failure step must have one processor: {step}"
-                )
-            (name, conf), = step.items()
-            if name not in self._GUARDABLE:
-                raise IngestError(
-                    f"unsupported per-processor on_failure: {name}"
-                )
-            val = conf.get("value")
-            if isinstance(val, str) and "_ingest.on_failure_message" in val:
-                conf = {**conf, "value": msg}
-            df = getattr(self, f"_step_{name}")(df, conf, fail)
-        return df
+        ).parse(df, guard=cond)
+        # `failed` reads the kernel's materialized match columns, so it
+        # still tests the PRE-grok value: grok may overwrite its own
+        # source (kafka grok 2 re-captures `message` out of `message`),
+        # and a test re-run on the rewritten value would fail every row
+        # that matched. Route it before those columns are dropped.
+        out = self._route_failure(
+            out, conf, cond, failed,
+            f"Provided Grok expressions do not match field [{conf['field']}]",
+        )
+        return out.drop(*tmp_cols, *([tmp] if tmp else []))
 
     def _step_remove(
         self, df: DataFrame, conf: Mapping[str, Any], cond: Column | None = None
@@ -689,26 +644,37 @@ class IngestPipeline:
         fields = conf["field"]
         if isinstance(fields, str):
             fields = [fields]
+        if cond is not None:
+            # guarded remove: NULL is our per-row "absent". A name may
+            # be an object prefix (cisco asa's on_failure clears its
+            # _temp_ scratch object), and the two-homes rule applies:
+            # a field in a kv/json MAP leaves the map too
+            for f in fields:
+                cleared = {
+                    c: F.when(cond, F.lit(None)).otherwise(_fcol(c))
+                    for c in df.columns
+                    if c == f or c.startswith(f + ".")
+                }
+                mp = _map_parent(df, f)
+                if mp is not None:
+                    parent, key, residual = mp
+                    full = key + "." + residual if residual else key
+                    cleared[parent] = F.when(
+                        cond,
+                        F.map_filter(
+                            _fcol(parent),
+                            lambda k, _: (k != full) & ~k.startswith(full + "."),
+                        ),
+                    ).otherwise(_fcol(parent))
+                df = df.withColumns(cleared)
+            return df
         missing = [f for f in fields if not _has_field(df, f)]
-        if missing and not (
-            conf.get("ignore_missing") or conf.get("ignore_failure") or cond is not None
-        ):
+        if missing and not (conf.get("ignore_missing") or conf.get("ignore_failure")):
             raise IngestError(f"remove field missing: {missing}")
-        present = [f for f in fields if _has_field(df, f)]
-        if not present:
-            return df
-        if cond is None:
-            for f in present:
+        for f in fields:
+            if f not in missing:
                 df = _delete_field(df, f)
-            return df
-        # guarded remove: NULL is our per-row "absent"
-        return df.withColumns(
-            {
-                f: F.when(cond, F.lit(None)).otherwise(_fcol(f))
-                for f in present
-                if f in df.columns
-            }
-        )
+        return df
 
     def _step_rename(self, df: DataFrame, conf: Mapping[str, Any]) -> DataFrame:
         src, dst = conf["field"], conf["target_field"]
@@ -754,22 +720,19 @@ class IngestPipeline:
         # source clears; non-null targets are per-row failures.
         existing = _fcol(dst)
         fail = val.isNotNull() & existing.isNotNull()
-        df = self._record_failure(
-            df, conf, fail, f"field [{dst}] already exists"
-        )
-        merged = F.coalesce(existing, val)
+        moved = {dst: F.coalesce(existing, val)}
         if src in df.columns:
-            return df.withColumns(
-                {dst: merged, src: F.when(fail, _fcol(src))}
-            )
-        mp = _map_parent(df, src)
-        assert mp is not None
-        parent, key, residual = mp
-        full = key + "." + residual if residual else key
-        cleared = F.map_filter(_fcol(parent), lambda k, _: k != full)
-        return df.withColumns(
-            {dst: merged,
-             parent: F.when(fail, _fcol(parent)).otherwise(cleared)}
+            moved[src] = F.when(fail, _fcol(src))
+        else:
+            mp = _map_parent(df, src)
+            assert mp is not None
+            parent, key, residual = mp
+            full = key + "." + residual if residual else key
+            cleared = F.map_filter(_fcol(parent), lambda k, _: k != full)
+            moved[parent] = F.when(fail, _fcol(parent)).otherwise(cleared)
+        return self._route_failure(
+            df, conf, None, fail, f"field [{dst}] already exists",
+            lambda d: d.withColumns(moved),
         )
 
     def _declared_children(self, parent: str, key: str) -> list[str]:
@@ -844,11 +807,6 @@ class IngestPipeline:
         )
         ts = _date_parse(src, formats, tz_col, self.default_year)
         fail = src.isNotNull() & ts.isNull()
-        df = self._record_failure(
-            df, conf,
-            fail if cond is None else (cond & fail),
-            f"unable to parse date [{field}]",
-        )
         prior = _read_field(df, target)
         if prior is not None:
             # a failed (or missing-source) row leaves the document
@@ -857,7 +815,10 @@ class IngestPipeline:
             # (santa: 2nd date over the disk-pattern-only `timestamp`
             # must not null-overwrite @timestamp set from process.start)
             ts = F.coalesce(ts, prior.try_cast("timestamp"))
-        return self._put(df, target, ts, cond)
+        return self._route_failure(
+            df, conf, cond, fail, f"unable to parse date [{field}]",
+            lambda d: self._put(d, target, ts, cond),
+        )
 
     def _step_convert(
         self, df: DataFrame, conf: Mapping[str, Any], cond: Column | None = None
@@ -875,13 +836,11 @@ class IngestPipeline:
         # try_cast: ANSI cast aborts the whole job on one malformed
         # value; ES convert fails only the single document (NULL here)
         cast = src.try_cast(_CONVERT_TYPES[typ])
-        fail = src.isNotNull() & cast.isNull()
-        df = self._record_failure(
-            df, conf,
-            fail if cond is None else (cond & fail),
+        return self._route_failure(
+            df, conf, cond, src.isNotNull() & cast.isNull(),
             f"unable to convert [{field}] to {typ}",
+            lambda d: self._put(d, target, cast, cond),
         )
-        return self._put(df, target, cast, cond)
 
     def _step_lowercase(
         self, df: DataFrame, conf: Mapping[str, Any], cond: Column | None = None
@@ -922,13 +881,11 @@ class IngestPipeline:
             raise IngestError(f"urldecode field missing: {field}")
         target = conf.get("target_field", field)
         dec = F.try_url_decode(col)
-        fail = col.isNotNull() & dec.isNull()
-        df = self._record_failure(
-            df, conf,
-            fail if cond is None else (cond & fail),
+        return self._route_failure(
+            df, conf, cond, col.isNotNull() & dec.isNull(),
             f"unable to URL-decode [{field}]",
+            lambda d: self._put(d, target, dec, cond),
         )
-        return self._put(df, target, dec, cond)
 
     def _step_dissect(
         self, df: DataFrame, conf: Mapping[str, Any], cond: Column | None = None
@@ -953,43 +910,18 @@ class IngestPipeline:
                     return df
                 raise IngestError(f"dissect field missing: {field}")
             df = df.withColumn(field, src)
-        from .actions import FLAG_PARSING_ERROR, FLAGS_FIELD
-
-        snap = None
-        if self.on_failure and FLAGS_FIELD in df.columns:
-            # the flag array ACCUMULATES across the pipeline's many
-            # dissects (cisco asa runs ~46) — materialize whether the
-            # error flag predates this step, so only THIS step's
-            # outcome records a failure (first-failure-wins keeps the
-            # earlier step's message either way)
-            snap = "_dissect_preflag"
-            df = df.withColumn(
-                snap,
-                F.coalesce(
-                    F.array_contains(
-                        F.col(FLAGS_FIELD), FLAG_PARSING_ERROR
-                    ),
-                    F.lit(False),
-                ),
-            )
-        out = Dissect(
+        # `failed` is the kernel's own match gate for THIS step: the
+        # `log_flags` array accumulates across a pipeline's dissects
+        # (cisco asa runs ~46), so it cannot tell which one failed
+        out, failed, tmp_cols = Dissect(
             tokenizer=conf["pattern"], field=field, target_prefix="",
             overwrite=True,
-        ).apply(df, guard=cond)
-        if self.on_failure:
-            fail = F.array_contains(
-                F.col(FLAGS_FIELD), FLAG_PARSING_ERROR
-            )
-            if snap is not None:
-                fail = fail & ~F.col(snap)
-            if cond is not None:
-                # guarded-out rows can never fail this step
-                fail = fail & F.coalesce(cond, F.lit(False))
-            out = self._record_failure(
-                out, conf, fail,
-                f"Unable to find match for dissect pattern on [{field}]",
-            )
-        return out.drop(snap) if snap else out
+        ).parse(df, guard=cond)
+        out = self._route_failure(
+            out, conf, cond, failed,
+            f"Unable to find match for dissect pattern on [{field}]",
+        )
+        return out.drop(*tmp_cols)
 
     def _step_dot_expander(
         self, df: DataFrame, conf: Mapping[str, Any]
@@ -1065,22 +997,21 @@ class IngestPipeline:
         parsed = F.from_json(
             col, schema if schema else "map<string,string>"
         )
+
+        def write(df: DataFrame) -> DataFrame:
+            if not schema:
+                return df.withColumn(target, parsed)
+            df = df.withColumn("_json_tmp", parsed)
+            for sub in df.schema["_json_tmp"].dataType.fieldNames():
+                df = df.withColumn(f"{target}.{sub}", F.col("_json_tmp")[sub])
+            return df.drop("_json_tmp")
+
         # from_json returns an all-NULL struct (not NULL) for malformed
         # input under a struct schema — probe validity separately
-        df = self._record_failure(
-            df, conf,
-            col.isNotNull() & F.try_parse_json(col).isNull(),
-            f"unable to parse JSON [{field}]",
+        return self._route_failure(
+            df, conf, None, col.isNotNull() & F.try_parse_json(col).isNull(),
+            f"unable to parse JSON [{field}]", write,
         )
-        if not schema:
-            return df.withColumn(target, parsed)
-        df = df.withColumn("_json_tmp", parsed)
-        from pyspark.sql.types import StructType
-
-        struct: StructType = df.schema["_json_tmp"].dataType  # type: ignore[assignment]
-        for sub in struct.fieldNames():
-            df = df.withColumn(f"{target}.{sub}", F.col("_json_tmp")[sub])
-        return df.drop("_json_tmp")
 
     def _step_kv(self, df: DataFrame, conf: Mapping[str, Any]) -> DataFrame:
         """``kv`` splits key=value text (ingest-common KeyValueProcessor,

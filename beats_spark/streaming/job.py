@@ -12,9 +12,12 @@ registrar checkpoints. The Spark-native restatement:
   session windows               ← multiline timeout flush (5 s gap)
 
 ``foreachBatch`` reuses the exact batch router (one partitionBy write
-per micro-batch), so batch and streaming share one code path — and
-the streaming checkpoint gives the same at-least-once + idempotent
-replace contract the manifest gives the batch job.
+per micro-batch), so batch and streaming share one code path. The
+contract is weaker than the batch job's: the checkpoint makes delivery
+at-least-once, but ``process_batch`` APPENDS and writes no manifest, so
+a micro-batch replayed after a failure appends its rows a second time.
+The batch job's idempotent replace (manifest-gated, per bucket) has no
+streaming counterpart yet.
 """
 
 from __future__ import annotations

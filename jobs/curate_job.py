@@ -91,6 +91,7 @@ def curate(
         pack_sequences,
         stratified_sample,
     )
+    from beats_spark.plans.materialize import materialize
 
     t0 = time.time()
     from beats_spark.operators.clean import clean_text, html_strip
@@ -277,7 +278,7 @@ def curate(
     ]
     # flags feed one funnel agg + the audit write + the kept filter:
     # materialize once instead of re-running the dup machinery 3x
-    flags = flags.localCheckpoint()
+    flags = materialize(flags)
 
     # -- one pass: per-gate counts + cumulative funnel -------------------
     cum = None

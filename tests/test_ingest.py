@@ -461,6 +461,34 @@ class TestScriptStep:
             ).apply(df)
 
 
+SET_ERROR_MESSAGE = [
+    {"set": {"field": "error.message",
+             "value": "{{ _ingest.on_failure_message }}"}},
+]
+
+#: each failable step: (step, passing value, failing value, check of
+#: the passing row). Rename fails where its target is already set.
+FAILABLE = {
+    "grok": ({"grok": {"field": "msg",
+                       "patterns": ["%{WORD:level} %{GREEDYDATA:rest}"]}},
+             "INFO up", "???", lambda r: r["level"] == "INFO"),
+    "dissect": ({"dissect": {"field": "msg", "pattern": "%{level} %{rest}"}},
+                "INFO up", "???", lambda r: r["level"] == "INFO"),
+    "date": ({"date": {"field": "msg", "target_field": "ts",
+                       "formats": ["yyyy-MM-dd"]}},
+             "2024-01-02", "???", lambda r: r["ts"] is not None),
+    "convert": ({"convert": {"field": "msg", "type": "long",
+                             "target_field": "n"}},
+                "42", "???", lambda r: r["n"] == 42),
+    "urldecode": ({"urldecode": {"field": "msg", "target_field": "url"}},
+                  "a%20b", "%zz", lambda r: r["url"] == "a b"),
+    "json": ({"json": {"field": "msg", "target_field": "j"}},
+             '{"a": "1"}', "???", lambda r: r["j"] == {"a": "1"}),
+    "rename": ({"rename": {"field": "msg", "target_field": "taken"}},
+               "x", "y", lambda r: (r["taken"], r["msg"]) == ("x", None)),
+}
+
+
 class TestOnFailureExecution:
     def test_first_failure_wins_and_handler_routes(self, spark):
         df = spark.createDataFrame(
@@ -531,6 +559,138 @@ class TestOnFailureExecution:
                                  "value": "{{ _ingest.on_failure_message }}"}}],
         ).apply(df)
         assert out.collect()[0]["error.message"] is None
+
+    def test_on_failure_adds_no_regex_pass(self, spark, lines):
+        """Grok's failure is the kernel's own materialized match
+        column: a pipeline-level on_failure must not re-run a pattern."""
+
+        def rlikes(on_failure):
+            out = IngestPipeline(APACHE_STEPS, on_failure=on_failure).apply(lines)
+            return out._jdf.queryExecution().executedPlan().toString().count("RLIKE")
+
+        assert rlikes(()) == rlikes(SET_ERROR_MESSAGE) == 2
+
+    @pytest.mark.parametrize("name", sorted(FAILABLE))
+    def test_per_processor_handler_catches_failure(self, spark, name):
+        step, good, bad, check = FAILABLE[name]
+        (proc, conf), = step.items()
+        handlers = [
+            {"set": {"field": "error.type", "value": "handled"}},
+            {"set": {"field": "error.reason",
+                     "value": "{{ _ingest.on_failure_message }}"}},
+        ]
+        df = spark.createDataFrame(
+            [(1, good, None), (2, bad, "taken")],
+            "id long, msg string, taken string",
+        )
+        out = IngestPipeline(
+            steps=[{proc: {**conf, "on_failure": handlers}}],
+            on_failure=SET_ERROR_MESSAGE,
+        ).apply(df)
+        assert not [c for c in out.columns if c.startswith("_ingest")]
+        rows = {r["id"]: r for r in out.collect()}
+        assert rows[2]["error.type"] == "handled"
+        # the handler reads THIS step's message, and the pipeline-level
+        # block never sees a failure a handler caught
+        assert rows[2]["error.reason"]
+        assert rows[2]["error.message"] is None
+        assert check(rows[1])
+        assert rows[1]["error.type"] is None
+        assert rows[1]["error.reason"] is None
+        assert rows[1]["error.message"] is None
+
+    def test_handler_fires_on_a_row_an_earlier_dissect_failed(self, spark):
+        df = spark.createDataFrame([(1, "a b"), (2, "???")], "id long, msg string")
+        out = IngestPipeline(
+            steps=[
+                {"dissect": {"field": "msg", "pattern": "%{x} %{y}"}},
+                {"dissect": {"field": "msg", "pattern": "%{p} %{q}",
+                             "on_failure": [{"set": {"field": "error.type",
+                                                     "value": "second"}}]}},
+            ],
+            on_failure=SET_ERROR_MESSAGE,
+        ).apply(df)
+        rows = {r["id"]: r for r in out.collect()}
+        assert rows[2]["error.type"] == "second"
+        assert "dissect" in rows[2]["error.message"]  # the first step's
+        assert rows[2]["log_flags"] == ["dissect_parsing_error"]
+        assert (rows[1]["p"], rows[1]["q"]) == ("a", "b")
+        assert rows[1]["error.type"] is None and rows[1]["error.message"] is None
+
+    def test_guarded_out_row_never_fails(self, spark):
+        """cisco asa's shape: a dissect behind an ``if`` guard records
+        a failure only on rows the guard selects."""
+        df = spark.createDataFrame(
+            [(1, "a b", "x"), (2, "???", "x"), (3, "???", "y")],
+            "id long, msg string, kind string",
+        )
+        out = IngestPipeline(
+            steps=[{"dissect": {"field": "msg", "pattern": "%{p} %{q}",
+                                "if": "ctx.kind == 'x'"}}],
+            on_failure=SET_ERROR_MESSAGE,
+        ).apply(df)
+        errors = {r["id"]: r["error.message"] for r in out.collect()}
+        assert errors[1] is None and errors[3] is None
+        assert "dissect" in errors[2]
+
+    def test_failing_handler_step_routes_its_own_failure(self, spark):
+        """A failable step inside a per-processor handler routes its
+        failure through the same path while the outer step's failure
+        column is still in use."""
+        df = spark.createDataFrame(
+            [(1, "a b", "x"), (2, "???", "x")], "id long, msg string, n string"
+        )
+        out = IngestPipeline(
+            steps=[{"grok": {
+                "field": "msg", "patterns": ["%{WORD:a} %{WORD:b}"],
+                "on_failure": [
+                    {"convert": {"field": "n", "type": "long",
+                                 "target_field": "n_long"}},
+                    {"set": {"field": "error.type",
+                             "value": "{{ _ingest.on_failure_message }}"}},
+                ],
+            }}],
+            on_failure=SET_ERROR_MESSAGE,
+        ).apply(df)
+        assert not [c for c in out.columns if c.startswith("_ingest")]
+        rows = {r["id"]: r for r in out.collect()}
+        assert rows[2]["error.message"] == "unable to convert [n] to long"
+        assert rows[2]["error.type"].startswith("Provided Grok expressions")
+        assert (rows[1]["a"], rows[1]["error.type"]) == ("a", None)
+        assert rows[1]["error.message"] is None
+
+    def test_pipeline_level_remove_and_append(self, spark):
+        """Pipeline-level ``remove`` clears an object prefix's dotted
+        children and map-backed keys (with their dotted children) on
+        failed rows only; ``append`` adds to an existing array, as ES
+        does."""
+        df = spark.createDataFrame(
+            [(i, n, "1", "2", "a=1 b=2 c.d=3", ["x"])
+             for i, n in [(1, "5"), (2, "bad")]],
+            "id long, n string, `_temp_.a` string, `_temp_.b` string, "
+            "kvs string, tags array<string>",
+        )
+        out = IngestPipeline(
+            steps=[
+                {"kv": {"field": "kvs", "target_field": "kvm",
+                        "field_split": " ", "value_split": "="}},
+                {"convert": {"field": "n", "type": "long"}},
+            ],
+            on_failure=[
+                {"remove": {"field": ["_temp_", "kvm.a", "kvm.c"]}},
+                {"append": {"field": "tags", "value": "_failed"}},
+                *SET_ERROR_MESSAGE,
+            ],
+        ).apply(df)
+        cols = ["n", "_temp_.a", "_temp_.b", "kvm", "tags", "error.message"]
+        rows = {r["id"]: tuple(r[c] for c in cols) for r in out.collect()}
+        assert rows[1] == (
+            5, "1", "2", {"a": "1", "b": "2", "c.d": "3"}, ["x"], None
+        )
+        assert rows[2] == (
+            None, None, None, {"b": "2"}, ["x", "_failed"],
+            "unable to convert [n] to long",
+        )
 
 
 @pytest.mark.skipif(

@@ -624,6 +624,35 @@ class TestMaterializeTiers:
         assert out.count() == 100
         out.unpersist()
 
+    def test_no_lineage_cut_outside_materialize(self):
+        """Program code cuts lineage only through ``materialize``, so
+        the tier follows the session: a bare ``localCheckpoint()`` on a
+        cluster fails the job on executor loss instead of recomputing."""
+        import ast
+        from pathlib import Path
+
+        repo = Path(__file__).resolve().parents[1]
+        files = [
+            *sorted((repo / "beats_spark").rglob("*.py")),
+            *sorted((repo / "jobs").rglob("*.py")),
+            repo / "__spark_entry__.py",
+        ]
+        assert len(files) > 20
+        home = repo / "beats_spark" / "plans" / "materialize.py"
+        offenders = [
+            f"{f.relative_to(repo)}:{node.lineno}"
+            for f in files
+            if f != home
+            for node in ast.walk(ast.parse(f.read_text(), filename=str(f)))
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("localCheckpoint", "checkpoint")
+        ]
+        assert offenders == [], (
+            "cut lineage with beats_spark.plans.materialize.materialize, "
+            f"not a bare checkpoint: {offenders}"
+        )
+
 
 class TestHotBucketCapPlans:
     def test_lsh_anchor_window_shares_the_band_exchange(self, spark):
