@@ -115,10 +115,6 @@ def _map_parent(df: DataFrame, field: str) -> tuple[str, str, str] | None:
     return None
 
 
-def _has_field(df: DataFrame, field: str) -> bool:
-    return field in df.columns or _map_parent(df, field) is not None
-
-
 def _read_field(df: DataFrame, field: str) -> Column | None:
     """Field read with map fallback: a flat column wins; else the
     longest map-column prefix supplies the value. The remaining path
@@ -146,21 +142,32 @@ def _read_field(df: DataFrame, field: str) -> Column | None:
     return mapped if flat is None else F.coalesce(flat, mapped)
 
 
-def _delete_field(df: DataFrame, field: str) -> DataFrame:
-    """Remove a field: drop the flat column, or filter the key out of
-    its backing map (rename/remove semantics over kv/json targets).
-    For a dotted remaining path only the literally-dotted key is
-    removable (a value nested inside another key's JSON text stays)."""
-    if field in df.columns:
-        df = df.drop(_fcol(field))
+def _object_homes(
+    df: DataFrame, field: str
+) -> tuple[list[str], tuple[str, Column] | None]:
+    """Where ``field`` lives as an ES object, for ``remove``: its flat
+    column and every ``field.*`` child column (cisco asa's ``_temp_``
+    scratch object is flat ``_temp_.a``, ``_temp_.b``), and, when a
+    kv/json map backs it, ``(map_column, map without the key and its
+    dotted children)`` — the two-homes rule: a field in a map leaves
+    the map too. Nothing in either home means the field is absent."""
+    flat = [c for c in df.columns if c == field or c.startswith(field + ".")]
     mp = _map_parent(df, field)
     if mp is None:
-        return df
+        return flat, None
     parent, key, residual = mp
     full = key + "." + residual if residual else key
-    return df.withColumn(
-        parent, F.map_filter(_fcol(parent), lambda k, _: k != full)
+    return flat, (
+        parent,
+        F.map_filter(
+            _fcol(parent), lambda k, _: (k != full) & ~k.startswith(full + ".")
+        ),
     )
+
+
+def _has_field(df: DataFrame, field: str) -> bool:
+    flat, mp = _object_homes(df, field)
+    return bool(flat) or mp is not None
 
 
 #: joda-time pattern fragments whose java.time spelling differs.
@@ -644,36 +651,27 @@ class IngestPipeline:
         fields = conf["field"]
         if isinstance(fields, str):
             fields = [fields]
-        if cond is not None:
-            # guarded remove: NULL is our per-row "absent". A name may
-            # be an object prefix (cisco asa's on_failure clears its
-            # _temp_ scratch object), and the two-homes rule applies:
-            # a field in a kv/json MAP leaves the map too
-            for f in fields:
-                cleared = {
-                    c: F.when(cond, F.lit(None)).otherwise(_fcol(c))
-                    for c in df.columns
-                    if c == f or c.startswith(f + ".")
-                }
-                mp = _map_parent(df, f)
-                if mp is not None:
-                    parent, key, residual = mp
-                    full = key + "." + residual if residual else key
-                    cleared[parent] = F.when(
-                        cond,
-                        F.map_filter(
-                            _fcol(parent),
-                            lambda k, _: (k != full) & ~k.startswith(full + "."),
-                        ),
-                    ).otherwise(_fcol(parent))
-                df = df.withColumns(cleared)
-            return df
-        missing = [f for f in fields if not _has_field(df, f)]
-        if missing and not (conf.get("ignore_missing") or conf.get("ignore_failure")):
-            raise IngestError(f"remove field missing: {missing}")
+        if cond is None:
+            missing = [f for f in fields if not _has_field(df, f)]
+            if missing and not (
+                conf.get("ignore_missing") or conf.get("ignore_failure")
+            ):
+                raise IngestError(f"remove field missing: {missing}")
         for f in fields:
-            if f not in missing:
-                df = _delete_field(df, f)
+            flat, mp = _object_homes(df, f)
+            if cond is None:
+                df = df.drop(*flat)
+                if mp is not None:
+                    df = df.withColumn(*mp)
+                continue
+            # guarded remove: NULL is our per-row "absent"
+            cleared = {
+                c: F.when(cond, F.lit(None)).otherwise(_fcol(c)) for c in flat
+            }
+            if mp is not None:
+                parent, kept = mp
+                cleared[parent] = F.when(cond, kept).otherwise(_fcol(parent))
+            df = df.withColumns(cleared)
         return df
 
     def _step_rename(self, df: DataFrame, conf: Mapping[str, Any]) -> DataFrame:
@@ -711,7 +709,11 @@ class IngestPipeline:
                     return df.withColumns(moved)
             # map-backed source: materialize the value as a flat
             # column, then delete the key from the map
-            return _delete_field(df.withColumn(dst, val), src)
+            parent, key, residual = mp
+            full = key + "." + residual if residual else key
+            return df.withColumn(dst, val).withColumn(
+                parent, F.map_filter(_fcol(parent), lambda k, _: k != full)
+            )
         # target column already in the schema. ES rename is per-DOC:
         # it fails only for docs where the target field is non-null
         # (multiple branch-guarded renames share one target in the

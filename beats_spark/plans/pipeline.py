@@ -12,11 +12,11 @@ This is the libbeat publisher pipeline re-expressed as one Spark job
 
 Everything before the write is lazily-composed Column expressions, so
 Catalyst handles pushdown/pruning/reordering; the write is ONE pass
-(partitioned by sink × bucket); the run's events-in and published
-counts ride on Observations (no extra scan); the per-sink metrics and
-the per-bucket manifest come from one re-read of only 3 columns of the
-written parquet (column pruning makes it ~free relative to the main
-pass).
+(partitioned by sink × bucket); the run's events-in, published and
+failed counts ride on Observations (no extra scan); the per-sink
+metrics and the per-bucket manifest come from one re-read of only 3
+columns of the written parquet (column pruning makes it ~free relative
+to the main pass).
 
 Scale notes (100 TB): the only shuffle is the pre-write AQE rebalance
 by (sink, part_id), which is required anyway to control output file
@@ -145,7 +145,16 @@ class Pipeline:
         routed = with_row_hash(routed)
 
         obs_out = Observation(f"events_out_{run_id}_{uuid.uuid4().hex[:6]}")
-        routed = routed.observe(obs_out, F.count(F.lit(1)).alias("n"))
+        # a failed event is a published row a processor flagged
+        # (dissect/grok parse error, json decode error, truncation)
+        failed = (
+            F.count_if(F.size("log_flags") > 0)
+            if "log_flags" in routed.columns
+            else F.lit(0)
+        )
+        routed = routed.observe(
+            obs_out, F.count(F.lit(1)).alias("n"), failed.alias("failed")
+        )
 
         data_root = f"{output_root}/data"
         write_fanout(routed, data_root, mode="overwrite")
@@ -159,9 +168,10 @@ class Pipeline:
         except Exception:
             events_total = 0
         try:
-            events_published = int(obs_out.get["n"])
+            out = obs_out.get
+            events_published, events_failed = int(out["n"]), int(out["failed"])
         except Exception:
-            events_published = 0
+            events_published = events_failed = 0
         events_filtered = events_total - events_published
 
         # ONE column-pruned re-read of the written parquet feeds both
@@ -223,7 +233,7 @@ class Pipeline:
         metrics = local_frame(
             spark,
             [
-                (run_id, s, events_total, events_filtered, n, 0)
+                (run_id, s, events_total, events_filtered, n, events_failed)
                 for s, n in sorted(by_sink.items())
             ],
             METRICS_SCHEMA,

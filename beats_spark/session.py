@@ -6,6 +6,17 @@ AQE (incl. skew-join splitting), Arrow for pandas UDFs, UTC session
 time zone (required for DuckDB-oracle comparison), and shuffle
 partitions sized to parallelism instead of the 200 default.
 
+``file:`` paths go through ``jvm/NioLocalFileSystem.java``, Hadoop's
+checksummed local filesystem with permissions set through
+``java.nio``. Without the native ``libhadoop`` the stock one forks a
+``chmod`` for every file, ``.crc`` sidecar and directory a write
+creates (≈430 per ``Pipeline.run`` of the 16-bucket job). The class is
+compiled once with the JDK's ``javac`` into a jar under the user cache
+directory, keyed by the source's hash, and put on the driver
+classpath. Without a JDK, or when a driver JVM without the class is
+already running (``spark-submit``), the session keeps the stock
+filesystem and logs one warning.
+
 ``local_frame`` is the one way program code turns driver-side rows
 (dims, manifest and metrics rows, query sets) into a DataFrame, and
 ``hadoop_fs`` the one way it deletes or renames output directories.
@@ -13,16 +24,32 @@ partitions sized to parallelism instead of the 200 default.
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import logging
 import os
+import pkgutil
+import shutil
+import subprocess
+import tempfile
+import zipfile
+from pathlib import Path
 from typing import Iterable
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+log = logging.getLogger(__name__)
 
 #: ``SPARK_GRAFT_CPUS``, else the cores this process may run on
 DEFAULT_CPUS = int(
     os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
 )
+
+#: the Hadoop filesystem ``build_session`` sets for the ``file`` scheme
+LOCAL_FS_CLASS = "beats_spark.jvm.NioLocalFileSystem"
+_CLASSPATH = "spark.driver.extraClassPath"
 
 
 def build_session(
@@ -31,38 +58,126 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    conf = _session_conf(app_name, cores, shuffle_partitions, extra_conf)
+    builder = SparkSession.builder
+    for k, v in conf.items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def _session_conf(
+    app_name: str,
+    cores: int | None,
+    shuffle_partitions: int | None,
+    extra_conf: dict[str, str] | None,
+) -> dict[str, str]:
+    """Every conf ``build_session`` passes to the builder."""
     cores = cores or DEFAULT_CPUS
     # Rule of thumb: shuffle partitions ≈ 2× cores locally. On a real
     # cluster this is executors × cores × 2-3, or left to AQE coalesce.
     shuffle_partitions = shuffle_partitions or max(2 * cores, 8)
-    builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("BEATS_SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
+    conf = {
+        "spark.master": f"local[{cores}]",
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.driver.memory": os.environ.get("BEATS_SPARK_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
         # Dynamic partition overwrite: resume replaces only the sink
         # partitions it recomputes (idempotent fan-out, FIXTURES.md §6).
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        "spark.sql.sources.partitionOverwriteMode": "dynamic",
         # Multi-byte reader codecs (framing.decode_blob: gbk,
         # shift-jis, euc-*, big5, ebcdic-1047): Spark 4 restricts
         # decode() to 7 charsets unless the legacy JVM set is opened,
         # and ANSI decode aborts the job on malformed bytes — the
         # reference line reader replaces with U+FFFD instead.
-        .config("spark.sql.legacy.javaCharsets", "true")
-        .config("spark.sql.legacy.codingErrorAction", "true")
+        "spark.sql.legacy.javaCharsets": "true",
+        "spark.sql.legacy.codingErrorAction": "true",
+    }
+    conf.update(extra_conf or {})
+    conf.update(_local_fs_conf(conf))
+    return conf
+
+
+def _local_fs_conf(conf: dict[str, str]) -> dict[str, str]:
+    """The classpath and ``fs.file.impl`` that install
+    ``NioLocalFileSystem``, or nothing (and one warning).
+
+    ``fs.file.impl`` naming a class the driver JVM lacks would fail
+    every file read and write, so it is set only after that JVM has
+    loaded the class. A driver's classpath is fixed when its JVM
+    starts: this starts it, with the jar, unless one already runs."""
+    try:
+        jar = _local_fs_jar()
+    except (OSError, subprocess.CalledProcessError) as e:
+        log.warning(
+            "cannot build %s (%s): Hadoop forks a chmod per local file and directory",
+            LOCAL_FS_CLASS, getattr(e, "stderr", None) or e,
+        )
+        return {}
+    classpath = os.pathsep.join(filter(None, (conf.get(_CLASSPATH), jar)))
+    launch = SparkConf(loadDefaults=False)
+    launch.setAll({**conf, _CLASSPATH: classpath}.items())
+    SparkContext._ensure_initialized(conf=launch)
+    jvm = SparkContext._jvm
+    if jvm.org.apache.spark.util.Utils.classIsLoadable(LOCAL_FS_CLASS):
+        return {_CLASSPATH: classpath, "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS}
+    log.warning(
+        "the running driver JVM has no %s: Hadoop forks a chmod per local "
+        "file and directory",
+        LOCAL_FS_CLASS,
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return {}
+
+
+def _javac() -> str | None:
+    java_home = os.environ.get("JAVA_HOME")
+    return (
+        java_home and shutil.which("javac", path=os.path.join(java_home, "bin"))
+    ) or shutil.which("javac")
+
+
+def _local_fs_jar() -> str:
+    """The jar of ``jvm/NioLocalFileSystem.java``, compiled on first
+    use into the user cache directory."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    source = pkgutil.get_data("beats_spark", "jvm/NioLocalFileSystem.java")
+    cache = Path(
+        os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache", "beats_spark"
+    )
+    jar = cache / f"nio-local-fs-{hashlib.sha256(source).hexdigest()[:16]}.jar"
+    if jar.exists():
+        return str(jar)
+    javac = _javac()
+    if javac is None:
+        raise FileNotFoundError("no javac in $JAVA_HOME/bin or on PATH")
+    api = glob.glob(
+        os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")
+    )
+    cache.mkdir(parents=True, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=cache) as tmp:
+        src, classes = Path(tmp, "NioLocalFileSystem.java"), Path(tmp, "classes")
+        src.write_bytes(source)
+        subprocess.run(
+            [javac, "--release", "17", "-cp", os.pathsep.join(api),
+             "-d", str(classes), str(src)],
+            check=True, capture_output=True, text=True,
+        )
+        part = Path(tmp, jar.name)
+        with zipfile.ZipFile(part, "w") as zf:
+            for cls in sorted(classes.rglob("*.class")):
+                zf.write(cls, cls.relative_to(classes).as_posix())
+        # atomic: a concurrent session sees the old state or a whole jar
+        os.replace(part, jar)
+    return str(jar)
 
 
 def local_frame(

@@ -693,6 +693,40 @@ class TestOnFailureExecution:
         )
 
 
+    def test_remove_object_prefix_guarded_and_unguarded(self, spark):
+        """``remove`` of an object prefix clears its dotted flat
+        children and its map-backed dotted keys, with or without an
+        ``if`` guard; a guard that holds leaves only NULL columns
+        behind."""
+        df = spark.createDataFrame(
+            [(1, "1", "2", "keep", "a=1 a.b=2 c=3")],
+            "id long, `_temp_.a` string, `_temp_.b` string, `_temp_x` string, "
+            "kvs string",
+        )
+        kv = {"kv": {"field": "kvs", "target_field": "kvm",
+                     "field_split": " ", "value_split": "="}}
+        fields = ["_temp_", "kvm.a"]
+        unguarded = IngestPipeline(
+            [kv, {"remove": {"field": fields}}]
+        ).apply(df)
+        ignoring = IngestPipeline(
+            [kv, {"remove": {"field": [*fields, "nope"], "ignore_missing": True}}]
+        ).apply(df)
+        guarded = IngestPipeline(
+            [kv, {"remove": {"field": fields, "if": "ctx.id == 1"}}]
+        ).apply(df)
+        cols = unguarded.columns
+        assert "_temp_.a" not in cols and "_temp_.b" not in cols
+        assert ignoring.columns == cols
+        want = [(1, "keep", "a=1 a.b=2 c=3", {"c": "3"})]
+        assert [tuple(r) for r in unguarded.collect()] == want
+        assert [tuple(r) for r in ignoring.collect()] == want
+        assert [tuple(r) for r in guarded.select(*cols).collect()] == want
+        assert [tuple(r) for r in guarded.select("`_temp_.a`", "`_temp_.b`").collect()] == [
+            (None, None)
+        ]
+
+
 @pytest.mark.skipif(
     not __import__("os").path.exists(REF_APACHE_JSON),
     reason="reference checkout not present",

@@ -136,6 +136,31 @@ def test_run_writes_sinks_metrics_manifest(spark, transcripts, tmp_path):
     assert manifest.agg(F.sum("rows_routed")).collect()[0][0] == N_ROWS
 
 
+def test_metrics_count_flagged_events_as_failed(spark, transcripts, tmp_path):
+    """``events_failed`` is the published rows with a non-empty
+    ``log_flags``, recounted here by DuckDB over the written sinks; a
+    chain that flags nothing (no ``log_flags`` column) reports 0."""
+    import duckdb
+
+    out = str(tmp_path / "out")
+    make_pipeline(spark).run(spark, transcripts, out, run_id="f1")
+    (flagged,) = duckdb.sql(
+        f"SELECT count_if(len(log_flags) > 0) FROM "
+        f"parquet_scan('{out}/data/*/*/*.parquet', hive_partitioning=1)"
+    ).fetchone()
+    failed = {r[0] for r in duckdb.sql(
+        f"SELECT events_failed FROM parquet_scan('{out}/_metrics/*.parquet')"
+    ).fetchall()}
+    assert flagged > 0 and failed == {flagged}
+
+    bare = str(tmp_path / "bare")
+    Pipeline(n_buckets=4).run(spark, transcripts, bare, run_id="f2")
+    failed = {r[0] for r in duckdb.sql(
+        f"SELECT events_failed FROM parquet_scan('{bare}/_metrics/*.parquet')"
+    ).fetchall()}
+    assert failed == {0}
+
+
 def test_resume_is_idempotent(spark, transcripts, tmp_path):
     """Kill-and-rerun invariant (FIXTURES.md §6): after resume, per-sink
     counts equal a clean single run."""
