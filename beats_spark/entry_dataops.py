@@ -72,7 +72,6 @@ from .operators.multimodal import (
 )
 from .session import local_frame
 from .operators.similarity import (
-    ann_ivf_topk,
     ann_ivf_topk_sql,
     ann_lsh_topk,
     ann_lsh_topk_sql,
@@ -196,9 +195,13 @@ def q_dedup_exact(spark, sf_dir):
     # non-empty register (id=register, m1=max_rho) plus the summary
     # row (id=-1, m1=n_nonzero, frac=estimate) — operators/sketch.py,
     # register-for-register deterministic on both engines
-    from .operators.sketch import hll_estimate, hll_registers
+    from .operators.sketch import (
+        hll_estimate_by,
+        hll_overlap_by,
+        hll_registers_by,
+    )
 
-    reg_tbl = hll_registers(docs, F.col("text"))
+    reg_tbl = hll_registers_by(docs, [], F.col("text"))
     regs = reg_tbl.select(
         F.lit("hll").alias("variant"),
         F.col("register").alias("id"),
@@ -206,7 +209,7 @@ def q_dedup_exact(spark, sf_dir):
         F.lit(None).cast("long").alias("m2"),
         F.lit(None).cast("double").alias("frac"),
     )
-    card = hll_estimate(reg_tbl).select(
+    card = hll_estimate_by(reg_tbl, []).select(
         F.lit("hll").alias("variant"),
         F.lit(-1).cast("long").alias("id"),
         F.col("n_nonzero").alias("m1"),
@@ -217,14 +220,12 @@ def q_dedup_exact(spark, sf_dir):
     # the bloom variant dedups: |new|, |hist|, |union| from three
     # register tables (union = exact register max), |inter| by
     # inclusion-exclusion, Jaccard — corpus overlap with ZERO joins
-    # (sketch.hll_overlap; id 0..4 = est_a/est_b/est_union/est_inter/
-    # jaccard in frac)
-    from .operators.sketch import hll_overlap
-
-    ov = hll_overlap(
+    # (sketch.hll_overlap_by with no group columns; id 0..4 =
+    # est_a/est_b/est_union/est_inter/jaccard in frac)
+    ov = hll_overlap_by(
         docs.where(F.pmod(F.col("doc_id"), F.lit(5)) == 0),
-        F.col("text"),
         docs.where(F.pmod(F.col("doc_id"), F.lit(5)) != 0),
+        [],
         F.col("text"),
     )
     nl_l = F.lit(None).cast("long")
@@ -1713,7 +1714,7 @@ def q_heavy_hitters(spark, sf_dir):
     from .operators.heavyhitters import (
         cms_estimate,
         cms_registers,
-        histogram_quantiles,
+        histogram_quantiles_by,
         skew_report,
         top_k_terms,
         top_k_terms_mg,
@@ -1753,8 +1754,8 @@ def q_heavy_hitters(spark, sf_dir):
         nl.alias("m1"),
         F.col("value").alias("frac"),
     )
-    hq = histogram_quantiles(
-        docs, F.col("n_chars"), [0.5, 0.9, 0.99], lo=0, hi=4096
+    hq = histogram_quantiles_by(
+        docs, [], F.col("n_chars"), [0.5, 0.9, 0.99], lo=0, hi=4096
     ).select(
         F.lit("hq").alias("variant"),
         F.lit(-1).cast("long").alias("id"),

@@ -1,12 +1,20 @@
 package beats_spark.jvm;
 
 import java.io.IOException;
+import java.net.URI;
+import java.net.URISyntaxException;
 import java.nio.file.Files;
 import java.nio.file.attribute.PosixFilePermissions;
 
+import org.apache.hadoop.conf.Configuration;
+import org.apache.hadoop.fs.ChecksumFs;
+import org.apache.hadoop.fs.DelegateToFileSystem;
+import org.apache.hadoop.fs.FsConstants;
+import org.apache.hadoop.fs.FsServerDefaults;
 import org.apache.hadoop.fs.LocalFileSystem;
 import org.apache.hadoop.fs.Path;
 import org.apache.hadoop.fs.RawLocalFileSystem;
+import org.apache.hadoop.fs.local.LocalConfigKeys;
 import org.apache.hadoop.fs.permission.FsPermission;
 
 /**
@@ -15,7 +23,9 @@ import org.apache.hadoop.fs.permission.FsPermission;
  * Without libhadoop, RawLocalFileSystem.setPermission forks a chmod for
  * every file, .crc sidecar and directory a writer creates. The nine rwx
  * bits go through java.nio instead; a mode NIO cannot express (sticky,
- * setuid, setgid) keeps the stock path.
+ * setuid, setgid) keeps the stock path. Fs is the same filesystem for
+ * FileContext (fs.AbstractFileSystem.file.impl), through which
+ * Structured Streaming writes its checkpoint logs.
  */
 public class NioLocalFileSystem extends LocalFileSystem {
   public NioLocalFileSystem() {
@@ -31,6 +41,35 @@ public class NioLocalFileSystem extends LocalFileSystem {
       }
       Files.setPosixFilePermissions(
           pathToFile(p).toPath(), PosixFilePermissions.fromString(permission.toString()));
+    }
+  }
+
+  /** Hadoop's LocalFs, over Raw. */
+  public static class Fs extends ChecksumFs {
+    public Fs(URI uri, Configuration conf) throws IOException, URISyntaxException {
+      super(new RawFs(uri, conf));
+    }
+  }
+
+  /** Hadoop's RawLocalFs, over Raw. */
+  static class RawFs extends DelegateToFileSystem {
+    RawFs(URI uri, Configuration conf) throws IOException, URISyntaxException {
+      super(uri, new Raw(), conf, FsConstants.LOCAL_FS_URI.getScheme(), false);
+    }
+
+    @Override
+    public int getUriDefaultPort() {
+      return -1;
+    }
+
+    @Override
+    public FsServerDefaults getServerDefaults(Path f) throws IOException {
+      return LocalConfigKeys.getServerDefaults();
+    }
+
+    @Override
+    public boolean isValidName(String src) {
+      return true;
     }
   }
 }

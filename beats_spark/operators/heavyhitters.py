@@ -352,75 +352,19 @@ def histogram_bins(
     [lo, hi) clamp into the edge bins (documented estimator bias,
     never an error). Bin arithmetic is exact-integer scaled before
     one correctly-rounded divide, identical in DuckDB."""
-    v = value.cast("long")
-    b = F.floor(
-        (v - F.lit(lo)).cast("double")
-        * F.lit(n_bins)
-        / F.lit(hi - lo)
-    ).cast("long")
-    bin_ = F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), b))
     return (
-        df.select(bin_.alias("bin"))
+        df.select(_bin(value, lo, hi, n_bins).alias("bin"))
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def histogram_quantiles(
-    df: DataFrame,
-    value: Column,
-    qs: list[float],
-    lo: int,
-    hi: int,
-    n_bins: int = 256,
-) -> DataFrame:
-    """(q, est) histogram-interpolated quantiles: pos = q·(N−1) as in
-    the type-7 estimator, located in the cumulative bin counts and
-    linearly interpolated inside the containing bin:
-    ``est = lo + width·(bin + (pos − cum_before)/cnt_bin)``. The
-    cumulative window runs over ≤ n_bins rows (bounded, single
-    partition by construction); estimates are rounded to 6 dp after
-    arithmetic both engines round identically."""
-    from pyspark.sql.window import Window
-
-    width = (hi - lo) / n_bins
-    bins = histogram_bins(df, value, lo, hi, n_bins)
-    w = Window.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cum = bins.select(
-        "bin",
-        "cnt",
-        F.coalesce(F.sum("cnt").over(w), F.lit(0)).alias("cum_before"),
-        F.sum("cnt").over(
-            Window.orderBy(F.lit(1)).rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("n"),
-    )
-    probe = df.sparkSession.range(1).select(
-        F.explode(
-            F.array(*[F.struct(F.lit(float(x)).alias("q")) for x in qs])
-        ).alias("s")
-    ).select(F.col("s.q").alias("q"))
-    pos = F.col("q") * (F.col("n") - 1)
-    est = (
-        F.lit(float(lo))
-        + F.lit(width)
-        * (
-            F.col("bin")
-            + (pos - F.col("cum_before")) / F.col("cnt")
-        )
-    )
-    return (
-        cum.where(F.col("cnt") > 0)
-        .crossJoin(F.broadcast(probe))
-        .where(
-            (F.col("cum_before") <= pos)
-            & (pos < F.col("cum_before") + F.col("cnt"))
-        )
-        .select("q", F.round(est, 6).alias("est"))
-    )
+def _bin(value: Column, lo: int, hi: int, n_bins: int) -> Column:
+    v = value.cast("long")
+    b = F.floor(
+        (v - F.lit(lo)).cast("double") * F.lit(n_bins) / F.lit(hi - lo)
+    ).cast("long")
+    return F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), b))
 
 
 def histogram_quantiles_by(
@@ -432,21 +376,21 @@ def histogram_quantiles_by(
     hi: int,
     n_bins: int = 256,
 ) -> DataFrame:
-    """Per-GROUP histogram quantiles (doc-length p50/p99 per
-    language/source): same fixed-bin sketch keyed (group, bin) — one
-    map-side-combining agg, ≤ n_bins rows per group — with the
-    cumulative window PARTITIONED by group (bounded per partition).
-    Same interpolation and rounding as :func:`histogram_quantiles`."""
+    """Per-GROUP ``(group_cols..., q, est)`` histogram-interpolated
+    quantiles (doc-length p50/p99 per language/source; the whole
+    corpus with no ``group_cols``). The :func:`histogram_bins` sketch
+    keyed (group, bin) — one map-side-combining agg, ≤ n_bins rows
+    per group — with the cumulative window PARTITIONED by group
+    (bounded per partition). pos = q·(N−1) as in the type-7
+    estimator, located in the cumulative bin counts and linearly
+    interpolated inside the containing bin:
+    ``est = lo + width·(bin + (pos − cum_before)/cnt_bin)``, rounded
+    to 6 dp after arithmetic both engines round identically."""
     from pyspark.sql.window import Window
 
     width = (hi - lo) / n_bins
-    v = value.cast("long")
-    b = F.floor(
-        (v - F.lit(lo)).cast("double") * F.lit(n_bins) / F.lit(hi - lo)
-    ).cast("long")
-    bin_ = F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), b))
     bins = (
-        df.select(*group_cols, bin_.alias("bin"))
+        df.select(*group_cols, _bin(value, lo, hi, n_bins).alias("bin"))
         .groupBy(*group_cols, "bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -530,8 +474,8 @@ def histogram_quantiles_sql(
     hi: int,
     n_bins: int = 256,
 ) -> str:
-    """DuckDB twin of :func:`histogram_quantiles` (lock-step bin
-    arithmetic and interpolation)."""
+    """DuckDB twin of :func:`histogram_quantiles_by` with no group
+    columns (lock-step bin arithmetic and interpolation)."""
     width = (hi - lo) / n_bins
     q_rows = ", ".join(f"({float(x)})" for x in qs)
     return f"""

@@ -311,6 +311,9 @@ _ERR_COL = "_ingest_error"
 #: hidden per-row "this step failed" column while a step's failure is
 #: routed (materialized before the step writes its outputs)
 _FAIL_COL = "_ingest_step_failed"
+#: hidden per-row "this ``on_failure`` handler list still runs on the
+#: row" column, one per nesting level while handler steps run
+_LIVE_COL = "_ingest_handlers_live"
 
 def painless_condition(expr: str, df: DataFrame) -> Column:
     """Compile a painless step-level ``if`` guard to a Column via the
@@ -555,9 +558,14 @@ class IngestPipeline:
         per-processor ``on_failure`` catches the failure: its handler
         steps run on the failed rows and the pipeline-level block never
         sees it (ES ingest semantics). Otherwise ``ignore_failure``
-        drops it, or the row records ``msg`` (first failure wins)."""
+        drops it, or the row records ``msg`` (first failure wins) and,
+        when the step is itself a handler step, every handler list it
+        runs in stops on that row."""
         handlers = conf.get("on_failure")
-        if not handlers and (not self.on_failure or conf.get("ignore_failure")):
+        chains = [c for c in df.columns if c.startswith(_LIVE_COL)]
+        if not handlers and (
+            conf.get("ignore_failure") or not (self.on_failure or chains)
+        ):
             return write(df)
         if cond is not None:
             failed = failed & F.coalesce(cond, F.lit(False))
@@ -568,7 +576,10 @@ class IngestPipeline:
         if handlers:
             df = self._run_handlers(df, handlers, F.col(flag), F.lit(msg))
         else:
-            df = self._record_failure(df, F.col(flag), msg)
+            if self.on_failure:
+                df = self._record_failure(df, F.col(flag), msg)
+            for live in chains:
+                df = df.withColumn(live, F.col(live) & ~F.col(flag))
         return df.drop(flag)
 
     @staticmethod
@@ -585,12 +596,18 @@ class IngestPipeline:
         msg: Column,
     ) -> DataFrame:
         """Run ``on_failure`` handler steps, each guarded to the
-        ``fail`` rows; a ``value`` naming ``_ingest.on_failure_message``
-        takes the ``msg`` column whole. The one handler
-        executor, for per-processor blocks (kafka/log sets
-        ``kafka.log.component = "unknown"`` when its component grok
-        misses — filebeat/module/kafka/log/ingest/pipeline.json:22-47)
-        and the pipeline-level block alike."""
+        ``fail`` rows a failing handler step has not stopped yet (ES
+        aborts the list there and hands that step's own failure to the
+        pipeline-level block); a ``value`` naming
+        ``_ingest.on_failure_message`` takes the ``msg`` column whole.
+        The one handler executor, for per-processor blocks (kafka/log
+        sets ``kafka.log.component = "unknown"`` when its component
+        grok misses — filebeat/module/kafka/log/ingest/pipeline.json:
+        22-47) and the pipeline-level block alike."""
+        live = _LIVE_COL
+        while live in df.columns:  # a handler step's own handler list
+            live += "_"
+        df = df.withColumn(live, fail)
         for step in handlers:
             if len(step) != 1:
                 raise IngestError(
@@ -602,8 +619,8 @@ class IngestPipeline:
             val = conf.get("value")
             if isinstance(val, str) and "_ingest.on_failure_message" in val:
                 conf = {**conf, "value": msg}  # F.lit passes a Column through
-            df = getattr(self, f"_step_{name}")(df, conf, fail)
-        return df
+            df = getattr(self, f"_step_{name}")(df, conf, F.col(live))
+        return df.drop(live)
 
     # -- steps ----------------------------------------------------------
 

@@ -273,67 +273,6 @@ def ivf_probe_cells(
     return F.transform(top, lambda t: (-t.neg_idx).cast("int"))
 
 
-def ann_ivf_topk(
-    df: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    n_centroids: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 1,
-) -> DataFrame:
-    """IVF ANN: corpus partitioned by nearest centroid; a query probes
-    its ``nprobe`` nearest cells, then exact cosine ranks the probed
-    rows. At 100 TB: the corpus shuffles once on the cell id (or is
-    bucketed on it at write time) and each query touches
-    ~nprobe/n_centroids of the data; recall grows with nprobe and the
-    oracle reproduces the identical cells so results still match
-    exactly."""
-    cents = [ivf_centroid(dim, i) for i in range(n_centroids)]
-    cells = df.withColumn(
-        "cell", ivf_assign(F.col(vec_col), cents)
-    ).withColumn("_nrm", norm(F.col(vec_col)))
-    # query side scores centroids ONCE (ivf_probe_cells; its element 1
-    # equals ivf_assign, so the query's own cell is never recomputed)
-    # and EXPLODES its nprobe cells to rows: the probe join is then an
-    # equi-join on `cell` — a BroadcastHashJoin the corpus side
-    # hash-probes, where the r2 `array_contains(q_cells, cell)` join
-    # condition forced a nested-loop scan of every corpus row against
-    # every query (r2 verdict item #5: +37% regression, and at real
-    # scale it blocks hash-join co-location on the cell key). A corpus
-    # row lives in exactly one cell and q_cells are distinct, so the
-    # explode cannot duplicate (q_id, neighbor) pairs.
-    q = (
-        df.where(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            norm(F.col(vec_col)).alias("q_nrm"),
-            ivf_probe_cells(F.col(vec_col), cents, nprobe).alias("q_cells"),
-        )
-        .select("q_id", "q_vec", "q_nrm", F.explode("q_cells").alias("cell"))
-    )
-    pairs = cells.alias("c").join(
-        F.broadcast(q), on="cell"
-    ).where(F.col(id_col) != F.col("q_id"))
-    scored = pairs.select(
-        "q_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            dot(F.col("q_vec"), F.col(vec_col))
-            / (F.col("q_nrm") * F.col("_nrm")),
-            6,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "cos_sim", "rank")
-    )
-
-
 def ann_ivf_topk_multi(
     df: DataFrame,
     query_ids: list[int],
@@ -344,22 +283,36 @@ def ann_ivf_topk_multi(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF top-k at SEVERAL probe widths from ONE corpus pass (for
-    recall/latency sweeps — and the merged ``ann_ivf`` driver row).
+    """IVF ANN top-k at one or more probe widths from ONE corpus pass:
+    the corpus is partitioned by nearest centroid; a query probes its
+    ``p`` nearest cells, then exact cosine ranks the probed rows. At
+    100 TB the corpus shuffles once on the cell id (or is bucketed on
+    it at write time) and each query touches ~p/n_centroids of the
+    data; recall grows with p and the oracle reproduces the identical
+    cells, so results still match exactly.
+
     A width-``p`` result ranks exactly the rows whose probed cell sat
     at position ≤ p in the query's centroid ordering, so: probe
     ``max(nprobes)`` cells WITH their position (posexplode), join the
     corpus once, then rank the scored set once per width over a
-    ``cell_rank <= p`` filter. Running :func:`ann_ivf_topk` per width
-    would recompute the corpus centroid assignment + probe join per
-    width; here the widths share them, and the per-width work is a
-    window over the (queries × probed cells) scored set — tiny next
-    to the corpus."""
+    ``cell_rank <= p`` filter (recall/latency sweeps and the merged
+    ``ann_ivf`` driver row). Rows:
+    ``(q_id, neighbor_id, cos_sim, rank, nprobe)``."""
     max_probe = max(nprobes)
     cents = [ivf_centroid(dim, i) for i in range(n_centroids)]
     cells = df.withColumn(
         "cell", ivf_assign(F.col(vec_col), cents)
     ).withColumn("_nrm", norm(F.col(vec_col)))
+    # query side scores centroids ONCE (ivf_probe_cells; its element 1
+    # equals ivf_assign, so the query's own cell is never recomputed)
+    # and EXPLODES its probed cells to rows: the probe join is then an
+    # equi-join on `cell` — a BroadcastHashJoin the corpus side
+    # hash-probes, where the r2 `array_contains(q_cells, cell)` join
+    # condition forced a nested-loop scan of every corpus row against
+    # every query (r2 verdict item #5: +37% regression, and at real
+    # scale it blocks hash-join co-location on the cell key). A corpus
+    # row lives in exactly one cell and q_cells are distinct, so the
+    # explode cannot duplicate (q_id, neighbor) pairs.
     q = (
         df.where(F.col(id_col).isin(query_ids))
         .select(
@@ -387,7 +340,9 @@ def ann_ivf_topk_multi(
             / (F.col("q_nrm") * F.col("_nrm")),
             6,
         ).alias("cos_sim"),
-    ).transform(_materialize)  # one probe join feeds every width's ranking
+    )
+    if len(nprobes) > 1:  # one probe join feeds every width's ranking
+        scored = scored.transform(_materialize)
     w = Window.partitionBy("q_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )

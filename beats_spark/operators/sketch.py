@@ -62,87 +62,20 @@ def _check_p(p: int) -> tuple[int, int, int]:
     return 1 << p, rc, 4 * (_HEX_LEN - rc)
 
 
-def hll_registers(
-    df: DataFrame, value: Column, p: int = 8
-) -> DataFrame:
-    """The sketch itself: ``(register, max_rho)`` — one row per
-    NON-EMPTY register (≤ 2^p rows total). One map-side-combining
-    groupBy; nothing corpus-sized ever shuffles. Sketches of disjoint
-    slices merge by ``groupBy(register).agg(max(max_rho))`` — union
-    the frames and re-aggregate."""
-    _, rc, bits = _check_p(p)
-    hx = F.md5(value.cast("string"))
-    reg = F.conv(F.substring(hx, 1, rc), 16, 10).cast("long")
-    rem = F.conv(F.substring(hx, rc + 1, _HEX_LEN - rc), 16, 10).cast(
-        "long"
-    )
-    rho = (
-        F.when(rem == 0, F.lit(bits + 1))
-        .otherwise(F.lit(bits + 1) - F.length(F.bin(rem)))
-        .cast("int")
-    )
-    return (
-        df.select(reg.alias("register"), rho.alias("rho"))
-        .groupBy("register")
-        .agg(F.max("rho").alias("max_rho"))
-    )
-
-
-def hll_estimate(registers: DataFrame, p: int = 8) -> DataFrame:
-    """One-row ``(m, n_nonzero, estimate)`` from a register table
-    (raw HLL estimator, exact-integer harmonic sum — see module
-    docstring)."""
-    m, _, bits = _check_p(p)
-    alpha = _alpha(m)
-    unit = F.call_function(
-        "shiftleft",
-        F.lit(1).cast("long"),
-        (F.lit(bits + 1) - F.col("max_rho")).cast("int"),
-    )
-    agg = registers.agg(
-        F.count("*").cast("long").alias("n_nonzero"),
-        F.sum(unit).cast("long").alias("_present_units"),
-    )
-    empty_unit = 1 << (bits + 1)
-    total_units = (
-        F.col("_present_units")
-        + (F.lit(m).cast("long") - F.col("n_nonzero")) * F.lit(empty_unit)
-    )
-    num = float(alpha) * float(m) * float(m) * float(1 << (bits + 1))
-    # Empty register table (empty input corpus): the raw harmonic-sum
-    # estimator would read α·m (and an un-coalesced sum reads NULL,
-    # which Spark's greatest SKIPS while DuckDB's propagates — the
-    # least/greatest null-skip gotcha). Pin the empty case to 0.0 in
-    # BOTH engines so overlap/inclusion–exclusion stays cross-engine
-    # deterministic.
-    return agg.select(
-        F.lit(m).cast("long").alias("m"),
-        "n_nonzero",
-        F.when(F.col("n_nonzero") == 0, F.lit(0.0))
-        .otherwise(F.round(F.lit(num) / total_units.cast("double"), 6))
-        .alias("estimate"),
-    )
-
-
-def hll_cardinality(
-    df: DataFrame, value: Column, p: int = 8
-) -> DataFrame:
-    """Distinct-count estimate of ``value`` over ``df`` — registers +
-    estimator in one plan."""
-    return hll_estimate(hll_registers(df, value, p=p), p=p)
-
-
 def hll_registers_by(
     df: DataFrame,
     group_cols: list[str],
     value: Column,
     p: int = 8,
 ) -> DataFrame:
-    """Per-GROUP sketch: ``(group_cols..., register, max_rho)`` —
-    ≤ 2^p rows per group, one map-side-combining groupBy on
-    (group, register). The per-sink "distinct conversations" question
-    the observer wants, without a per-sink countDistinct shuffle of
-    the corpus; per-group sketches still merge by register max."""
+    """The sketch itself: ``(group_cols..., register, max_rho)`` — one
+    row per NON-EMPTY register, ≤ 2^p rows per group. One
+    map-side-combining groupBy on (group, register); nothing
+    corpus-sized ever shuffles. With no ``group_cols`` it is the
+    whole-corpus sketch. Sketches of disjoint slices merge by register
+    max — union the frames and re-aggregate. The per-sink "distinct
+    conversations" question the observer wants, without a per-sink
+    countDistinct shuffle of the corpus."""
     _, rc, bits = _check_p(p)
     hx = F.md5(value.cast("string"))
     reg = F.conv(F.substring(hx, 1, rc), 16, 10).cast("long")
@@ -165,8 +98,9 @@ def hll_estimate_by(
     registers: DataFrame, group_cols: list[str], p: int = 8
 ) -> DataFrame:
     """Per-group ``(group_cols..., m, n_nonzero, estimate)`` from a
-    grouped register table (same exact-integer harmonic sum as
-    :func:`hll_estimate`, per group)."""
+    register table (raw HLL estimator, exact-integer harmonic sum — see
+    module docstring). With no ``group_cols`` it is one row, also over
+    an empty register table."""
     m, _, bits = _check_p(p)
     alpha = _alpha(m)
     unit = F.call_function(
@@ -184,13 +118,19 @@ def hll_estimate_by(
         + (F.lit(m).cast("long") - F.col("n_nonzero")) * F.lit(empty_unit)
     )
     num = float(alpha) * float(m) * float(m) * float(1 << (bits + 1))
+    # Empty register table (empty input corpus, possible only without
+    # group columns): the raw harmonic-sum estimator would read α·m
+    # (and an un-coalesced sum reads NULL, which Spark's greatest
+    # SKIPS while DuckDB's propagates — the least/greatest null-skip
+    # gotcha). Pin the empty case to 0.0 in BOTH engines so
+    # overlap/inclusion–exclusion stays cross-engine deterministic.
     return agg.select(
         *group_cols,
         F.lit(m).cast("long").alias("m"),
         "n_nonzero",
-        F.round(F.lit(num) / total_units.cast("double"), 6).alias(
-            "estimate"
-        ),
+        F.when(F.col("n_nonzero") == 0, F.lit(0.0))
+        .otherwise(F.round(F.lit(num) / total_units.cast("double"), 6))
+        .alias("estimate"),
     )
 
 
@@ -236,7 +176,8 @@ FROM g_agg
 def hll_registers_sql(
     table: str, value_sql: str, p: int = 8
 ) -> str:
-    """DuckDB twin of :func:`hll_registers` (register-for-register)."""
+    """DuckDB twin of :func:`hll_registers_by` with no group columns
+    (register-for-register)."""
     _, rc, bits = _check_p(p)
     return f"""
 SELECT register, max(rho) AS max_rho FROM (
@@ -258,8 +199,9 @@ SELECT register, max(rho) AS max_rho FROM (
 def hll_cardinality_sql(
     table: str, value_sql: str, p: int = 8
 ) -> str:
-    """DuckDB twin of :func:`hll_cardinality` (identical exact-integer
-    harmonic sum and single-rounding estimator)."""
+    """DuckDB twin of :func:`hll_registers_by` → :func:`hll_estimate_by`
+    with no group columns (identical exact-integer harmonic sum and
+    single-rounding estimator)."""
     m, _, bits = _check_p(p)
     alpha = _alpha(m)
     num = float(alpha) * float(m) * float(m) * float(1 << (bits + 1))
@@ -285,59 +227,6 @@ FROM agg
 # sketch-level set algebra: union / intersection / Jaccard of corpora
 
 
-def hll_merge_registers(*reg_frames: DataFrame) -> DataFrame:
-    """Union sketches: element-wise register max — the HLL merge
-    property (registers of A ∪ B = max of A's and B's registers,
-    EXACTLY, not approximately). ≤ 2^p rows per input frame."""
-    out = reg_frames[0]
-    for r in reg_frames[1:]:
-        out = out.unionByName(r)
-    return out.groupBy("register").agg(F.max("max_rho").alias("max_rho"))
-
-
-def hll_overlap(
-    df_a: DataFrame,
-    value_a: Column,
-    df_b: DataFrame,
-    value_b: Column,
-    p: int = 8,
-) -> DataFrame:
-    """Corpus-overlap estimate WITHOUT a join: |A|, |B|, |A ∪ B| from
-    three sketches (the union sketch is the exact register max), then
-    |A ∩ B| by inclusion–exclusion and Jaccard = inter/union — the
-    standard HLL set-algebra (Flajolet et al. 2007 §4 merge;
-    inclusion–exclusion per the original LogLog practice).
-
-    The 100-TB use: "how contaminated is corpus A by corpus B" /
-    "what fraction of the new crawl is already in the lake" costs two
-    corpus scans and ZERO joins — each side collapses to ≤ 2^p
-    register rows before anything crosses.
-
-    One row: (est_a, est_b, est_union, est_inter, jaccard), all
-    rounded once at the end from exact-integer unit sums (the module
-    determinism discipline; inclusion–exclusion arithmetic runs on
-    the two engines' IDENTICAL 6-dp estimates)."""
-    ra = hll_registers(df_a, value_a, p=p)
-    rb = hll_registers(df_b, value_b, p=p)
-    ru = hll_merge_registers(ra, rb)
-    ea = hll_estimate(ra, p=p).select(F.col("estimate").alias("est_a"))
-    eb = hll_estimate(rb, p=p).select(F.col("estimate").alias("est_b"))
-    eu = hll_estimate(ru, p=p).select(F.col("estimate").alias("est_union"))
-    inter = F.greatest(
-        F.round(F.col("est_a") + F.col("est_b") - F.col("est_union"), 6),
-        F.lit(0.0),
-    )
-    return (
-        ea.crossJoin(eb)
-        .crossJoin(eu)
-        .withColumn("est_inter", inter)
-        .withColumn(
-            "jaccard",
-            F.round(F.col("est_inter") / F.col("est_union"), 6),
-        )
-    )
-
-
 def _estimate_from_regs_sql(regs_cte: str, p: int = 8) -> str:
     """Estimator body over a named register CTE (shared by the
     cardinality and overlap twins)."""
@@ -358,8 +247,9 @@ def hll_overlap_sql(
     table_a: str, value_a_sql: str, table_b: str, value_b_sql: str,
     p: int = 8,
 ) -> str:
-    """DuckDB twin of :func:`hll_overlap` (same register merge, same
-    estimator, same inclusion–exclusion on the 6-dp estimates)."""
+    """DuckDB twin of :func:`hll_overlap_by` with no group columns
+    (same register merge, same estimator, same inclusion–exclusion on
+    the 6-dp estimates)."""
     ra = hll_registers_sql(table_a, value_a_sql, p=p)
     rb = hll_registers_sql(table_b, value_b_sql, p=p)
     return f"""
@@ -392,15 +282,26 @@ def hll_overlap_by(
     value: Column,
     p: int = 8,
 ) -> DataFrame:
-    """Per-GROUP corpus overlap: :func:`hll_overlap` keyed by
-    ``group_cols`` — "how much of the new crawl is already in the lake,
-    PER LANGUAGE/SOURCE", still with zero joins of anything
-    corpus-sized (each side collapses to ≤ 2^p register rows per
-    group; the final joins are group-keyed over estimate rows).
+    """Corpus-overlap estimate WITHOUT a corpus join, per group:
+    |A|, |B|, |A ∪ B| from three sketches (the union sketch is the
+    exact register max — the HLL merge property), then |A ∩ B| by
+    inclusion–exclusion and Jaccard = inter/union — the standard HLL
+    set-algebra (Flajolet et al. 2007 §4 merge; inclusion–exclusion
+    per the original LogLog practice).
+
+    The 100-TB use: "how much of the new crawl is already in the lake"
+    (per language/source with ``group_cols``, whole-corpus without)
+    costs two corpus scans and ZERO joins of anything corpus-sized —
+    each side collapses to ≤ 2^p register rows per group before
+    anything crosses; the final joins are group-keyed over estimate
+    rows (one row each, joined without a key, when ungrouped).
     Groups present on only one side get est 0.0 for the missing side
     and inter 0 (coalesced, not NULL — a one-sided group IS fully
     novel). One row per group:
-    (group_cols..., est_a, est_b, est_union, est_inter, jaccard)."""
+    (group_cols..., est_a, est_b, est_union, est_inter, jaccard), all
+    rounded once at the end from exact-integer unit sums (the module
+    determinism discipline; inclusion–exclusion arithmetic runs on the
+    two engines' IDENTICAL 6-dp estimates)."""
     ra = hll_registers_by(df_a, group_cols, value, p=p)
     rb = hll_registers_by(df_b, group_cols, value, p=p)
     ru = (
@@ -417,9 +318,10 @@ def hll_overlap_by(
     eu = hll_estimate_by(ru, group_cols, p=p).select(
         *group_cols, F.col("estimate").alias("est_union")
     )
+    on = group_cols or None
     j = (
-        eu.join(ea, group_cols, "left")
-        .join(eb, group_cols, "left")
+        eu.join(ea, on, "left")
+        .join(eb, on, "left")
         .withColumn("est_a", F.coalesce("est_a", F.lit(0.0)))
         .withColumn("est_b", F.coalesce("est_b", F.lit(0.0)))
     )

@@ -4,7 +4,7 @@ The recurring lakehouse question between crawls/ingests — which
 documents are NEW, which disappeared, which ids kept their identity
 but changed content — answered exactly: a full-outer equi-join on the
 id plus a portable content-hash compare. The exact twin of the
-sketch-overlap estimate (`sketch.hll_overlap`): use the sketch to
+sketch-overlap estimate (`sketch.hll_overlap_by`): use the sketch to
 decide IF a diff is worth running, this to enumerate it.
 
 100-TB shape: one keyed shuffle on the id for each side (or ZERO

@@ -8,12 +8,13 @@ partitions sized to parallelism instead of the 200 default.
 
 ``file:`` paths go through ``jvm/NioLocalFileSystem.java``, Hadoop's
 checksummed local filesystem with permissions set through
-``java.nio``. Without the native ``libhadoop`` the stock one forks a
-``chmod`` for every file, ``.crc`` sidecar and directory a write
-creates (≈430 per ``Pipeline.run`` of the 16-bucket job). The class is
-compiled once with the JDK's ``javac`` into a jar under the user cache
-directory, keyed by the source's hash, and put on the driver
-classpath. Without a JDK, or when a driver JVM without the class is
+``java.nio``, for ``FileSystem`` and ``FileContext`` (the stream's
+checkpoint logs) alike. Without the native ``libhadoop`` the stock one
+forks a ``chmod`` for every file, ``.crc`` sidecar and directory a
+write creates (≈430 per ``Pipeline.run`` of the 16-bucket job). The
+class is compiled once with the JDK's ``javac`` into a jar under the
+user cache directory, keyed by the source's hash, and put on the
+driver classpath. Without a JDK, or when a driver JVM without the class is
 already running (``spark-submit``), the session keeps the stock
 filesystem and logs one warning.
 
@@ -49,6 +50,8 @@ DEFAULT_CPUS = int(
 
 #: the Hadoop filesystem ``build_session`` sets for the ``file`` scheme
 LOCAL_FS_CLASS = "beats_spark.jvm.NioLocalFileSystem"
+#: the same, for Hadoop ``FileContext`` (streaming checkpoint logs)
+LOCAL_ABSTRACT_FS_CLASS = LOCAL_FS_CLASS + "$Fs"
 _CLASSPATH = "spark.driver.extraClassPath"
 
 
@@ -73,13 +76,17 @@ def _session_conf(
     shuffle_partitions: int | None,
     extra_conf: dict[str, str] | None,
 ) -> dict[str, str]:
-    """Every conf ``build_session`` passes to the builder."""
+    """Every conf ``build_session`` passes to the builder. Without
+    ``cores``, a master the launcher gave the driver JVM
+    (``spark-submit --master``) stays: the builder's options would
+    replace it."""
+    master = None if cores else _launcher_master()
     cores = cores or DEFAULT_CPUS
     # Rule of thumb: shuffle partitions ≈ 2× cores locally. On a real
     # cluster this is executors × cores × 2-3, or left to AQE coalesce.
     shuffle_partitions = shuffle_partitions or max(2 * cores, 8)
     conf = {
-        "spark.master": f"local[{cores}]",
+        "spark.master": master or f"local[{cores}]",
         "spark.app.name": app_name,
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": "true",
@@ -106,11 +113,21 @@ def _session_conf(
     return conf
 
 
+def _launcher_master() -> str | None:
+    """The master of the driver JVM a launcher (``spark-submit``, the
+    ``pyspark`` shell) started this process from, else None."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master", None)
+
+
 def _local_fs_conf(conf: dict[str, str]) -> dict[str, str]:
-    """The classpath and ``fs.file.impl`` that install
+    """The classpath, ``fs.file.impl`` and
+    ``fs.AbstractFileSystem.file.impl`` that install
     ``NioLocalFileSystem``, or nothing (and one warning).
 
-    ``fs.file.impl`` naming a class the driver JVM lacks would fail
+    An ``impl`` naming a class the driver JVM lacks would fail
     every file read and write, so it is set only after that JVM has
     loaded the class. A driver's classpath is fixed when its JVM
     starts: this starts it, with the jar, unless one already runs."""
@@ -128,7 +145,11 @@ def _local_fs_conf(conf: dict[str, str]) -> dict[str, str]:
     SparkContext._ensure_initialized(conf=launch)
     jvm = SparkContext._jvm
     if jvm.org.apache.spark.util.Utils.classIsLoadable(LOCAL_FS_CLASS):
-        return {_CLASSPATH: classpath, "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS}
+        return {
+            _CLASSPATH: classpath,
+            "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS,
+            "spark.hadoop.fs.AbstractFileSystem.file.impl": LOCAL_ABSTRACT_FS_CLASS,
+        }
     log.warning(
         "the running driver JVM has no %s: Hadoop forks a chmod per local "
         "file and directory",

@@ -44,11 +44,10 @@ is NEVER admitted twice.
 Delivery contract: foreachBatch is AT-LEAST-ONCE — a crash between
 the sink writes and the checkpoint commit replays the batch with the
 same batch_id on restart. Both sinks are therefore IDEMPOTENT
-per-batch: each write dynamically overwrites only its own
-``batch_id=N`` partition, so a replay rewrites identical bytes
-instead of appending a duplicate funnel row / duplicate documents
-(the standard Structured Streaming exactly-once recipe: deterministic
-batch content + batch_id-keyed overwrite).
+per-batch (``streaming/sink.write_batch``): each write overwrites
+only its own ``batch_id=N`` partition, so a replay rewrites
+identical bytes instead of appending a duplicate funnel row /
+duplicate documents.
 
 Restart contract: the bitmap is driver memory, so a restarted job
 rebuilds it from the curated output itself
@@ -84,17 +83,7 @@ from ..operators.dedup import (
     norm_text,
     with_band_keys,
 )
-
-
-#: stats/ row layout: one funnel row per micro-batch
-STATS_COLS = (
-    "batch_id",
-    "n_in",
-    "n_batch_dup",
-    "n_history_dup",
-    "n_low_quality",
-    "n_admitted",
-)
+from .sink import start_foreach_batch, write_batch
 
 
 class IncrementalCurator:
@@ -316,27 +305,15 @@ class IncrementalCurator:
                     & ~F.col("quality_keep")
                 ).alias("n_low_quality"),
                 _n(admitted).alias("n_admitted"),
-            ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-            # idempotent per-batch sinks: overwrite ONLY this batch's
-            # partition (dynamic mode), so an at-least-once replay of
-            # the same batch_id rewrites rather than duplicates
-            (
-                row.select(*STATS_COLS)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{output_root}/stats")
             )
+            # idempotent per-batch sinks: an at-least-once replay of
+            # the same batch_id rewrites rather than duplicates
+            write_batch(row, batch_id, f"{output_root}/stats")
             kept = flagged.where(admitted)
-            (
-                kept.drop("_norm", "first_seen", "novel", "quality_keep")
-                .withColumn(
-                    "batch_id", F.lit(int(batch_id)).cast("long")
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{output_root}/data")
+            write_batch(
+                kept.drop("_norm", "first_seen", "novel", "quality_keep"),
+                batch_id,
+                f"{output_root}/data",
             )
             # fold the admitted keys into the bitmap so the NEXT batch
             # (and the next snapshot, and tomorrow's run via
@@ -386,15 +363,9 @@ def run_incremental_curation(
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: curator.process_batch(df, bid, output_root)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_foreach_batch(
+        reader.parquet(input_path),
+        lambda df, bid: curator.process_batch(df, bid, output_root),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

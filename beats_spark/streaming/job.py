@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..operators.router import with_partition_id, write_fanout
 from ..plans.pipeline import Pipeline
 from ..schema import TRANSCRIPT_SCHEMA
+from .sink import start_foreach_batch
 
 
 def read_transcript_stream(spark: SparkSession, input_path: str) -> DataFrame:
@@ -52,14 +53,9 @@ def run_stream(
         routed = pipeline.transform(with_partition_id(batch_df, pipeline.n_buckets))
         write_fanout(routed, f"{output_root}/data", mode="append")
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_foreach_batch(
+        stream, process_batch, checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_sink_counts(

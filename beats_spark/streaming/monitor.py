@@ -1,28 +1,32 @@
-"""Streaming frequency monitor: count-min registers over a stream.
+"""Streaming sketch monitors: count-min and HyperLogLog registers over
+a stream.
 
-The batch heavy-hitter tooling (operators/heavyhitters.py) rests on
-one property: CMS registers are LINEAR — registers built on disjoint
-slices SUM to the whole-corpus registers. That is exactly the
-contract a micro-batch stream needs: build the d×w register frame
-per batch (one map-side-combining agg, constant output size), merge
-it into a running store by element-wise sum, and any point in time
-the store answers "how often has this term streamed past so far"
-without ever keying state by term (the stateful-agg alternative —
-``groupBy(term).count`` in update mode — carries one state row per
-DISTINCT term forever; the sketch carries d·w longs, period).
+Both batch sketches rest on a MERGE property: count-min registers are
+LINEAR (registers built on disjoint slices SUM to the whole-corpus
+registers, operators/heavyhitters.py) and HLL registers merge by
+element-wise MAX (operators/sketch.py). That is exactly the contract a
+micro-batch stream needs: build the register frame per batch (one
+map-side-combining agg, constant output size), keep it in a
+``batch_id``-partitioned store, and at any point in time the store
+answers "how often has this term streamed past so far"
+(:class:`StreamingCms`) or "how many distinct conversations so far"
+(:class:`StreamingHll`) without ever keying state by term or key (the
+stateful-agg alternative — ``groupBy(term).count`` in update mode —
+carries one state row per DISTINCT term forever; the sketch carries
+d·w longs or 2^p registers per batch, period).
 
-Sink idempotence follows the incremental curator's pattern
-(streaming/curate.py): each micro-batch writes its OWN registers to a
-``batch_id=N`` partition with dynamic partition overwrite, so an
-at-least-once foreachBatch replay rewrites identical bytes instead
-of double-counting. The merged view is a read-time SUM over
-partitions — cheap (n_batches × d×w bounded rows) and always
-consistent with exactly the set of committed batches.
+Each micro-batch writes its OWN registers to the ``batch_id=N``
+partition through ``streaming/sink.write_batch`` (dynamic partition
+overwrite, shared with the incremental curator), so an at-least-once
+foreachBatch replay rewrites identical bytes instead of
+double-counting. The merged view is a read-time SUM or MAX over
+partitions — cheap (n_batches × register rows) and always consistent
+with exactly the set of committed batches.
 
 Reference analog: the pipeline observer's event tallies
-(`/root/reference/libbeat/monitoring/report/log/log.go:95-118`
-periodic metrics snapshots); the sketch is the scale-safe form for
-per-TERM frequencies rather than per-counter totals.
+(libbeat/monitoring/report/log/log.go:95-118 periodic metrics
+snapshots); the sketches are the scale-safe form for per-TERM
+frequencies and distinct counts rather than per-counter totals.
 """
 
 from __future__ import annotations
@@ -31,11 +35,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.heavyhitters import CMS_DEPTH, CMS_WIDTH, cms_registers
+from .sink import start_foreach_batch, write_batch
 
 
-class StreamingCms:
-    """foreachBatch sink: per-batch CMS registers into an idempotent
-    ``batch_id``-partitioned store; ``merged_registers`` reads back
+class _RegisterStore:
+    """foreachBatch sink: per-batch registers into the idempotent
+    ``batch_id``-partitioned store under ``output_root/registers``."""
+
+    output_root: str
+
+    def registers(self, batch_df: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        write_batch(
+            self.registers(batch_df), batch_id, f"{self.output_root}/registers"
+        )
+
+    def attach(self, stream_df: DataFrame, checkpoint: str):
+        """Wire onto a streaming DataFrame; returns the query."""
+        return start_foreach_batch(stream_df, self.process_batch, checkpoint)
+
+
+class StreamingCms(_RegisterStore):
+    """Count-min registers per batch; ``merged_registers`` reads back
     the running sketch."""
 
     def __init__(
@@ -50,32 +73,10 @@ class StreamingCms:
         self.width = width
         self.text_col = text_col
 
-    # -- write side ------------------------------------------------------
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        regs = cms_registers(
-            batch_df,
-            depth=self.depth,
-            width=self.width,
-            text_col=self.text_col,
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        (
-            regs.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{self.output_root}/registers")
+    def registers(self, batch_df: DataFrame) -> DataFrame:
+        return cms_registers(
+            batch_df, depth=self.depth, width=self.width, text_col=self.text_col
         )
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        """Wire onto a streaming DataFrame; returns the query."""
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    # -- read side -------------------------------------------------------
 
     def merged_registers(self, spark: SparkSession) -> DataFrame:
         """The running sketch: element-wise sum over all committed
@@ -100,15 +101,12 @@ class StreamingCms:
         )
 
 
-class StreamingHll:
-    """foreachBatch sink: per-batch HLL registers into the same
-    idempotent ``batch_id``-partitioned store shape — the continuous
-    "distinct conversations/documents seen so far" companion to
+class StreamingHll(_RegisterStore):
+    """HLL registers per batch — the continuous "distinct
+    conversations/documents seen so far" companion to
     :class:`StreamingCms`.
 
-    Where CMS registers merge by SUM (linear), HLL registers merge by
-    element-wise MAX (operators/sketch.py merge property) — so the
-    read-time merge is a ``groupBy(register).max`` over committed
+    The read-time merge is a ``groupBy(register).max`` over committed
     batch partitions, and an at-least-once replay of a batch is
     DOUBLY harmless: the partition overwrite rewrites identical
     bytes, and even a hypothetical duplicate register row cannot
@@ -125,30 +123,10 @@ class StreamingHll:
         self.value_col = value_col
         self.p = p
 
-    # -- write side ------------------------------------------------------
+    def registers(self, batch_df: DataFrame) -> DataFrame:
+        from ..operators.sketch import hll_registers_by
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.sketch import hll_registers
-
-        regs = hll_registers(
-            batch_df, F.col(self.value_col), p=self.p
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        (
-            regs.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{self.output_root}/registers")
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    # -- read side -------------------------------------------------------
+        return hll_registers_by(batch_df, [], F.col(self.value_col), p=self.p)
 
     def merged_registers(self, spark: SparkSession) -> DataFrame:
         return (
@@ -159,6 +137,6 @@ class StreamingHll:
 
     def estimate(self, spark: SparkSession) -> DataFrame:
         """One-row (m, n_nonzero, estimate) over everything committed."""
-        from ..operators.sketch import hll_estimate
+        from ..operators.sketch import hll_estimate_by
 
-        return hll_estimate(self.merged_registers(spark), p=self.p)
+        return hll_estimate_by(self.merged_registers(spark), [], p=self.p)

@@ -163,6 +163,16 @@ def _mk_machine(
     return run
 
 
+def _events_frame(conv, events: list[tuple[int, str, int]]):
+    """``OUT_SCHEMA`` rows of one conversation's closed events."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        [(conv, f, d, n) for f, d, n in events],
+        columns=["conv_id", "first_turn_idx", "doc", "n_lines"],
+    )
+
+
 def multiline_batch(
     df: DataFrame,
     pattern: str,
@@ -184,21 +194,66 @@ def multiline_batch(
     )
 
     def fn(pdf):
-        import pandas as pd
-
         pdf = pdf.sort_values("turn_idx")
         conv = pdf["conv_id"].iloc[0]
         events, tail = machine(conv, pdf)
         if tail is not None:
             first, buf = tail
             events.append((first, "\n".join(buf), len(buf)))
-        return pd.DataFrame(
-            [(conv, f, d, n) for f, d, n in events],
-            columns=["conv_id", "first_turn_idx", "doc", "n_lines"],
-        )
+        return _events_frame(conv, events)
 
     cols = ["conv_id", "turn_idx", "text"] + ([ts_col] if ts_col else [])
     return df.select(*cols).groupBy("conv_id").applyInPandas(fn, OUT_SCHEMA)
+
+
+def _stream_fn(machine, arm_timeout, ts_col: str | None = None):
+    """The one ``applyInPandasWithState`` body of both streaming
+    forms: a timed-out tail flushes as one event; otherwise the
+    buffered lines re-enter the machine ahead of the new rows, closed
+    events emit, and the open tail goes back to state (or the state
+    goes). With ``ts_col`` (event time) the state carries the tail's
+    last-seen ts in ms as its last field, and the buffered lines
+    re-enter with it, so the stored-tail → first-new gap is what the
+    machine evaluates. ``arm_timeout(state, *last_ts)`` sets the
+    flush after each update."""
+
+    def fn(key, pdfs: Iterable, state):
+        import pandas as pd
+
+        (conv,) = key
+        if state.hasTimedOut:
+            first, lines = state.get[:2]
+            state.remove()
+            yield _events_frame(conv, [(first, "\n".join(lines), len(lines))])
+            return
+
+        pdf = pd.concat(list(pdfs)).sort_values("turn_idx")
+        if ts_col is None:
+            pdf = pdf[["turn_idx", "text"]]
+        else:
+            pdf = pdf.assign(_ts_sec=pdf[ts_col].astype("int64") / 1e9)[
+                ["turn_idx", "text", "_ts_sec"]
+            ]
+        if state.exists:
+            first, lines, *last_ts = state.get
+            prefix = {"turn_idx": [first] * len(lines), "text": lines}
+            if last_ts:
+                prefix["_ts_sec"] = [last_ts[0] / 1000.0] * len(lines)
+            pdf = pd.concat([pd.DataFrame(prefix), pdf])
+        events, tail = machine(conv, pdf)
+        if tail is not None:
+            last_ts = [] if ts_col is None else [
+                int(pdf["_ts_sec"].max() * 1000)
+            ]
+            # native python types — numpy int64 won't serialize to the
+            # state schema
+            state.update((int(tail[0]), [str(x) for x in tail[1]], *last_ts))
+            arm_timeout(state, *last_ts)
+        elif state.exists:
+            state.remove()
+        yield _events_frame(conv, events)
+
+    return fn
 
 
 def multiline_stream(
@@ -219,42 +274,12 @@ def multiline_stream(
     timeouts keep scheduling batches. Run it with a continuous
     trigger, or stop() it once the input is drained.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    machine = _mk_machine(pattern, match, negate, max_lines, flush_pattern)
-
-    def fn(key, pdfs: Iterable, state: GroupState):
-        import pandas as pd
-
-        (conv,) = key
-        if state.hasTimedOut:
-            first, lines = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [(conv, first, "\n".join(lines), len(lines))],
-                columns=["conv_id", "first_turn_idx", "doc", "n_lines"],
-            )
-            return
-
-        pdf = pd.concat(list(pdfs)).sort_values("turn_idx")
-        if state.exists:
-            first, lines = state.get
-            prefix = pd.DataFrame({"turn_idx": [first] * len(lines), "text": lines})
-            # buffered lines re-enter the machine ahead of new rows
-            pdf = pd.concat([prefix, pdf[["turn_idx", "text"]]])
-        events, tail = machine(conv, pdf)
-        if tail is not None:
-            # native python types — numpy int64 won't serialize to the
-            # state schema
-            state.update((int(tail[0]), [str(x) for x in tail[1]]))
-            state.setTimeoutDuration(timeout_ms)
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(
-            [(conv, f, d, n) for f, d, n in events],
-            columns=["conv_id", "first_turn_idx", "doc", "n_lines"],
-        )
-
+    fn = _stream_fn(
+        _mk_machine(pattern, match, negate, max_lines, flush_pattern),
+        lambda state: state.setTimeoutDuration(timeout_ms),
+    )
     return (
         stream.select("conv_id", "turn_idx", "text")
         .groupBy("conv_id")
@@ -301,60 +326,25 @@ def multiline_stream_eventtime(
     same ``timeout_s`` also gap-flushes WITHIN a batch via the state
     machine's ts-gap replay, so a gap recorded inside one micro-batch
     and a gap spanning micro-batches flush identically."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    machine = _mk_machine(
-        pattern, match, negate, max_lines, flush_pattern, timeout_s, "_ts_sec"
-    )
     timeout_ms = int(timeout_s * 1000)
 
-    def fn(key, pdfs: Iterable, state: GroupState):
-        import pandas as pd
-
-        (conv,) = key
-        if state.hasTimedOut:
-            first, lines, _ = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [(conv, first, "\n".join(lines), len(lines))],
-                columns=["conv_id", "first_turn_idx", "doc", "n_lines"],
-            )
-            return
-
-        pdf = pd.concat(list(pdfs)).sort_values("turn_idx")
-        pdf = pdf.assign(_ts_sec=pdf[ts_col].astype("int64") / 1e9)[
-            ["turn_idx", "text", "_ts_sec"]
-        ]
-        if state.exists:
-            first, lines, last_ms = state.get
-            # buffered lines re-enter ahead of new rows, all carrying
-            # the tail's last-seen ts so the stored-tail → first-new
-            # gap is what the machine evaluates
-            prefix = pd.DataFrame(
-                {
-                    "turn_idx": [first] * len(lines),
-                    "text": lines,
-                    "_ts_sec": [last_ms / 1000.0] * len(lines),
-                }
-            )
-            pdf = pd.concat([prefix, pdf])
-        events, tail = machine(conv, pdf)
-        if tail is not None:
-            last_ms = int(pdf["_ts_sec"].max() * 1000)
-            state.update((int(tail[0]), [str(x) for x in tail[1]], last_ms))
-            # must stay ahead of the current watermark or Spark rejects
-            # the timestamp; a tail already older than the watermark
-            # flushes at the next batch boundary
-            state.setTimeoutTimestamp(
-                max(last_ms + timeout_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(
-            [(conv, f, d, n) for f, d, n in events],
-            columns=["conv_id", "first_turn_idx", "doc", "n_lines"],
+    def arm_timeout(state, last_ms: int) -> None:
+        # must stay ahead of the current watermark or Spark rejects
+        # the timestamp; a tail already older than the watermark
+        # flushes at the next batch boundary
+        state.setTimeoutTimestamp(
+            max(last_ms + timeout_ms, state.getCurrentWatermarkMs() + 1)
         )
 
+    fn = _stream_fn(
+        _mk_machine(
+            pattern, match, negate, max_lines, flush_pattern, timeout_s, "_ts_sec"
+        ),
+        arm_timeout,
+        ts_col,
+    )
     return (
         stream.select("conv_id", "turn_idx", "text", ts_col)
         .withWatermark(ts_col, watermark_delay)

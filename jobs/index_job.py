@@ -75,20 +75,12 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--nprobe", type=int, default=1)
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
+    from beats_spark.session import build_session, local_frame
 
-    spark = (
-        SparkSession.builder.appName("beats-spark-index")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .getOrCreate()
-    )
+    spark = build_session("beats-spark-index")
 
     from beats_spark.operators.pq import ivf_pq_topk, pq_encode, pq_train
     from beats_spark.operators.similarity import kmeans_ivf
-    from beats_spark.session import local_frame
 
     t0 = time.monotonic()
     embs = spark.read.parquet(args.embeddings)

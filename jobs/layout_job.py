@@ -49,16 +49,12 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--audit-hi", type=int, default=1 << 30)
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.sql.types import NumericType
 
-    spark = (
-        SparkSession.builder.appName("beats-spark-layout")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    from beats_spark.session import build_session
+
+    spark = build_session("beats-spark-layout")
     t0 = time.monotonic()
     from beats_spark.functions.textstats import word_code
     from beats_spark.operators.layout import (

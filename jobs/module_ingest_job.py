@@ -98,7 +98,11 @@ def main() -> None:
     ap.add_argument("--multiline-negate", action="store_true")
     ap.add_argument("--multiline-match", default="after")
     ap.add_argument("--exclude-lines")
-    ap.add_argument("--cores", type=int, default=8)
+    ap.add_argument(
+        "--cores", type=int, default=None,
+        help="local[N] master (default: spark-submit's --master, else "
+        "every core this process may use)",
+    )
     args = ap.parse_args()
 
     from beats_spark.session import build_session

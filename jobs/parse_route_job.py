@@ -41,16 +41,9 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from beats_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.appName("beats-spark-parse-route")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .getOrCreate()
-    )
+    spark = build_session("beats-spark-parse-route")
 
     if args.config:
         from beats_spark.config import load_pipeline

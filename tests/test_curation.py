@@ -608,7 +608,7 @@ class TestMultiProbeIvf:
     def test_probe1_matches_assign_and_recall_grows(self, spark):
         from beats_spark.operators.dedup import norm_text  # noqa: F401
         from beats_spark.operators.similarity import (
-            ann_ivf_topk,
+            ann_ivf_topk_multi,
             brute_force_topk,
             ivf_assign,
             ivf_centroid,
@@ -638,8 +638,8 @@ class TestMultiProbeIvf:
         def recall(nprobe: int) -> float:
             got = {
                 (r["q_id"], r["neighbor_id"])
-                for r in ann_ivf_topk(
-                    df, qids, k=5, n_centroids=4, dim=8, nprobe=nprobe
+                for r in ann_ivf_topk_multi(
+                    df, qids, k=5, nprobes=(nprobe,), n_centroids=4, dim=8
                 ).collect()
             }
             return len(got & exact) / len(exact)

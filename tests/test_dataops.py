@@ -414,7 +414,7 @@ class TestSimilarity:
 
     def test_ivf_assignment_deterministic_and_partitions(self, spark):
         from beats_spark.operators.similarity import (
-            ann_ivf_topk,
+            ann_ivf_topk_multi,
             ivf_assign,
             ivf_centroid,
         )
@@ -436,20 +436,24 @@ class TestSimilarity:
         assert cells[0] == cells[4] and cells[1] == cells[5]
 
         # a query ranks only its own cell, by cosine, self excluded
-        out = ann_ivf_topk(df, [0], k=3, n_centroids=n_cent, dim=dim).collect()
+        out = ann_ivf_topk_multi(
+            df, [0], k=3, nprobes=(1,), n_centroids=n_cent, dim=dim
+        ).collect()
         assert all(r["q_id"] == 0 for r in out)
         assert 0 not in {r["neighbor_id"] for r in out}
         assert 4 in {r["neighbor_id"] for r in out}  # same-cell twin
         assert out[0]["neighbor_id"] == 4 and out[0]["cos_sim"] == 1.0
 
 
-    def test_ivf_multi_matches_per_width_runs(self, spark):
+    def test_ivf_multi_matches_duckdb_per_width(self, spark):
         # ann_ivf_topk_multi shares one corpus assignment + probe join
-        # across widths; its per-width slices must equal independent
-        # ann_ivf_topk runs exactly
+        # across widths; each width's slice must equal the DuckDB
+        # oracle run at that width alone
+        import duckdb
+
         from beats_spark.operators.similarity import (
-            ann_ivf_topk,
             ann_ivf_topk_multi,
+            ann_ivf_topk_sql,
         )
 
         dim, n_cent = 8, 4
@@ -461,6 +465,9 @@ class TestSimilarity:
         multi = ann_ivf_topk_multi(
             df, [0, 1], k=3, nprobes=(1, 2), n_centroids=n_cent, dim=dim
         ).collect()
+        con = duckdb.connect()
+        con.execute("CREATE TABLE vecs(vec_id BIGINT, embedding FLOAT[])")
+        con.executemany("INSERT INTO vecs VALUES (?, ?)", vecs)
         for p in (1, 2):
             got = sorted(
                 (r["q_id"], r["neighbor_id"], r["cos_sim"], r["rank"])
@@ -468,12 +475,14 @@ class TestSimilarity:
                 if r["nprobe"] == p
             )
             want = sorted(
-                (r["q_id"], r["neighbor_id"], r["cos_sim"], r["rank"])
-                for r in ann_ivf_topk(
-                    df, [0, 1], k=3, nprobe=p, n_centroids=n_cent, dim=dim
-                ).collect()
+                con.execute(
+                    ann_ivf_topk_sql(
+                        "vecs", [0, 1], k=3, n_centroids=n_cent, dim=dim,
+                        nprobe=p,
+                    )
+                ).fetchall()
             )
-            assert got == want
+            assert len(got) == 6 and got == want, p
 
 
 class TestMultimodal:

@@ -165,8 +165,7 @@ class TestSkewReport:
 class TestHistogramQuantiles:
     def test_interpolation_and_duckdb_parity(self, spark):
         from beats_spark.operators.heavyhitters import (
-            histogram_bins,
-            histogram_quantiles,
+            histogram_quantiles_by,
             histogram_quantiles_sql,
         )
 
@@ -174,8 +173,8 @@ class TestHistogramQuantiles:
         df = spark.createDataFrame(vals, "v long")
         got = sorted(
             tuple(r)
-            for r in histogram_quantiles(
-                df, F.col("v"), [0.5, 0.9, 0.99], lo=0, hi=128
+            for r in histogram_quantiles_by(
+                df, [], F.col("v"), [0.5, 0.9, 0.99], lo=0, hi=128
             ).collect()
         )
         con = duckdb.connect()
@@ -231,10 +230,9 @@ class TestHistogramQuantiles:
 
 class TestGroupedHistogramQuantiles:
     def test_grouped_equals_per_group_filter_and_duckdb(self, spark):
-        """The per-group estimate must equal the ungrouped sketch on
-        that group's rows; DuckDB twin matches row-for-row."""
+        """The per-group estimate must equal the sketch with no group
+        columns on that group's rows; DuckDB twin matches row-for-row."""
         from beats_spark.operators.heavyhitters import (
-            histogram_quantiles,
             histogram_quantiles_by,
             histogram_quantiles_by_sql,
         )
@@ -250,8 +248,9 @@ class TestGroupedHistogramQuantiles:
         for g in ("g0", "g1", "g2"):
             solo = sorted(
                 (g, r["q"], r["est"])
-                for r in histogram_quantiles(
+                for r in histogram_quantiles_by(
                     df.where(F.col("g") == g),
+                    [],
                     F.col("v"),
                     [0.5, 0.99],
                     lo=0,

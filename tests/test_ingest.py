@@ -636,7 +636,8 @@ class TestOnFailureExecution:
     def test_failing_handler_step_routes_its_own_failure(self, spark):
         """A failable step inside a per-processor handler routes its
         failure through the same path while the outer step's failure
-        column is still in use."""
+        column is still in use, and the handlers after it do not run
+        on that row."""
         df = spark.createDataFrame(
             [(1, "a b", "x"), (2, "???", "x")], "id long, msg string, n string"
         )
@@ -655,9 +656,42 @@ class TestOnFailureExecution:
         assert not [c for c in out.columns if c.startswith("_ingest")]
         rows = {r["id"]: r for r in out.collect()}
         assert rows[2]["error.message"] == "unable to convert [n] to long"
-        assert rows[2]["error.type"].startswith("Provided Grok expressions")
+        assert rows[2]["error.type"] is None
         assert (rows[1]["a"], rows[1]["error.type"]) == ("a", None)
         assert rows[1]["error.message"] is None
+
+    def test_failing_handler_step_stops_its_list_per_row(self, spark):
+        """ES aborts a handler list at the step that fails on a row:
+        the handlers after it run only on the rows it did not fail,
+        and its own failure reaches the pipeline-level block."""
+        df = spark.createDataFrame(
+            [(1, "a b", "x"), (2, "???", "x"), (3, "???", "7")],
+            "id long, msg string, n string",
+        )
+        out = IngestPipeline(
+            steps=[{"grok": {
+                "field": "msg", "patterns": ["%{WORD:a} %{WORD:b}"],
+                "on_failure": [
+                    {"set": {"field": "error.kind", "value": "grok"}},
+                    {"convert": {"field": "n", "type": "long",
+                                 "target_field": "n_long"}},
+                    {"set": {"field": "error.type",
+                             "value": "{{ _ingest.on_failure_message }}"}},
+                    {"set": {"field": "error.step", "value": "after"}},
+                ],
+            }}],
+            on_failure=SET_ERROR_MESSAGE,
+        ).apply(df)
+        assert not [c for c in out.columns if c.startswith("_ingest")]
+        cols = ["n_long", "error.kind", "error.step", "error.message"]
+        rows = {r["id"]: r for r in out.collect()}
+        assert tuple(rows[1][c] for c in cols) == (None, None, None, None)
+        assert tuple(rows[2][c] for c in cols) == (
+            None, "grok", None, "unable to convert [n] to long"
+        )
+        assert rows[2]["error.type"] is None
+        assert tuple(rows[3][c] for c in cols) == (7, "grok", "after", None)
+        assert rows[3]["error.type"].startswith("Provided Grok expressions")
 
     def test_pipeline_level_remove_and_append(self, spark):
         """Pipeline-level ``remove`` clears an object prefix's dotted

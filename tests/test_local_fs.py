@@ -17,7 +17,7 @@ from pathlib import Path
 from beats_spark import session
 from beats_spark.operators.router import with_partition_id, write_fanout
 from beats_spark.plans.headline import headline_pipeline
-from beats_spark.session import LOCAL_FS_CLASS, hadoop_fs
+from beats_spark.session import LOCAL_ABSTRACT_FS_CLASS, LOCAL_FS_CLASS, hadoop_fs
 from beats_spark.synth import synth_transcripts
 
 REPO = Path(__file__).resolve().parents[1]
@@ -39,6 +39,11 @@ def _modes(root: Path) -> dict[str, set[int]]:
 def test_shared_session_uses_nio_fs(spark):
     fs, _ = _nio_fs(spark, "file:///tmp")
     assert fs.getRawFileSystem().getClass().getName() == LOCAL_FS_CLASS + "$Raw"
+    jvm = spark._jvm
+    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        jvm.java.net.URI("file:///tmp"), spark._jsc.hadoopConfiguration()
+    )
+    assert fc.getDefaultFileSystem().getClass().getName() == LOCAL_ABSTRACT_FS_CLASS
 
 def test_written_modes_match_stock_hadoop(spark, tmp_path):
     """Stock Hadoop chmods files to 0666 and dirs to 0777 under its
@@ -71,6 +76,7 @@ def test_no_javac_leaves_the_conf_stock(monkeypatch, tmp_path):
         extra = {"spark.driver.extraClassPath": caller_cp} if caller_cp else {}
         conf = session._session_conf("no-javac", 2, None, extra)
         assert "spark.hadoop.fs.file.impl" not in conf
+        assert "spark.hadoop.fs.AbstractFileSystem.file.impl" not in conf
         assert conf.get("spark.driver.extraClassPath") == caller_cp
     assert not list(tmp_path.iterdir())
 
@@ -79,6 +85,7 @@ def test_jar_is_appended_to_a_callers_classpath(spark):
         "cp", 2, None, {"spark.driver.extraClassPath": "/opt/udfs.jar"}
     )
     assert conf["spark.hadoop.fs.file.impl"] == LOCAL_FS_CLASS
+    assert conf["spark.hadoop.fs.AbstractFileSystem.file.impl"] == LOCAL_ABSTRACT_FS_CLASS
     caller, jar = conf["spark.driver.extraClassPath"].split(os.pathsep)
     assert caller == "/opt/udfs.jar" and jar == session._local_fs_jar()
 
@@ -87,6 +94,7 @@ _CHILD = textwrap.dedent(
     import os, sys
     from beats_spark.plans.headline import headline_pipeline
     from beats_spark.session import build_session
+    from beats_spark.streaming.job import run_stream
     from beats_spark.synth import synth_transcripts
 
     log, out = sys.argv[1], sys.argv[2]
@@ -100,6 +108,16 @@ _CHILD = textwrap.dedent(
     before = forks()
     headline_pipeline(spark, n_buckets=4).run(spark, df, out, run_id="c")
     run = forks() - before
+    # two input files, drained by an availableNow stream: its
+    # checkpoint logs go through Hadoop FileContext
+    df.coalesce(1).write.parquet(out + "_in")
+    df.coalesce(1).write.mode("append").parquet(out + "_in")
+    before = forks()
+    run_stream(
+        spark, headline_pipeline(spark, n_buckets=4), out + "_in",
+        out + "_stream", out + "_ckpt",
+    ).awaitTermination()
+    stream = forks() - before
     # the logging chmod sees stock Hadoop's forks
     jvm = spark._jvm
     raw = jvm.org.apache.hadoop.fs.RawLocalFileSystem()
@@ -107,13 +125,14 @@ _CHILD = textwrap.dedent(
     path = jvm.org.apache.hadoop.fs.Path(out + "/_SUCCESS_probe")
     raw.create(path).close()
     raw.setPermission(path, jvm.org.apache.hadoop.fs.permission.FsPermission("600"))
-    print("FORKS", run, forks() - before - run)
+    print("FORKS", run, stream, forks() - before - stream)
     """
 )
 
 def test_pipeline_run_forks_no_chmod(tmp_path):
     """A ``build_session`` run in a fresh JVM, with a logging ``chmod``
-    first on its PATH: the run itself starts none."""
+    first on its PATH: neither a ``Pipeline.run`` nor a stream's
+    micro-batches and checkpoint logs start one."""
     real = shutil.which("chmod")
     assert real is not None
     bindir, log = tmp_path / "bin", tmp_path / "chmod.log"
@@ -135,6 +154,6 @@ def test_pipeline_run_forks_no_chmod(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     line = [ln for ln in proc.stdout.splitlines() if ln.startswith("FORKS")]
     assert line, proc.stdout[-2000:]
-    run_forks, stock_forks = map(int, line[-1].split()[1:])
+    run_forks, stream_forks, stock_forks = map(int, line[-1].split()[1:])
     assert stock_forks >= 1
-    assert run_forks == 0
+    assert (run_forks, stream_forks) == (0, 0)

@@ -67,11 +67,11 @@ class TestPartitionInvariance:
             assert _rows(pack_manifest(lay, token_budget=256)) == want
 
     def test_hll_registers(self, docs):
-        from beats_spark.operators.sketch import hll_registers
+        from beats_spark.operators.sketch import hll_registers_by
 
-        want = _rows(hll_registers(_layouts(docs)[0], F.col("text")))
+        want = _rows(hll_registers_by(_layouts(docs)[0], [], F.col("text")))
         for lay in _layouts(docs)[1:]:
-            assert _rows(hll_registers(lay, F.col("text"))) == want
+            assert _rows(hll_registers_by(lay, [], F.col("text"))) == want
 
     def test_heavy_hitters_mg_two_pass(self, docs):
         """Misra–Gries per-partition candidate sets DIFFER by layout —

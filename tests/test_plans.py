@@ -194,14 +194,14 @@ class TestCurationPlans:
         assert "CartesianProduct" not in plan
 
     def test_ivf_probe_is_hash_join_on_cell(self, spark):
-        from beats_spark.operators.similarity import ann_ivf_topk
+        from beats_spark.operators.similarity import ann_ivf_topk_multi
 
         vecs = spark.createDataFrame(
             [(i, [float((i * 13 + j) % 11) - 5.0 for j in range(8)])
              for i in range(60)],
             "vec_id long, embedding array<float>",
         )
-        plan = _plan(ann_ivf_topk(vecs, [0, 1], k=3, dim=8, nprobe=2))
+        plan = _plan(ann_ivf_topk_multi(vecs, [0, 1], k=3, nprobes=(2,), dim=8))
         # the probe must be an EQUI-join on the cell id (queries explode
         # their nprobe cells to rows): r2's array_contains(q_cells, cell)
         # join condition degraded to BroadcastNestedLoop — every corpus
@@ -543,11 +543,11 @@ class TestLayoutAndEvalPlans:
     def test_hll_overlap_no_python_no_corpus_join(self, spark):
         """Three register aggs + 1-row crossJoins — the corpus never
         joins anything; no Python anywhere."""
-        from beats_spark.operators.sketch import hll_overlap
+        from beats_spark.operators.sketch import hll_overlap_by
 
         a = spark.range(300).selectExpr("CAST(id AS STRING) AS v")
         b = spark.range(200, 500).selectExpr("CAST(id AS STRING) AS v")
-        plan = _plan(hll_overlap(a, F.col("v"), b, F.col("v")))
+        plan = _plan(hll_overlap_by(a, b, [], F.col("v")))
         assert "Python" not in plan
         assert "SortMergeJoin" not in plan
 

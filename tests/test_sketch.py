@@ -5,12 +5,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from beats_spark.operators.sketch import (
-    hll_cardinality,
     hll_cardinality_sql,
-    hll_estimate,
-    hll_registers,
+    hll_estimate_by,
+    hll_overlap_by,
+    hll_registers_by,
     hll_registers_sql,
 )
+
+
+def _cardinality(df, value):
+    """The whole-corpus sketch: the keyed forms with no group columns."""
+    return hll_estimate_by(hll_registers_by(df, [], value), [])
 
 
 class TestHLL:
@@ -24,8 +29,8 @@ class TestHLL:
         thrice = spark.createDataFrame(
             [(f"item-{i % 10_000}",) for i in range(30_000)], "v string"
         )
-        e1 = hll_cardinality(once, F.col("v")).collect()[0]
-        e3 = hll_cardinality(thrice, F.col("v")).collect()[0]
+        e1 = _cardinality(once, F.col("v")).collect()[0]
+        e3 = _cardinality(thrice, F.col("v")).collect()[0]
         assert e1["estimate"] == e3["estimate"]
         assert abs(e1["estimate"] - 10_000) / 10_000 < 0.2
 
@@ -39,23 +44,23 @@ class TestHLL:
             [(f"item-{i}",) for i in range(2_000, 6_000)], "v string"
         )
         merged = (
-            hll_registers(a, F.col("v"))
-            .unionByName(hll_registers(b, F.col("v")))
+            hll_registers_by(a, [], F.col("v"))
+            .unionByName(hll_registers_by(b, [], F.col("v")))
             .groupBy("register")
             .agg(F.max("max_rho").alias("max_rho"))
         )
-        whole = hll_cardinality(a.unionByName(b), F.col("v"))
+        whole = _cardinality(a.unionByName(b), F.col("v"))
         assert (
-            hll_estimate(merged).collect() == whole.collect()
+            hll_estimate_by(merged, []).collect() == whole.collect()
         )
 
     def test_duckdb_parity_register_for_register(self, spark):
         rows = [(f"doc {i} text body",) for i in range(500)]
         df = spark.createDataFrame(rows, "v string")
         sregs = sorted(
-            tuple(r) for r in hll_registers(df, F.col("v")).collect()
+            tuple(r) for r in hll_registers_by(df, [], F.col("v")).collect()
         )
-        sest = tuple(hll_cardinality(df, F.col("v")).collect()[0])
+        sest = tuple(_cardinality(df, F.col("v")).collect()[0])
         con = duckdb.connect()
         con.execute("CREATE TABLE t(v VARCHAR)")
         con.executemany("INSERT INTO t VALUES (?)", rows)
@@ -70,7 +75,7 @@ class TestHLL:
             [(f"item-{i}",) for i in range(200)], "v string"
         )
         plan = (
-            hll_cardinality(df, F.col("v"))
+            _cardinality(df, F.col("v"))
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -84,18 +89,13 @@ class TestHLL:
     def test_p_validation(self, spark):
         df = spark.createDataFrame([("x",)], "v string")
         with pytest.raises(ValueError, match="multiple of 4"):
-            hll_registers(df, F.col("v"), p=10)
+            hll_registers_by(df, [], F.col("v"), p=10)
 
 
 class TestGroupedHLL:
     def test_grouped_equals_per_group_filter(self, spark):
-        """The per-group estimate must equal running the UNGROUPED
-        sketch on that group's rows alone."""
-        from beats_spark.operators.sketch import (
-            hll_estimate_by,
-            hll_registers_by,
-        )
-
+        """The per-group estimate must equal running the sketch with
+        no group columns on that group's rows alone."""
         df = spark.createDataFrame(
             [(f"g{i % 3}", f"item-{i % 500}") for i in range(5_000)],
             "g string, v string",
@@ -107,17 +107,13 @@ class TestGroupedHLL:
             ).collect()
         }
         for g in ("g0", "g1", "g2"):
-            one = hll_cardinality(
+            one = _cardinality(
                 df.where(F.col("g") == g), F.col("v")
             ).collect()[0]
             assert grouped[g] == (one["n_nonzero"], one["estimate"])
 
     def test_duckdb_parity_grouped(self, spark):
-        from beats_spark.operators.sketch import (
-            hll_cardinality_by_sql,
-            hll_estimate_by,
-            hll_registers_by,
-        )
+        from beats_spark.operators.sketch import hll_cardinality_by_sql
 
         rows = [(f"g{i % 2}", f"item-{i % 200}") for i in range(2_000)]
         df = spark.createDataFrame(rows, "g string, v string")
@@ -138,13 +134,10 @@ class TestGroupedHLL:
 
 class TestHLLOverlap:
     def test_identical_corpora_jaccard_one(self, spark):
-        from beats_spark.operators.sketch import hll_overlap
-        from pyspark.sql import functions as F
-
         df = spark.createDataFrame(
             [(f"doc{i}",) for i in range(500)], "v string"
         )
-        row = hll_overlap(df, F.col("v"), df, F.col("v")).collect()[0]
+        row = hll_overlap_by(df, df, [], F.col("v")).collect()[0]
         # identical register tables: union estimate == each side's,
         # inclusion-exclusion gives inter == est_a EXACTLY
         assert row["est_union"] == row["est_a"] == row["est_b"]
@@ -152,48 +145,39 @@ class TestHLLOverlap:
         assert row["jaccard"] == 1.0
 
     def test_disjoint_corpora_small_jaccard(self, spark):
-        from beats_spark.operators.sketch import hll_overlap
-        from pyspark.sql import functions as F
-
         a = spark.createDataFrame(
             [(f"a{i}",) for i in range(400)], "v string"
         )
         b = spark.createDataFrame(
             [(f"b{i}",) for i in range(400)], "v string"
         )
-        row = hll_overlap(a, F.col("v"), b, F.col("v")).collect()[0]
+        row = hll_overlap_by(a, b, [], F.col("v")).collect()[0]
         # raw-estimator error at p=8 is ~6.5%; disjoint sets must
         # read near-zero overlap and a union near a+b
         assert row["jaccard"] < 0.15
         assert row["est_union"] > 0.8 * (row["est_a"] + row["est_b"])
 
     def test_half_overlap_estimate(self, spark):
-        from beats_spark.operators.sketch import hll_overlap
-        from pyspark.sql import functions as F
-
         a = spark.createDataFrame(
             [(f"x{i}",) for i in range(600)], "v string"
         )
         b = spark.createDataFrame(
             [(f"x{i}",) for i in range(300, 900)], "v string"
         )
-        row = hll_overlap(a, F.col("v"), b, F.col("v")).collect()[0]
+        row = hll_overlap_by(a, b, [], F.col("v")).collect()[0]
         # true jaccard = 300/900 = 1/3
         assert 0.15 < row["jaccard"] < 0.55
 
     def test_duckdb_parity(self, spark):
         import duckdb
-        from beats_spark.operators.sketch import (
-            hll_overlap,
-            hll_overlap_sql,
-        )
+        from beats_spark.operators.sketch import hll_overlap_sql
         from pyspark.sql import functions as F
         from tests.conftest import SF_DIR
 
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
         a = docs.where("doc_id % 5 = 0")
         b = docs.where("doc_id % 5 <> 0")
-        got = hll_overlap(a, F.col("text"), b, F.col("text")).collect()[0]
+        got = hll_overlap_by(a, b, [], F.col("text")).collect()[0]
 
         con = duckdb.connect()
         con.execute(
@@ -216,11 +200,10 @@ class TestHLLOverlap:
 
 class TestGroupedOverlap:
     def test_per_group_equals_filtered_ungrouped(self, spark):
-        """Each group's row must equal the UNGROUPED overlap computed
-        on that group's rows alone (the grouped-HLL equivalence that
-        makes the per-language readout trustworthy)."""
+        """Each group's row must equal the overlap with no group
+        columns computed on that group's rows alone (the grouped-HLL
+        equivalence that makes the per-language readout trustworthy)."""
         from pyspark.sql import functions as F
-        from beats_spark.operators.sketch import hll_overlap, hll_overlap_by
 
         a = spark.createDataFrame(
             [(f"l{i % 2}", f"x{i}") for i in range(400)], "g string, v string"
@@ -235,9 +218,9 @@ class TestGroupedOverlap:
         }
         assert set(rows) == {"l0", "l1"}
         for g in ("l0", "l1"):
-            single = hll_overlap(
-                a.where(F.col("g") == g), F.col("v"),
-                b.where(F.col("g") == g), F.col("v"),
+            single = hll_overlap_by(
+                a.where(F.col("g") == g), b.where(F.col("g") == g), [],
+                F.col("v"),
             ).collect()[0]
             got = rows[g]
             for c in ("est_a", "est_b", "est_union", "est_inter", "jaccard"):
@@ -245,7 +228,6 @@ class TestGroupedOverlap:
 
     def test_one_sided_group_is_fully_novel(self, spark):
         from pyspark.sql import functions as F
-        from beats_spark.operators.sketch import hll_overlap_by
 
         a = spark.createDataFrame(
             [("only_a", f"x{i}") for i in range(100)], "g string, v string"
@@ -269,22 +251,17 @@ class TestGroupedOverlap:
         propagates — the overlap row would diverge cross-engine
         (ADVICE r4)."""
         import duckdb
-        from beats_spark.operators.sketch import (
-            hll_cardinality,
-            hll_cardinality_sql,
-            hll_overlap,
-            hll_overlap_sql,
-        )
+        from beats_spark.operators.sketch import hll_overlap_sql
         from pyspark.sql import functions as F
 
         empty = spark.createDataFrame([], "v string")
         full = spark.createDataFrame(
             [(f"z{i}",) for i in range(200)], "v string"
         )
-        card = hll_cardinality(empty, F.col("v")).collect()[0]
+        card = _cardinality(empty, F.col("v")).collect()[0]
         assert card["estimate"] == 0.0 and card["n_nonzero"] == 0
 
-        row = hll_overlap(empty, F.col("v"), full, F.col("v")).collect()[0]
+        row = hll_overlap_by(empty, full, [], F.col("v")).collect()[0]
         assert row["est_a"] == 0.0
         assert row["est_inter"] == 0.0
         assert row["jaccard"] == 0.0

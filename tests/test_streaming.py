@@ -175,7 +175,10 @@ class TestStreamingHll:
         replay-safe (rewriting a batch partition changes nothing)."""
         import time as _t
         from pyspark.sql import functions as F
-        from beats_spark.operators.sketch import hll_cardinality
+        from beats_spark.operators.sketch import (
+            hll_estimate_by,
+            hll_registers_by,
+        )
         from beats_spark.streaming.monitor import StreamingHll
 
         src = tmp_path / "in"
@@ -207,8 +210,8 @@ class TestStreamingHll:
         q2.awaitTermination(120)
 
         got = mon.estimate(spark).collect()[0]
-        want = hll_cardinality(
-            df1.unionByName(df2), F.col("conv_id")
+        want = hll_estimate_by(
+            hll_registers_by(df1.unionByName(df2), [], F.col("conv_id")), []
         ).collect()[0]
         assert got["estimate"] == want["estimate"]
         assert got["n_nonzero"] == want["n_nonzero"]
