@@ -1774,7 +1774,7 @@ def q_heavy_hitters(spark, sf_dir):
 def _heavy_hitters_oracle() -> str:
     from .operators.heavyhitters import (
         cms_estimate_sql,
-        histogram_quantiles_sql,
+        histogram_quantiles_by_sql,
         skew_report_sql,
         top_k_terms_sql,
     )
@@ -1801,8 +1801,8 @@ UNION ALL
 SELECT 'hq' AS variant, CAST(-1 AS BIGINT) AS id,
        CAST(q AS VARCHAR) AS term, CAST(NULL AS BIGINT) AS m1,
        est AS frac
-FROM ({histogram_quantiles_sql(
-        "documents", "n_chars", [0.5, 0.9, 0.99], lo=0, hi=4096)})
+FROM ({histogram_quantiles_by_sql(
+        "documents", [], "n_chars", [0.5, 0.9, 0.99], lo=0, hi=4096)})
 """
 
 

@@ -436,66 +436,30 @@ def histogram_quantiles_by_sql(
     hi: int,
     n_bins: int = 256,
 ) -> str:
-    """DuckDB twin of :func:`histogram_quantiles_by`."""
+    """DuckDB twin of :func:`histogram_quantiles_by` (the whole table
+    with no ``group_sql``)."""
     width = (hi - lo) / n_bins
     q_rows = ", ".join(f"({float(x)})" for x in qs)
-    g = ", ".join(group_sql)
+    g = "".join(f"{c}, " for c in group_sql)
+    part = f"PARTITION BY {', '.join(group_sql)}" if group_sql else ""
     return f"""
 WITH _hq_b AS MATERIALIZED (
-  SELECT {g}, least({n_bins - 1}, greatest(0,
+  SELECT {g}least({n_bins - 1}, greatest(0,
            CAST(floor(CAST(CAST({value_expr} AS BIGINT) - {lo} AS DOUBLE)
                       * {n_bins} / {hi - lo}) AS BIGINT))) AS bin,
          count(*) AS cnt
   FROM {table} GROUP BY ALL
 ),
 _hq_c AS (
-  SELECT {g}, bin, cnt,
-         coalesce(sum(cnt) OVER (PARTITION BY {g} ORDER BY bin
+  SELECT {g}bin, cnt,
+         coalesce(sum(cnt) OVER ({part} ORDER BY bin
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
            AS cum_before,
-         sum(cnt) OVER (PARTITION BY {g}) AS n
+         sum(cnt) OVER ({part}) AS n
   FROM _hq_b
 ),
 _hq_q AS (SELECT CAST(q AS DOUBLE) AS q FROM (VALUES {q_rows}) v(q))
-SELECT {g}, q,
-       round({float(lo)} + {width} * (bin + (q * (n - 1) - cum_before)
-             / cnt), 6) AS est
-FROM _hq_c, _hq_q
-WHERE cnt > 0 AND cum_before <= q * (n - 1)
-  AND q * (n - 1) < cum_before + cnt
-"""
-
-
-def histogram_quantiles_sql(
-    table: str,
-    value_expr: str,
-    qs: list[float],
-    lo: int,
-    hi: int,
-    n_bins: int = 256,
-) -> str:
-    """DuckDB twin of :func:`histogram_quantiles_by` with no group
-    columns (lock-step bin arithmetic and interpolation)."""
-    width = (hi - lo) / n_bins
-    q_rows = ", ".join(f"({float(x)})" for x in qs)
-    return f"""
-WITH _hq_b AS MATERIALIZED (
-  SELECT least({n_bins - 1}, greatest(0,
-           CAST(floor(CAST(CAST({value_expr} AS BIGINT) - {lo} AS DOUBLE)
-                      * {n_bins} / {hi - lo}) AS BIGINT))) AS bin,
-         count(*) AS cnt
-  FROM {table} GROUP BY 1
-),
-_hq_c AS (
-  SELECT bin, cnt,
-         coalesce(sum(cnt) OVER (ORDER BY bin
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS cum_before,
-         sum(cnt) OVER () AS n
-  FROM _hq_b
-),
-_hq_q AS (SELECT CAST(q AS DOUBLE) AS q FROM (VALUES {q_rows}) v(q))
-SELECT q,
+SELECT {g}q,
        round({float(lo)} + {width} * (bin + (q * (n - 1) - cum_before)
              / cnt), 6) AS est
 FROM _hq_c, _hq_q

@@ -36,7 +36,44 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..plans.materialize import materialize as _materialize
 
-from .similarity import KMEANS_SCALE, _km_scaled, _km_train, kmeans_ivf_sql
+from .similarity import (
+    KMEANS_SCALE,
+    _centroid_scores,
+    _km_assign,
+    _km_scaled,
+    _km_train,
+    _scaled_sql,
+    _sq_fold,
+    _sq_fold_sql,
+    _topk,
+    _topk_sql,
+    kmeans_ivf_sql,
+)
+
+_SCALE2 = float(KMEANS_SCALE) ** 2
+
+
+def _subvectors(xq: DataFrame, m: int, d: int, id_alias: str = "vid") -> DataFrame:
+    """``(id_alias, _s0 .. _s{m-1})``: the ``m`` width-``d`` slices of
+    a scaled ``(vid, xq)`` frame, each materialized once per row."""
+    return xq.select(
+        F.col("vid").alias(id_alias),
+        *[F.slice("xq", j * d + 1, d).alias(f"_s{j}") for j in range(m)],
+    )
+
+
+def _pq_books(xq: DataFrame, m: int, ks: int, iters: int) -> list:
+    """:func:`pq_train` over a materialized scaled ``(vid, xq)`` frame."""
+    dim = xq.select(F.size("xq").alias("d")).first()["d"]
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    d = dim // m
+    return [
+        _km_train(
+            xq.select("vid", F.slice("xq", j * d + 1, d).alias("xq")), ks, iters
+        )
+        for j in range(m)
+    ]
 
 
 def pq_train(
@@ -50,18 +87,33 @@ def pq_train(
     """Train ``m`` per-subspace codebooks (``ks`` centroids each).
     Returns driver-side centroid literals, one book per subspace."""
     xq = _km_scaled(df, id_col, vec_col).transform(_materialize)
-    dim = xq.select(F.size("xq").alias("d")).first()["d"]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d = dim // m
-    return [
-        _km_train(
-            xq.select("vid", F.slice("xq", j * d + 1, d).alias("xq")),
-            ks,
-            iters,
-        )
-        for j in range(m)
-    ]
+    return _pq_books(xq, m, ks, iters)
+
+
+def _pq_codes(xq: DataFrame, books: list) -> DataFrame:
+    """:func:`pq_encode` over a scaled ``(vid, xq)`` frame; rows
+    ``(vid, codes, dists)``."""
+    m = len(books)
+    staged = _subvectors(xq, m, len(books[0][0][1]))
+    # same argmin as _km_assign: min dist, then lowest cell
+    picked = staged.select(
+        "vid",
+        *[
+            F.array_min(_centroid_scores(F.col(f"_s{j}"), bk, _sq_fold)).alias(
+                f"_b{j}"
+            )
+            for j, bk in enumerate(books)
+        ],
+    )
+    return picked.select(
+        "vid",
+        F.array(
+            *[F.col(f"_b{j}")["cell"].cast("long") for j in range(m)]
+        ).alias("codes"),
+        F.array(
+            *[F.round(F.col(f"_b{j}")["d"] / F.lit(_SCALE2), 6) for j in range(m)]
+        ).alias("dists"),
+    )
 
 
 def pq_encode(
@@ -76,68 +128,45 @@ def pq_encode(
     the subvector slices materialize once per row (expression-reuse
     gotcha — each book's ks distance folds scan its slice), then all
     m argmins evaluate together."""
-    m = len(books)
-    d = len(books[0][0][1])
-    xq = _km_scaled(df, id_col, vec_col)
-    staged = xq.select(
-        "vid",
-        *[F.slice("xq", j * d + 1, d).alias(f"_s{j}") for j in range(m)],
-    )
-
-    def best(j: int, book):
-        scored = F.array(
-            *[
-                F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col(f"_s{j}"),
-                            F.array(*[F.lit(float(x)) for x in cvec]),
-                            lambda a, b: (a.cast("double") - b)
-                            * (a.cast("double") - b),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ).alias("dist"),
-                    F.lit(int(cell)).alias("cell"),
-                )
-                for cell, cvec in book
-            ]
-        )
-        # same tie-break as _km_assign: min dist, then lowest cell
-        return F.array_min(scored)
-
-    picked = staged.select(
-        "vid", *[best(j, bk).alias(f"_b{j}") for j, bk in enumerate(books)]
-    )
-    scale2 = float(KMEANS_SCALE) ** 2
-    return picked.select(
-        F.col("vid").alias(id_col),
-        F.array(
-            *[F.col(f"_b{j}")["cell"].cast("long") for j in range(m)]
-        ).alias("codes"),
-        F.array(
-            *[
-                F.round(F.col(f"_b{j}")["dist"] / F.lit(scale2), 6)
-                for j in range(m)
-            ]
-        ).alias("dists"),
+    return _pq_codes(_km_scaled(df, id_col, vec_col), books).withColumnRenamed(
+        "vid", id_col
     )
 
 
 # -- ADC search ---------------------------------------------------------------
 
 
-def _sq_fold(vec, cvec: list[float]):
-    """Squared euclidean between a scaled-long slice column and a
-    centroid literal — the `_km_assign` arithmetic."""
-    return F.aggregate(
-        F.zip_with(
-            vec,
-            F.array(*[F.lit(float(x)) for x in cvec]),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _adc_lut(qxq: DataFrame, books: list) -> DataFrame:
+    """``(q_id, j, cell, qdist)``: each query's m×ks table of subspace
+    distances to every codebook centroid, from a scaled ``(vid, xq)``
+    query frame. Every entry snaps to an integer (scaled space), so a
+    candidate's sum over its m codes is order-free."""
+    staged = _subvectors(qxq, len(books), len(books[0][0][1]), "q_id")
+    entries = F.flatten(
+        F.array(
+            *[
+                F.transform(
+                    _centroid_scores(F.col(f"_s{j}"), book, _sq_fold),
+                    lambda t: F.struct(
+                        F.lit(j).alias("j"),
+                        t["cell"].alias("cell"),
+                        F.floor(t["d"] + F.lit(0.5)).cast("long").alias("qdist"),
+                    ),
+                )
+                for j, book in enumerate(books)
+            ]
+        )
+    )
+    return staged.select("q_id", F.explode(entries).alias("e")).select(
+        "q_id", "e.j", "e.cell", "e.qdist"
+    )
+
+
+def _adc_sum(pairs: DataFrame) -> DataFrame:
+    """``(q_id, neighbor_id, adc_dist)``: the LUT entries a candidate's
+    codes joined, summed and divided once."""
+    return pairs.groupBy("q_id", "neighbor_id").agg(
+        F.round(F.sum("qdist").cast("double") / F.lit(_SCALE2), 6).alias("adc_dist")
     )
 
 
@@ -164,68 +193,17 @@ def pq_topk(
     ties break on neighbor id. Returns (q_id, neighbor_id, adc_dist,
     rank) with adc_dist the squared euclidean to the RECONSTRUCTION —
     approximate by construction."""
-    m = len(books)
-    d = len(books[0][0][1])
-    scale2 = float(KMEANS_SCALE) ** 2
-
-    codes = pq_encode(df, books).select(
-        F.col(id_col).alias("neighbor_id"), "codes"
-    )
-    qxq = _km_scaled(
-        df.where(F.col(id_col).isin(query_ids)), id_col, vec_col
-    )
-    staged = qxq.select(
-        F.col("vid").alias("q_id"),
-        *[F.slice("xq", j * d + 1, d).alias(f"_s{j}") for j in range(m)],
-    )
-    entries = F.flatten(
-        F.array(
-            *[
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            F.lit(int(cell)).alias("cell"),
-                            F.floor(
-                                _sq_fold(F.col(f"_s{j}"), cvec) + F.lit(0.5)
-                            )
-                            .cast("long")
-                            .alias("qdist"),
-                        )
-                        for cell, cvec in book
-                    ]
-                )
-                for j, book in enumerate(books)
-            ]
-        )
-    )
-    lut = staged.select("q_id", F.explode(entries).alias("e")).select(
-        "q_id", "e.j", "e.cell", "e.qdist"
-    )
-
+    codes = _pq_codes(_km_scaled(df, id_col, vec_col), books)
     ex = codes.select(
-        "neighbor_id", F.posexplode("codes").alias("j", "cell")
+        F.col("vid").alias("neighbor_id"), F.posexplode("codes").alias("j", "cell")
     )
-    scored = (
-        ex.join(F.broadcast(lut), ["j", "cell"])
-        .where(F.col("neighbor_id") != F.col("q_id"))
-        .groupBy("q_id", "neighbor_id")
-        .agg(
-            F.round(
-                F.sum("qdist").cast("double") / F.lit(scale2), 6
-            ).alias("adc_dist")
-        )
+    lut = _adc_lut(
+        _km_scaled(df.where(F.col(id_col).isin(query_ids)), id_col, vec_col), books
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
+    pairs = ex.join(F.broadcast(lut), ["j", "cell"]).where(
+        F.col("neighbor_id") != F.col("q_id")
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "adc_dist", "rank")
-    )
+    return _topk(_adc_sum(pairs), k, "adc_dist")
 
 
 def ivf_pq_topk(
@@ -243,11 +221,11 @@ def ivf_pq_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The full FAISS-style IVF-PQ composition: coarse-quantize the
-    corpus into ``n_cells`` trained IVF cells (similarity.kmeans_ivf),
-    PQ-encode every vector, then answer a query by ADC-ranking ONLY
-    the vectors in its ``nprobe`` nearest cells. Approximate on both
-    axes (cell recall × code quantization) — the trade every
-    production vector store makes.
+    corpus into ``n_cells`` trained IVF cells (the k-means of
+    similarity.kmeans_ivf), PQ-encode every vector, then answer a
+    query by ADC-ranking ONLY the vectors in its ``nprobe`` nearest
+    cells. Approximate on both axes (cell recall × code quantization)
+    — the trade every production vector store makes.
 
     ``rerank=R`` (R ≥ k) adds the production refine step: the ADC
     pass keeps its top R candidates per query, and only those q×R
@@ -258,149 +236,56 @@ def ivf_pq_topk(
     rerank, ~1.0 with). The corpus-wide pass still never touches
     vectors; rerank touches exactly q×R.
 
+    Setup scales the corpus once, materializes it once, and trains the
+    IVF centroids and the m codebooks on it.
+
     Plan: candidate generation is an equi-join on ``cell`` (the r2
     verdict's ann_ivf fix — never array_contains in a join), scoring
     is the broadcast-LUT m-lookup sum from :func:`pq_topk`. Each
     component is oracle-checked on its own driver row; the
     composition is covered by recall floors in tests/test_pq.py."""
-    from .similarity import kmeans_ivf
-
-    assigned = kmeans_ivf(
-        df, k=n_cells, iters=ivf_iters, id_col=id_col, vec_col=vec_col
-    ).select(id_col, "cell")
-
-    books = pq_train(
-        df, m=m, ks=ks, iters=pq_iters, id_col=id_col, vec_col=vec_col
-    )
-    codes = pq_encode(df, books, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "codes"
-    )
-    cand = codes.join(
-        assigned.select(F.col(id_col).alias("neighbor_id"), "cell"),
-        "neighbor_id",
-    )
-
-    # queries probe their nprobe nearest IVF cells: rebuild the full
-    # centroids the same way kmeans_ivf trains them, score the (tiny)
-    # query side, explode to (q_id, cell) probe rows
+    if rerank and rerank < k:
+        raise ValueError(f"rerank={rerank} < k={k}")
     xq = _km_scaled(df, id_col, vec_col).transform(_materialize)
     cents = _km_train(xq, n_cells, ivf_iters)
-    qonly = xq.where(F.col("vid").isin(query_ids))
-    probe_scored = F.array(
-        *[
-            F.struct(
-                _sq_fold(F.col("xq"), cvec).alias("dist"),
-                F.lit(int(cell)).alias("cell"),
-            )
-            for cell, cvec in cents
-        ]
-    )
-    probes = (
-        qonly.select(
-            F.col("vid").alias("q_id"),
-            F.explode(
-                F.slice(F.array_sort(probe_scored), 1, nprobe)
-            ).alias("p"),
-        ).select("q_id", F.col("p.cell").alias("cell"))
-    )
+    books = _pq_books(xq, m, ks, pq_iters)
+    cand = _pq_codes(xq, books).join(_km_assign(xq, cents).select("vid", "cell"), "vid")
 
-    d = len(books[0][0][1])
-    staged = xq.where(F.col("vid").isin(query_ids)).select(
+    # queries probe their nprobe nearest IVF cells: explode to
+    # (q_id, cell) probe rows
+    qonly = xq.where(F.col("vid").isin(query_ids))
+    probe_scored = _centroid_scores(F.col("xq"), cents, _sq_fold)
+    probes = qonly.select(
         F.col("vid").alias("q_id"),
-        *[F.slice("xq", j * d + 1, d).alias(f"_s{j}") for j in range(m)],
-    )
-    entries = F.flatten(
-        F.array(
-            *[
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            F.lit(int(cell)).alias("cell_j"),
-                            F.floor(
-                                _sq_fold(F.col(f"_s{j}"), cvec) + F.lit(0.5)
-                            )
-                            .cast("long")
-                            .alias("qdist"),
-                        )
-                        for cell, cvec in book
-                    ]
-                )
-                for j, book in enumerate(books)
-            ]
-        )
-    )
-    lut = staged.select("q_id", F.explode(entries).alias("e")).select(
-        "q_id", F.col("e.j").alias("j"), F.col("e.cell_j").alias("cell_j"),
-        "e.qdist",
-    )
+        F.explode(F.slice(F.array_sort(probe_scored), 1, nprobe)).alias("p"),
+    ).select("q_id", F.col("p.cell").alias("cell"))
 
     # candidates = probed cells only (equi-join on cell), then the ADC
     # m-lookup sum
     probed = cand.join(F.broadcast(probes), "cell").where(
-        F.col("neighbor_id") != F.col("q_id")
+        F.col("vid") != F.col("q_id")
     )
     ex = probed.select(
-        "q_id", "neighbor_id", F.posexplode("codes").alias("j", "cell_j")
+        "q_id",
+        F.col("vid").alias("neighbor_id"),
+        F.posexplode("codes").alias("j", "cell"),
     )
-    scale2 = float(KMEANS_SCALE) ** 2
-    scored = (
-        ex.join(F.broadcast(lut), ["q_id", "j", "cell_j"])
-        .groupBy("q_id", "neighbor_id")
-        .agg(
-            F.round(
-                F.sum("qdist").cast("double") / F.lit(scale2), 6
-            ).alias("adc_dist")
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    ranked = scored.withColumn("rank", F.row_number().over(w))
+    lut = _adc_lut(qonly, books)
+    scored = _adc_sum(ex.join(F.broadcast(lut), ["q_id", "j", "cell"]))
     if not rerank:
-        return ranked.where(F.col("rank") <= k).select(
-            "q_id", "neighbor_id", "adc_dist", "rank"
-        )
+        return _topk(scored, k, "adc_dist")
 
     # refine: exact snapped distance for the surviving q×R rows only
-    if rerank < k:
-        raise ValueError(f"rerank={rerank} < k={k}")
-    cand2 = ranked.where(F.col("rank") <= rerank).select(
-        "q_id", "neighbor_id"
-    )
-    nvec = xq.select(
-        F.col("vid").alias("neighbor_id"), F.col("xq").alias("nxq")
-    )
+    cand2 = _topk(scored, rerank, "adc_dist").select("q_id", "neighbor_id")
+    nvec = xq.select(F.col("vid").alias("neighbor_id"), F.col("xq").alias("nxq"))
     qvec = qonly.select(F.col("vid").alias("q_id"), F.col("xq").alias("qxq"))
     exact = cand2.join(nvec, "neighbor_id").join(F.broadcast(qvec), "q_id")
     edist = F.round(
-        F.floor(
-            F.aggregate(
-                F.zip_with(
-                    "qxq",
-                    "nxq",
-                    lambda a, b: (a.cast("double") - b.cast("double"))
-                    * (a.cast("double") - b.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            + F.lit(0.5)
-        ).cast("double")
-        / F.lit(scale2),
+        F.floor(_sq_fold(F.col("qxq"), F.col("nxq")) + F.lit(0.5)).cast("double")
+        / F.lit(_SCALE2),
         6,
     )
-    rescored = exact.select("q_id", "neighbor_id", edist.alias("dist"))
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.asc("dist"), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "dist", "rank")
-    )
+    return _topk(exact.select("q_id", "neighbor_id", edist.alias("dist")), k, "dist")
 
 
 def pq_topk_sql(
@@ -436,10 +321,8 @@ def pq_topk_sql(
     )
     lut_parts = "\nUNION ALL\n".join(
         f"""SELECT q.q_id, {j} AS j, c.cell,
-       CAST(floor(list_sum(list_transform(
-              list_zip(list_slice(q.qxq, {j * d + 1}, {j * d + d}), c.cvec),
-              p -> (p[1]::DOUBLE - p[2]) * (p[1]::DOUBLE - p[2]))) + 0.5)
-            AS BIGINT) AS qdist
+       CAST(floor({_sq_fold_sql(f"list_slice(q.qxq, {j * d + 1}, {j * d + d})",
+                                "c.cvec")} + 0.5) AS BIGINT) AS qdist
 FROM q CROSS JOIN cents{j} c"""
         for j in range(m)
     )
@@ -451,10 +334,7 @@ FROM q CROSS JOIN cents{j} c"""
 WITH {code_ctes},
 {cent_ctes},
 q AS (
-  SELECT {id_col} AS q_id,
-         list_transform({vec_col},
-           x -> CAST(floor(x::DOUBLE * {KMEANS_SCALE} + 0.5) AS BIGINT))
-           AS qxq
+  SELECT {id_col} AS q_id, {_scaled_sql(vec_col)} AS qxq
   FROM {table} WHERE {id_col} IN ({ids})
 ),
 lut AS (
@@ -465,15 +345,10 @@ ex AS (
 ),
 scored AS (
   SELECT q_id, neighbor_id,
-         round(CAST(sum(qdist) AS DOUBLE) / {float(KMEANS_SCALE) ** 2:.1f}, 6)
-           AS adc_dist
+         round(CAST(sum(qdist) AS DOUBLE) / {_SCALE2:.1f}, 6) AS adc_dist
   FROM ex JOIN lut USING (j, cell)
   WHERE neighbor_id <> q_id
   GROUP BY q_id, neighbor_id
 )
-SELECT q_id, neighbor_id, adc_dist, CAST(rank AS BIGINT) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY q_id
-                               ORDER BY adc_dist ASC, neighbor_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {k}
+{_topk_sql("adc_dist", k)}
 """

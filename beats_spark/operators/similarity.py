@@ -16,6 +16,8 @@ neighbor id — so Spark and DuckDB produce identical top-k sets.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from ..plans.materialize import materialize as _materialize
@@ -43,6 +45,165 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _cos6(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` over their precomputed norms, rounded
+    to 6 dp. Norms are per-vector, so callers fold them once per side
+    (the same fold → bit-identical floats) and each pair runs one
+    interpreted array fold (the dot), not three."""
+    return F.round(dot(a, b) / (na * nb), 6)
+
+
+def _sq_fold(a: Column, b: Column) -> Column:
+    """Squared euclidean between two arrays, folded in double in index
+    order: the k-means, PQ and rerank distance."""
+    return F.aggregate(
+        F.zip_with(
+            a,
+            b,
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _centroid_scores(vec: Column, cents: list, fold) -> Column:
+    """``array<struct<d, cell>>``: ``fold(vec, centroid)`` for each
+    ``(cell, cvec)`` driver literal. Structs compare field by field, so
+    ``array_min``/``array_max``/``array_sort`` rank by the score and
+    break ties on the cell id."""
+    return F.array(
+        *[
+            F.struct(
+                fold(vec, F.array(*[F.lit(float(x)) for x in cvec])).alias("d"),
+                F.lit(int(cell)).alias("cell"),
+            )
+            for cell, cvec in cents
+        ]
+    )
+
+
+def _topk(scored: DataFrame, k: int, score: str, desc: bool = False) -> DataFrame:
+    """``(q_id, neighbor_id, score, rank)``: each query's ``k`` best
+    rows by ``score`` (highest first when ``desc``), ties to the lower
+    neighbor id."""
+    w = Window.partitionBy("q_id").orderBy(
+        F.desc(score) if desc else F.asc(score), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("q_id", "neighbor_id", score, "rank")
+    )
+
+
+def _queries(
+    df: DataFrame, query_ids: list[int], id_col: str, vec_col: str, *extra: Column
+) -> DataFrame:
+    """The query set ``(q_id, q_vec, q_nrm, *extra)``."""
+    return df.where(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("q_id"),
+        F.col(vec_col).alias("q_vec"),
+        norm(F.col(vec_col)).alias("q_nrm"),
+        *extra,
+    )
+
+
+def _cos_scored(
+    corpus: DataFrame,
+    q: DataFrame,
+    on: Column | str | None,
+    id_col: str,
+    vec_col: str,
+    *extra: Column,
+) -> DataFrame:
+    """``(q_id, *extra, neighbor_id, cos_sim)`` of every corpus row the
+    broadcast query set joins ``on``, self-pairs dropped."""
+    pairs = (
+        corpus.withColumn("_nrm", norm(F.col(vec_col)))
+        .join(F.broadcast(q), on)
+        .where(F.col(id_col) != F.col("q_id"))
+    )
+    return pairs.select(
+        "q_id",
+        *extra,
+        F.col(id_col).alias("neighbor_id"),
+        _cos6(F.col("q_vec"), F.col(vec_col), F.col("q_nrm"), F.col("_nrm")).alias(
+            "cos_sim"
+        ),
+    )
+
+
+# DuckDB twins of the folds above: the same operand order, in double
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}), "
+        f"p -> p[1]::DOUBLE * p[2]::DOUBLE))"
+    )
+
+
+def _norm_sql(a: str) -> str:
+    return f"sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))"
+
+
+def _cos6_sql(a: str, b: str) -> str:
+    return f"round({_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)}), 6)"
+
+
+def _sq_fold_sql(a: str, b: str) -> str:
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}), "
+        f"p -> (p[1]::DOUBLE - p[2]) * (p[1]::DOUBLE - p[2])))"
+    )
+
+
+def _lits_sql(vec: list[float]) -> str:
+    return f"[{','.join(repr(x) for x in vec)}]::DOUBLE[]"
+
+
+def _scaled_sql(vec: str) -> str:
+    """The twin of :func:`_km_scaled`'s exact scaled longs."""
+    return (
+        f"list_transform({vec}, "
+        f"x -> CAST(floor(x::DOUBLE * {KMEANS_SCALE} + 0.5) AS BIGINT))"
+    )
+
+
+def _topk_sql(score: str, k: int, desc: bool = False) -> str:
+    """The twin of :func:`_topk` over a ``scored`` CTE."""
+    return f"""SELECT q_id, neighbor_id, {score}, CAST(rank AS BIGINT) AS rank FROM (
+  SELECT *, row_number() OVER (PARTITION BY q_id
+    ORDER BY {score} {'DESC' if desc else 'ASC'}, neighbor_id ASC) AS rank
+  FROM scored
+) WHERE rank <= {k}"""
+
+
+def _cos_topk_sql(
+    corpus: str, q_extra: str, on: str, query_ids: list[int], k: int,
+    id_col: str, vec_col: str,
+) -> str:
+    """The twin of :func:`_cos_scored` + :func:`_topk`: the corpus
+    (``corpus`` as the CTE ``c``) joined ``on`` its queries ``q``, which
+    carry the ``q_extra`` columns."""
+    ids = ",".join(str(i) for i in query_ids)
+    return f"""
+WITH c AS ({corpus}),
+q AS (
+  SELECT {id_col} AS q_id, {vec_col} AS q_vec{q_extra}
+  FROM c WHERE {id_col} IN ({ids})
+),
+scored AS (
+  SELECT q.q_id, c.{id_col} AS neighbor_id,
+         {_cos6_sql("q.q_vec", f"c.{vec_col}")} AS cos_sim
+  FROM c JOIN q ON {on} AND c.{id_col} <> q.q_id
+)
+{_topk_sql("cos_sim", k, desc=True)}
+"""
+
+
 def brute_force_topk(
     df: DataFrame,
     query_ids: list[int],
@@ -53,66 +214,17 @@ def brute_force_topk(
     """Exact cosine top-k for each query id. The query side is tiny →
     broadcast; the corpus side streams with no shuffle until the
     per-query top-k aggregation (a windowed rank over q_id)."""
-    # norms are per-vector: precompute them on each side (identical
-    # fold → bit-identical float) so every pair runs ONE interpreted
-    # array fold (the dot), not three
-    corpus = df.withColumn("_nrm", norm(F.col(vec_col)))
-    q = corpus.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("_nrm").alias("q_nrm"),
-    )
-    pairs = corpus.alias("c").join(
-        F.broadcast(q), F.col(id_col) != F.col("q_id")
-    )
-    scored = pairs.select(
-        "q_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            dot(F.col("q_vec"), F.col(vec_col))
-            / (F.col("q_nrm") * F.col("_nrm")),
-            6,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "cos_sim", "rank")
-    )
+    q = _queries(df, query_ids, id_col, vec_col)
+    return _topk(_cos_scored(df, q, None, id_col, vec_col), k, "cos_sim", desc=True)
 
 
 def brute_force_topk_sql(
     table: str, query_ids: list[int], k: int = 10,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> str:
-    ids = ",".join(str(i) for i in query_ids)
-    return f"""
-WITH q AS (
-  SELECT {id_col} AS q_id, {vec_col} AS q_vec FROM {table}
-  WHERE {id_col} IN ({ids})
-),
-scored AS (
-  SELECT q.q_id, c.{id_col} AS neighbor_id,
-         round(
-           list_sum(list_transform(list_zip(q.q_vec, c.{vec_col}),
-                                   p -> p[1]::DOUBLE * p[2]::DOUBLE))
-           / (sqrt(list_sum(list_transform(q.q_vec, x -> x::DOUBLE * x::DOUBLE)))
-              * sqrt(list_sum(list_transform(c.{vec_col}, x -> x::DOUBLE * x::DOUBLE)))),
-           6) AS cos_sim
-  FROM {table} c, q
-  WHERE c.{id_col} <> q.q_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id
-                               ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cos_sim, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {k}
-"""
+    return _cos_topk_sql(
+        f"SELECT * FROM {table}", "", "TRUE", query_ids, k, id_col, vec_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -138,6 +250,15 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return out
 
 
+def _lsh_bucket_sql(vec_col: str, planes: list[list[float]]) -> str:
+    """The twin of :func:`lsh_bucket`."""
+    terms = " + ".join(
+        f"(CASE WHEN {_dot_sql(vec_col, _lits_sql(p))} > 0 THEN {1 << i} ELSE 0 END)"
+        for i, p in enumerate(planes)
+    )
+    return f"({terms or 0})::BIGINT"
+
+
 def ann_lsh_topk(
     df: DataFrame,
     query_ids: list[int],
@@ -150,35 +271,13 @@ def ann_lsh_topk(
     """ANN: probe only the query's sign bucket. Recall < 1 by design;
     the oracle reproduces the identical buckets so results still
     match exactly."""
-    planes = [hyperplane(dim, i) for i in range(n_planes)]
-    bucketed = df.withColumn(
-        "bucket", lsh_bucket(F.col(vec_col), planes)
-    ).withColumn("_nrm", norm(F.col(vec_col)))
-    q = bucketed.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("_nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
+    bucket = lsh_bucket(F.col(vec_col), [hyperplane(dim, i) for i in range(n_planes)])
+    q = _queries(df, query_ids, id_col, vec_col, bucket.alias("q_bucket"))
+    scored = _cos_scored(
+        df.withColumn("bucket", bucket), q,
+        F.col("bucket") == F.col("q_bucket"), id_col, vec_col,
     )
-    pairs = bucketed.alias("c").join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("q_bucket")) & (F.col(id_col) != F.col("q_id")),
-    )
-    scored = pairs.select(
-        "q_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            dot(F.col("q_vec"), F.col(vec_col))
-            / (F.col("q_nrm") * F.col("_nrm")),
-            6,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _topk(scored, k, "cos_sim", desc=True)
 
 
 def ann_lsh_topk_sql(
@@ -186,40 +285,12 @@ def ann_lsh_topk_sql(
     n_planes: int = 4, dim: int = 64,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> str:
-    ids = ",".join(str(i) for i in query_ids)
     planes = [hyperplane(dim, i) for i in range(n_planes)]
-    bucket_terms = " + ".join(
-        f"(CASE WHEN list_sum(list_transform(list_zip({vec_col}, "
-        f"[{','.join(repr(x) for x in p)}]::DOUBLE[]), "
-        f"p -> p[1]::DOUBLE * p[2])) > 0 THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
+    return _cos_topk_sql(
+        f"SELECT *, {_lsh_bucket_sql(vec_col, planes)} AS bucket FROM {table}",
+        ", bucket AS q_bucket", "c.bucket = q.q_bucket",
+        query_ids, k, id_col, vec_col,
     )
-    return f"""
-WITH b AS (
-  SELECT *, ({bucket_terms})::BIGINT AS bucket FROM {table}
-),
-q AS (
-  SELECT {id_col} AS q_id, {vec_col} AS q_vec, bucket AS q_bucket
-  FROM b WHERE {id_col} IN ({ids})
-),
-scored AS (
-  SELECT q.q_id, c.{id_col} AS neighbor_id,
-         round(
-           list_sum(list_transform(list_zip(q.q_vec, c.{vec_col}),
-                                   p -> p[1]::DOUBLE * p[2]::DOUBLE))
-           / (sqrt(list_sum(list_transform(q.q_vec, x -> x::DOUBLE * x::DOUBLE)))
-              * sqrt(list_sum(list_transform(c.{vec_col}, x -> x::DOUBLE * x::DOUBLE)))),
-           6) AS cos_sim
-  FROM b c JOIN q ON c.bucket = q.q_bucket AND c.{id_col} <> q.q_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id
-                               ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cos_sim, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {k}
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -237,21 +308,17 @@ def ivf_centroid(dim: int, c_idx: int, mod: int = 1000) -> list[float]:
     ]
 
 
+def _ivf_scores(vec: Column, centroids: list[list[float]]) -> Column:
+    # (dot, -idx): the highest dot wins, ties to the LOWEST centroid id
+    return _centroid_scores(vec, [(-i, c) for i, c in enumerate(centroids)], dot)
+
+
 def ivf_assign(vec: Column, centroids: list[list[float]]) -> Column:
     """Nearest-centroid id by maximum dot product (centroids are
     fixed-norm-ish; dot is the cheap IVF assignment). Deterministic
     tie-break: the LOWEST centroid id wins — array_max over
     (dot, -idx) structs."""
-    scored = F.array(
-        *[
-            F.struct(
-                dot(vec, F.array(*[F.lit(x) for x in c])).alias("d"),
-                F.lit(-i).alias("neg_idx"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return (-F.array_max(scored)["neg_idx"]).cast("int")
+    return (-F.array_max(_ivf_scores(vec, centroids))["cell"]).cast("int")
 
 
 def ivf_probe_cells(
@@ -260,17 +327,8 @@ def ivf_probe_cells(
     """The ``nprobe`` nearest centroid ids by descending dot product,
     ties to the LOWEST centroid id — element 1 equals
     :func:`ivf_assign` (same (d, -idx) ordering)."""
-    scored = F.array(
-        *[
-            F.struct(
-                dot(vec, F.array(*[F.lit(x) for x in c])).alias("d"),
-                F.lit(-i).alias("neg_idx"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    top = F.slice(F.reverse(F.array_sort(scored)), 1, nprobe)
-    return F.transform(top, lambda t: (-t.neg_idx).cast("int"))
+    top = F.slice(F.reverse(F.array_sort(_ivf_scores(vec, centroids))), 1, nprobe)
+    return F.transform(top, lambda t: (-t.cell).cast("int"))
 
 
 def ann_ivf_topk_multi(
@@ -298,11 +356,7 @@ def ann_ivf_topk_multi(
     ``cell_rank <= p`` filter (recall/latency sweeps and the merged
     ``ann_ivf`` driver row). Rows:
     ``(q_id, neighbor_id, cos_sim, rank, nprobe)``."""
-    max_probe = max(nprobes)
     cents = [ivf_centroid(dim, i) for i in range(n_centroids)]
-    cells = df.withColumn(
-        "cell", ivf_assign(F.col(vec_col), cents)
-    ).withColumn("_nrm", norm(F.col(vec_col)))
     # query side scores centroids ONCE (ivf_probe_cells; its element 1
     # equals ivf_assign, so the query's own cell is never recomputed)
     # and EXPLODES its probed cells to rows: the probe join is then an
@@ -313,55 +367,24 @@ def ann_ivf_topk_multi(
     # scale it blocks hash-join co-location on the cell key). A corpus
     # row lives in exactly one cell and q_cells are distinct, so the
     # explode cannot duplicate (q_id, neighbor) pairs.
-    q = (
-        df.where(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            norm(F.col(vec_col)).alias("q_nrm"),
-            ivf_probe_cells(F.col(vec_col), cents, max_probe).alias(
-                "q_cells"
-            ),
-        )
-        .select(
-            "q_id", "q_vec", "q_nrm",
-            F.posexplode("q_cells").alias("pos", "cell"),
-        )
-    )
-    pairs = cells.alias("c").join(F.broadcast(q), on="cell").where(
-        F.col(id_col) != F.col("q_id")
-    )
-    scored = pairs.select(
-        "q_id",
-        (F.col("pos") + 1).alias("cell_rank"),
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            dot(F.col("q_vec"), F.col(vec_col))
-            / (F.col("q_nrm") * F.col("_nrm")),
-            6,
-        ).alias("cos_sim"),
+    q = _queries(
+        df, query_ids, id_col, vec_col,
+        ivf_probe_cells(F.col(vec_col), cents, max(nprobes)).alias("q_cells"),
+    ).select("q_id", "q_vec", "q_nrm", F.posexplode("q_cells").alias("pos", "cell"))
+    scored = _cos_scored(
+        df.withColumn("cell", ivf_assign(F.col(vec_col), cents)), q, "cell",
+        id_col, vec_col, (F.col("pos") + 1).alias("cell_rank"),
     )
     if len(nprobes) > 1:  # one probe join feeds every width's ranking
         scored = scored.transform(_materialize)
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
+    return reduce(
+        DataFrame.unionByName,
+        [
+            _topk(scored.where(F.col("cell_rank") <= p), k, "cos_sim", desc=True)
+            .withColumn("nprobe", F.lit(p))
+            for p in nprobes
+        ],
     )
-    out = None
-    for p in nprobes:
-        ranked = (
-            scored.where(F.col("cell_rank") <= p)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                "q_id",
-                "neighbor_id",
-                "cos_sim",
-                "rank",
-                F.lit(p).alias("nprobe"),
-            )
-        )
-        out = ranked if out is None else out.unionByName(ranked)
-    return out
 
 
 def ann_ivf_topk_sql(
@@ -370,46 +393,20 @@ def ann_ivf_topk_sql(
     id_col: str = "vec_id", vec_col: str = "embedding",
     nprobe: int = 1,
 ) -> str:
-    ids = ",".join(str(i) for i in query_ids)
     cents = [ivf_centroid(dim, i) for i in range(n_centroids)]
-    # argmax by (dot, -idx): DuckDB list_max over [dot, -idx] pairs
-    pair_terms = ", ".join(
-        f"[list_sum(list_transform(list_zip({vec_col}, "
-        f"[{','.join(repr(x) for x in c)}]::DOUBLE[]), "
-        f"p -> p[1]::DOUBLE * p[2])), {float(-i)}]"
+    # the twin of _ivf_scores: [dot, -idx] pairs, list_max = argmax
+    scores = "[" + ", ".join(
+        f"[{_dot_sql(vec_col, _lits_sql(c))}, {float(-i)}]"
         for i, c in enumerate(cents)
+    ) + "]"
+    return _cos_topk_sql(
+        f"SELECT *, CAST(-list_max({scores})[2] AS INTEGER) AS cell FROM {table}",
+        f""",
+         list_transform(list_reverse(list_sort({scores}))[1:{nprobe}],
+                        p -> CAST(-p[2] AS INTEGER)) AS q_cells""",
+        "list_contains(q.q_cells, c.cell)",
+        query_ids, k, id_col, vec_col,
     )
-    return f"""
-WITH cells AS (
-  SELECT *, CAST(-list_max([{pair_terms}])[2] AS INTEGER) AS cell
-  FROM {table}
-),
-q AS (
-  SELECT {id_col} AS q_id, {vec_col} AS q_vec,
-         list_transform(
-           list_reverse(list_sort([{pair_terms}]))[1:{nprobe}],
-           p -> CAST(-p[2] AS INTEGER)) AS q_cells
-  FROM cells WHERE {id_col} IN ({ids})
-),
-scored AS (
-  SELECT q.q_id, c.{id_col} AS neighbor_id,
-         round(
-           list_sum(list_transform(list_zip(q.q_vec, c.{vec_col}),
-                                   p -> p[1]::DOUBLE * p[2]::DOUBLE))
-           / (sqrt(list_sum(list_transform(q.q_vec, x -> x::DOUBLE * x::DOUBLE)))
-              * sqrt(list_sum(list_transform(c.{vec_col}, x -> x::DOUBLE * x::DOUBLE)))),
-           6) AS cos_sim
-  FROM cells c JOIN q
-    ON list_contains(q.q_cells, c.cell) AND c.{id_col} <> q.q_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id
-                               ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cos_sim, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {k}
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -471,7 +468,9 @@ def quantization_stats(
     )
     # zero vector → scale 0 → cosine is 0/0: NULL (the oracle's
     # division yields NULL; ANSI mode would otherwise throw)
-    cos = F.when(F.col("s") > 0, F.round(cosine(F.col("v"), deq), 6))
+    cos = F.when(
+        F.col("s") > 0, _cos6(F.col("v"), deq, norm(F.col("v")), norm(deq))
+    )
     return base.select(
         "id",
         F.round(F.col("s"), 6).alias("scale"),
@@ -501,12 +500,7 @@ SELECT id,
        round(list_max(list_transform(list_zip(v, deq),
                                      p -> abs(p[1]::DOUBLE - p[2]))), 6)
          AS max_abs_err,
-       CASE WHEN s > 0 THEN round(
-         list_sum(list_transform(list_zip(v, deq),
-                                 p -> p[1]::DOUBLE * p[2]))
-         / (sqrt(list_sum(list_transform(v, x -> x::DOUBLE * x::DOUBLE)))
-            * sqrt(list_sum(list_transform(deq, x -> x * x)))),
-         6) END AS cos_orig_deq
+       CASE WHEN s > 0 THEN {_cos6_sql("v", "deq")} END AS cos_orig_deq
 FROM qd
 """
 
@@ -539,31 +533,13 @@ def _km_assign(xq: DataFrame, cent_rows: list) -> DataFrame:
     shuffle, no join, no window sort. The r1-style crossJoin+window
     alternative shuffled and sorted n×k rows per pass — the plan test
     pins this shape."""
-    scored = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        "xq",
-                        F.array(*[F.lit(float(x)) for x in cvec]),
-                        lambda a, b: (a.cast("double") - b)
-                        * (a.cast("double") - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("dist"),
-                F.lit(int(cell)).alias("cell"),
-            )
-            for cell, cvec in cent_rows
-        ]
-    )
     # struct comparison is lexicographic: min dist, tie → lowest cell
-    best = F.array_min(scored)
+    best = F.array_min(_centroid_scores(F.col("xq"), cent_rows, _sq_fold))
     return xq.select(
         "vid",
         best["cell"].alias("cell"),
         "xq",
-        best["dist"].alias("dist"),
+        best["d"].alias("dist"),
     )
 
 
@@ -682,10 +658,7 @@ def kmeans_ivf_sql(
            row_number() OVER (PARTITION BY vid
                               ORDER BY dist ASC, cell ASC) AS rn
     FROM (
-      SELECT x.vid, c.cell, x.xq,
-             list_sum(list_transform(list_zip(x.xq, c.cvec),
-               p -> (p[1]::DOUBLE - p[2]) * (p[1]::DOUBLE - p[2])))
-               AS dist
+      SELECT x.vid, c.cell, x.xq, {_sq_fold_sql("x.xq", "c.cvec")} AS dist
       FROM xq x CROSS JOIN {cents} c
     )
   ) WHERE rn = 1
@@ -708,11 +681,7 @@ def kmeans_ivf_sql(
 
     ctes = [
         f"""xq AS (
-  SELECT {id_col} AS vid,
-         list_transform({vec_col},
-           x -> CAST(floor(x::DOUBLE * {KMEANS_SCALE} + 0.5) AS BIGINT))
-           AS xq
-  FROM {table}
+  SELECT {id_col} AS vid, {_scaled_sql(vec_col)} AS xq FROM {table}
 )""",
         f"""c0 AS (
   SELECT row_number() OVER (ORDER BY vid) AS cell,
@@ -759,14 +728,7 @@ def embedding_neardup_pairs(
     hyperplane, the standard sign-LSH recall trade. Passing a data
     column (e.g. ``label``) keeps exact within-block comparison for
     evaluation fixtures — but a large real block there is quadratic,
-    so it is never the default.
-
-    .. versionchanged:: r2
-       The default ``block_col`` changed from ``'label'`` (exact
-       within-block, recall 1 inside blocks) to ``None`` (LSH
-       buckets, recall < 1). Callers that relied on the old default
-       must now pass ``block_col='label'`` explicitly to get the
-       identical — and at scale quadratic — pair set."""
+    so it is never the default."""
     if block_col is None:
         planes = [hyperplane(dim, i) for i in range(n_planes)]
         df = df.withColumn("_nd_blk", lsh_bucket(F.col(vec_col), planes))
@@ -792,13 +754,31 @@ def embedding_neardup_pairs(
         pairs.select(
             "id_a",
             "id_b",
-            F.round(
-                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-                6,
-            ).alias("cos_sim"),
+            _cos6(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")).alias(
+                "cos_sim"
+            ),
         )
         .where(F.col("cos_sim") >= threshold)
     )
+
+
+def _neardup_sql(
+    table: str, threshold: float, id_col: str, vec_col: str, block: str
+) -> str:
+    """The twin of :func:`embedding_neardup_pairs`, blocked on the SQL
+    expression ``block``."""
+    return f"""
+WITH b AS (
+  SELECT *, {block} AS blk FROM {table}
+),
+pairs AS (
+  SELECT a.{id_col} AS id_a, b2.{id_col} AS id_b,
+         {_cos6_sql(f"a.{vec_col}", f"b2.{vec_col}")} AS cos_sim
+  FROM b a JOIN b b2
+    ON a.blk = b2.blk AND a.{id_col} < b2.{id_col}
+)
+SELECT id_a, id_b, cos_sim FROM pairs WHERE cos_sim >= {threshold}
+"""
 
 
 def embedding_neardup_sql(
@@ -806,20 +786,7 @@ def embedding_neardup_sql(
     id_col: str = "vec_id", vec_col: str = "embedding",
     block_col: str = "label",
 ) -> str:
-    return f"""
-WITH pairs AS (
-  SELECT a.{id_col} AS id_a, b.{id_col} AS id_b,
-         round(
-           list_sum(list_transform(list_zip(a.{vec_col}, b.{vec_col}),
-                                   p -> p[1]::DOUBLE * p[2]::DOUBLE))
-           / (sqrt(list_sum(list_transform(a.{vec_col}, x -> x::DOUBLE * x::DOUBLE)))
-              * sqrt(list_sum(list_transform(b.{vec_col}, x -> x::DOUBLE * x::DOUBLE)))),
-           6) AS cos_sim
-  FROM {table} a JOIN {table} b
-    ON a.{block_col} = b.{block_col} AND a.{id_col} < b.{id_col}
-)
-SELECT id_a, id_b, cos_sim FROM pairs WHERE cos_sim >= {threshold}
-"""
+    return _neardup_sql(table, threshold, id_col, vec_col, block_col)
 
 
 def embedding_neardup_lsh_sql(
@@ -831,29 +798,9 @@ def embedding_neardup_lsh_sql(
     :func:`embedding_neardup_pairs`: identical deterministic
     hyperplanes → identical buckets → identical pair set."""
     planes = [hyperplane(dim, i) for i in range(n_planes)]
-    bucket_terms = " + ".join(
-        f"(CASE WHEN list_sum(list_transform(list_zip({vec_col}, "
-        f"[{','.join(repr(x) for x in p)}]::DOUBLE[]), "
-        f"p -> p[1]::DOUBLE * p[2])) > 0 THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
+    return _neardup_sql(
+        table, threshold, id_col, vec_col, _lsh_bucket_sql(vec_col, planes)
     )
-    return f"""
-WITH b AS (
-  SELECT *, ({bucket_terms})::BIGINT AS blk FROM {table}
-),
-pairs AS (
-  SELECT a.{id_col} AS id_a, b2.{id_col} AS id_b,
-         round(
-           list_sum(list_transform(list_zip(a.{vec_col}, b2.{vec_col}),
-                                   p -> p[1]::DOUBLE * p[2]::DOUBLE))
-           / (sqrt(list_sum(list_transform(a.{vec_col}, x -> x::DOUBLE * x::DOUBLE)))
-              * sqrt(list_sum(list_transform(b2.{vec_col}, x -> x::DOUBLE * x::DOUBLE)))),
-           6) AS cos_sim
-  FROM b a JOIN b b2
-    ON a.blk = b2.blk AND a.{id_col} < b2.{id_col}
-)
-SELECT id_a, id_b, cos_sim FROM pairs WHERE cos_sim >= {threshold}
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -962,11 +909,9 @@ def semdedup(
             "id_b",
             "dist_a",
             "dist_b",
-            F.round(
-                dot(F.col("va"), F.col("vb"))
-                / (F.col("na") * F.col("nb")),
-                6,
-            ).alias("cos_sim"),
+            _cos6(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")).alias(
+                "cos_sim"
+            ),
         )
         .where(F.col("cos_sim") >= threshold)
         .select(
@@ -1045,12 +990,7 @@ dup AS (
          greatest(a.{id_col}, b.{id_col}) AS id_b,
          CASE WHEN a.{id_col} < b.{id_col} THEN a.dist ELSE b.dist END AS dist_a,
          CASE WHEN a.{id_col} < b.{id_col} THEN b.dist ELSE a.dist END AS dist_b,
-         round(
-           list_sum(list_transform(list_zip(a.{vec_col}, b.{vec_col}),
-                                   p -> p[1]::DOUBLE * p[2]::DOUBLE))
-           / (sqrt(list_sum(list_transform(a.{vec_col}, x -> x::DOUBLE * x::DOUBLE)))
-              * sqrt(list_sum(list_transform(b.{vec_col}, x -> x::DOUBLE * x::DOUBLE)))),
-           6) AS cos_sim
+         {_cos6_sql(f"a.{vec_col}", f"b.{vec_col}")} AS cos_sim
   FROM anchors a JOIN av b ON a.cell = b.cell AND a.{id_col} <> b.{id_col}
 ),
 losers AS (

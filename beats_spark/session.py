@@ -76,19 +76,17 @@ def _session_conf(
     shuffle_partitions: int | None,
     extra_conf: dict[str, str] | None,
 ) -> dict[str, str]:
-    """Every conf ``build_session`` passes to the builder. Without
-    ``cores``, a master the launcher gave the driver JVM
-    (``spark-submit --master``) stays: the builder's options would
-    replace it."""
-    master = None if cores else _launcher_master()
-    cores = cores or DEFAULT_CPUS
+    """Every conf ``build_session`` passes to the builder. A conf the
+    launcher gave the driver JVM (``spark-submit --master``/``--conf``)
+    beats a default derived here, since the builder's options would
+    replace it; ``cores``, ``shuffle_partitions`` and ``extra_conf``
+    beat the launcher."""
+    n = cores or DEFAULT_CPUS
     # Rule of thumb: shuffle partitions ≈ 2× cores locally. On a real
     # cluster this is executors × cores × 2-3, or left to AQE coalesce.
-    shuffle_partitions = shuffle_partitions or max(2 * cores, 8)
-    conf = {
-        "spark.master": master or f"local[{cores}]",
-        "spark.app.name": app_name,
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+    defaults = {
+        "spark.master": f"local[{n}]",
+        "spark.sql.shuffle.partitions": str(max(2 * n, 8)),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -108,18 +106,27 @@ def _session_conf(
         "spark.sql.legacy.javaCharsets": "true",
         "spark.sql.legacy.codingErrorAction": "true",
     }
+    launcher = _launcher_conf()
+    conf = {k: launcher.get(k, v) for k, v in defaults.items()}
+    conf["spark.app.name"] = app_name
+    if cores:
+        conf["spark.master"] = f"local[{cores}]"
+    if shuffle_partitions:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     conf.update(extra_conf or {})
     conf.update(_local_fs_conf(conf))
     return conf
 
 
-def _launcher_master() -> str | None:
-    """The master of the driver JVM a launcher (``spark-submit``, the
-    ``pyspark`` shell) started this process from, else None."""
+def _launcher_conf() -> dict[str, str]:
+    """The conf of the driver JVM a launcher (``spark-submit``, the
+    ``pyspark`` shell) started this process from, else nothing. Without
+    a launcher the JVM's system properties hold the first session's
+    conf, not a launcher's."""
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        return None
+        return {}
     SparkContext._ensure_initialized()
-    return SparkConf().get("spark.master", None)
+    return dict(SparkConf().getAll())
 
 
 def _local_fs_conf(conf: dict[str, str]) -> dict[str, str]:

@@ -484,6 +484,47 @@ class TestSimilarity:
             )
             assert len(got) == 6 and got == want, p
 
+    def test_full_width_ann_equals_brute_force(self, spark):
+        # no hyperplanes put every vector in one LSH bucket, and probing
+        # every IVF cell ranks the whole corpus: both ANN paths are then
+        # exact, so any drift in their scoring or ranking shows here.
+        # The vectors repeat every 11 ids, so the top-k holds cosine
+        # ties that only the neighbor-id tie-break orders.
+        import duckdb
+
+        from beats_spark.operators.similarity import (
+            ann_ivf_topk_multi,
+            ann_ivf_topk_sql,
+            ann_lsh_topk,
+            brute_force_topk_sql,
+        )
+
+        dim, n_cent, qids, k = 8, 4, [0, 1, 17], 5
+        vecs = [
+            (i, [float((i * 13 + j) % 11) - 5.0 for j in range(dim)])
+            for i in range(60)
+        ]
+        df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+        brute = sorted(tuple(r) for r in brute_force_topk(df, qids, k=k).collect())
+        assert len(brute) == len(qids) * k
+        lsh = ann_lsh_topk(df, qids, k=k, n_planes=0, dim=dim)
+        assert sorted(tuple(r) for r in lsh.collect()) == brute
+        ivf = ann_ivf_topk_multi(
+            df, qids, k=k, nprobes=(n_cent,), n_centroids=n_cent, dim=dim
+        ).drop("nprobe")
+        assert sorted(tuple(r) for r in ivf.collect()) == brute
+
+        con = duckdb.connect()
+        con.execute("CREATE TABLE vecs(vec_id BIGINT, embedding FLOAT[])")
+        con.executemany("INSERT INTO vecs VALUES (?, ?)", vecs)
+        duck_ivf = con.execute(
+            ann_ivf_topk_sql(
+                "vecs", qids, k=k, n_centroids=n_cent, dim=dim, nprobe=n_cent
+            )
+        ).fetchall()
+        duck_brute = con.execute(brute_force_topk_sql("vecs", qids, k=k)).fetchall()
+        assert sorted(duck_ivf) == sorted(duck_brute) == brute
+
 
 class TestMultimodal:
     def test_extract_features_fake_decoder(self, spark, docs):

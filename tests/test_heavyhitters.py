@@ -166,7 +166,7 @@ class TestHistogramQuantiles:
     def test_interpolation_and_duckdb_parity(self, spark):
         from beats_spark.operators.heavyhitters import (
             histogram_quantiles_by,
-            histogram_quantiles_sql,
+            histogram_quantiles_by_sql,
         )
 
         vals = [(i % 97,) for i in range(1000)]
@@ -185,7 +185,9 @@ class TestHistogramQuantiles:
         )
         want = sorted(
             con.execute(
-                histogram_quantiles_sql("t", "v", [0.5, 0.9, 0.99], 0, 128)
+                histogram_quantiles_by_sql(
+                    "t", [], "v", [0.5, 0.9, 0.99], 0, 128
+                )
             ).fetchall()
         )
         assert got == want

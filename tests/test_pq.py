@@ -222,6 +222,67 @@ SELECT q_id, nid FROM (SELECT *, row_number() OVER
         }
         assert len(got & exact_truth) / len(exact_truth) == 1.0
 
+    def test_setup_trains_and_materializes_once(self, clustered, monkeypatch):
+        """One scaled corpus, materialized once, feeds one IVF training
+        and the m codebook trainings; the rows are the ones the
+        composition has always returned."""
+        from beats_spark.operators import pq, similarity
+
+        train, materialize = similarity._km_train, pq._materialize
+        calls = {"train": 0, "materialize": 0}
+
+        def counting_train(*a, **kw):
+            calls["train"] += 1
+            return train(*a, **kw)
+
+        def counting_materialize(df):
+            calls["materialize"] += 1
+            return materialize(df)
+
+        for mod in (similarity, pq):
+            monkeypatch.setattr(mod, "_km_train", counting_train)
+            monkeypatch.setattr(mod, "_materialize", counting_materialize)
+        _, embs = clustered
+        got = {}
+        for rerank in (0, 40):
+            calls.update(train=0, materialize=0)
+            got[rerank] = sorted(
+                tuple(r)
+                for r in pq.ivf_pq_topk(
+                    embs, self.Q, k=self.K, n_cells=16, nprobe=4,
+                    m=8, ks=16, ivf_iters=3, rerank=rerank,
+                ).collect()
+            )
+            assert calls == {"train": 1 + 8, "materialize": 1}, rerank
+        assert got[0] == sorted(self.ADC_ROWS)
+        assert got[40] == sorted(self.RERANK_ROWS)
+
+    # (q_id, neighbor_id, dist, rank) of the setup above
+    ADC_ROWS = [
+        (0, 250, 0.175697, 1), (0, 330, 0.181186, 2), (0, 110, 0.182071, 3),
+        (0, 170, 0.185407, 4), (0, 70, 0.194359, 5),
+        (1, 261, 0.221351, 1), (1, 201, 0.221505, 2), (1, 371, 0.230332, 3),
+        (1, 121, 0.232194, 4), (1, 461, 0.24004, 5),
+        (2, 332, 0.166175, 1), (2, 382, 0.166175, 2), (2, 422, 0.171392, 3),
+        (2, 452, 0.178394, 4), (2, 32, 0.192793, 5),
+        (13, 393, 0.124162, 1), (13, 63, 0.14652, 2), (13, 373, 0.150576, 3),
+        (13, 233, 0.157212, 4), (13, 293, 0.158358, 5),
+        (47, 7, 0.193449, 1), (47, 17, 0.193449, 2), (47, 27, 0.193449, 3),
+        (47, 37, 0.193449, 4), (47, 57, 0.193449, 5),
+    ]
+    RERANK_ROWS = [
+        (0, 290, 0.335065, 1), (0, 220, 0.337929, 2), (0, 340, 0.338179, 3),
+        (0, 110, 0.360827, 4), (0, 360, 0.362475, 5),
+        (1, 261, 0.294842, 1), (1, 131, 0.364611, 2), (1, 31, 0.384081, 3),
+        (1, 391, 0.385457, 4), (1, 41, 0.38891, 5),
+        (2, 32, 0.324842, 1), (2, 452, 0.341459, 2), (2, 142, 0.341817, 3),
+        (2, 72, 0.356312, 4), (2, 132, 0.359951, 5),
+        (13, 93, 0.274192, 1), (13, 393, 0.275163, 2), (13, 433, 0.302657, 3),
+        (13, 373, 0.315906, 4), (13, 333, 0.326356, 5),
+        (47, 137, 0.305082, 1), (47, 177, 0.314677, 2), (47, 297, 0.329936, 3),
+        (47, 27, 0.333734, 4), (47, 87, 0.349916, 5),
+    ]
+
     def test_rerank_must_cover_k(self, clustered):
         from beats_spark.operators.pq import ivf_pq_topk
 

@@ -38,30 +38,34 @@ _SUBMITTED = textwrap.dedent(
     """
     from beats_spark.session import build_session
 
-    spark = build_session("master-check")
-    print("MASTER", spark.sparkContext.master)
-    spark.stop()
-    spark = build_session("master-check", cores=3)
-    print("MASTER", spark.sparkContext.master)
-    spark.stop()
+    for cores in (None, 3):
+        spark = build_session("master-check", cores=cores)
+        print(
+            "MASTER", spark.sparkContext.master,
+            spark.conf.get("spark.sql.shuffle.partitions"),
+        )
+        spark.stop()
     """
 )
 
 
 def test_spark_submit_master_is_kept(tmp_path):
     """Without ``cores`` the master ``spark-submit --master`` set
-    stays; an explicit ``cores`` still sets ``local[cores]``."""
+    stays; an explicit ``cores`` still sets ``local[cores]``. A
+    ``--conf`` the launcher set beats the shuffle width derived from
+    the cores, with or without ``cores``."""
     script = tmp_path / "master_check.py"
     script.write_text(_SUBMITTED)
     env = dict(os.environ, PYTHONPATH=str(REPO), BEATS_SPARK_DRIVER_MEM="1g")
     proc = subprocess.run(
         ["spark-submit", "--master", "local[2]", "--driver-memory", "1g",
-         "--conf", "spark.ui.enabled=false", str(script)],
+         "--conf", "spark.ui.enabled=false",
+         "--conf", "spark.sql.shuffle.partitions=16", str(script)],
         env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     masters = [
-        ln.split()[1] for ln in proc.stdout.splitlines()
+        tuple(ln.split()[1:]) for ln in proc.stdout.splitlines()
         if ln.startswith("MASTER ")
     ]
-    assert masters == ["local[2]", "local[3]"]
+    assert masters == [("local[2]", "16"), ("local[3]", "16")]
