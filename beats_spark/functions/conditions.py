@@ -29,6 +29,8 @@ from typing import Any, Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .memo import memo
+
 _RANGE_OPS = {"gt": "__gt__", "gte": "__ge__", "lt": "__lt__", "lte": "__le__"}
 
 
@@ -55,28 +57,35 @@ def _field(df: DataFrame | None, name: str) -> Column:
 
 
 def compile_condition(config: Mapping[str, Any], df: DataFrame | None = None) -> Column:
-    """Compile a beats-style condition dict into one boolean Column."""
+    """Compile a beats-style condition dict into one boolean Column.
+
+    Pass ``df`` so schema-aware forms activate (flat dotted columns,
+    array-element ``contains``). The Column is built once per config,
+    schema and JVM (:func:`~beats_spark.functions.memo.memo`)."""
+    schema = None if df is None else df.schema
+    return memo(("condition", repr(config), schema), lambda: _compile(config, df))
+
+
+def _compile(config: Mapping[str, Any], df: DataFrame | None) -> Column:
     if not isinstance(config, Mapping) or len(config) == 0:
         raise ConditionError(f"invalid condition: {config!r}")
     if len(config) > 1:
         # implicit AND of multiple clauses in one mapping
-        return compile_condition(
-            {"and": [{k: v} for k, v in config.items()]}, df
-        )
+        return _compile({"and": [{k: v} for k, v in config.items()]}, df)
     (kind, body), = config.items()
 
     if kind == "and":
-        out = compile_condition(body[0], df)
+        out = _compile(body[0], df)
         for sub in body[1:]:
-            out = out & compile_condition(sub, df)
+            out = out & _compile(sub, df)
         return out
     if kind == "or":
-        out = compile_condition(body[0], df)
+        out = _compile(body[0], df)
         for sub in body[1:]:
-            out = out | compile_condition(sub, df)
+            out = out | _compile(sub, df)
         return out
     if kind == "not":
-        return ~compile_condition(body, df)
+        return ~_compile(body, df)
 
     if kind == "equals":
         parts = []

@@ -45,6 +45,8 @@ import re
 from dataclasses import dataclass
 from functools import lru_cache
 
+from .memo import memo
+
 # ---------------------------------------------------------------------------
 # Tokenizer parsing
 
@@ -228,9 +230,11 @@ def compile_tokenizer(tokenizer: str) -> Dissector:
 # Spark binding
 
 
-def dissect_frame(df, text, tokenizer: str):
+def dissect_frame(df, text: str, tokenizer: str):
     """The Spark kernel: :meth:`Dissector.dissect` as built-in Column
     expressions, for every tokenizer — no regex, no Python worker.
+    ``text`` names the source column as ``F.col`` reads it (backticks
+    around a flat dotted name).
 
     Offsets follow :meth:`Dissector.extract` (1-based): each value ends
     at ``position(delim, text, start)``. A greedy key before a
@@ -248,13 +252,34 @@ def dissect_frame(df, text, tokenizer: str):
     :meth:`Dissector.dissect`, folding ``apply_order`` over the static
     key names with NULL for "absent".
 
-    Returns ``(df2, cols, ok, tmp_cols)``: ``cols`` maps each of
-    :attr:`Dissector.output_keys` to a Column over ``df2``; drop
-    ``tmp_cols`` once ``cols`` and ``ok`` are assigned.
+    The expressions depend on ``(text, tokenizer)`` only and are built
+    once per JVM (:func:`~beats_spark.functions.memo.memo`); a call
+    costs one ``withColumns``.
+
+    Returns ``(df2, cols, failed, tmp_cols)``: ``cols`` maps each of
+    :attr:`Dissector.output_keys` to a Column over ``df2``, and
+    ``failed`` is the per-row parse failure, read off the materialized
+    gate (false for a NULL source); drop ``tmp_cols`` once ``cols`` and
+    ``failed`` are assigned.
     """
     from pyspark.sql import functions as F
 
+    kernel, cols = memo(
+        ("dissect", text, tokenizer), lambda: _dissect_exprs(text, tokenizer)
+    )
+    failed = memo(
+        "dissect_failed", lambda: ~F.coalesce(F.col("_dissect_ok"), F.lit(True))
+    )
+    return df.withColumns(kernel), dict(cols), failed, list(kernel)
+
+
+def _dissect_exprs(text_ref: str, tokenizer: str):
+    """``(kernel, cols)`` of :func:`dissect_frame`: the two columns it
+    materializes, and each output key's value over them."""
+    from pyspark.sql import functions as F
+
     d = compile_tokenizer(tokenizer)
+    text = F.col(text_ref)
     n = len(d.keys)
     start = F.lit(len(d.delims[0]) + 1)
     ends, offsets = [], []
@@ -283,9 +308,7 @@ def dissect_frame(df, text, tokenizer: str):
     # gate like a non-matching line; OR-ing in NULL for it keeps its ok
     # NULL (no failure flag) and the gate unconditional
     null_src = F.when(text.isNotNull(), F.lit(False))
-    df = df.withColumns(
-        {"_dissect_ok": ok | null_src, "_dissect_o": F.when(ok, F.array(*offsets))}
-    )
+    kernel = {"_dissect_ok": ok | null_src, "_dissect_o": F.when(ok, F.array(*offsets))}
     o = F.col("_dissect_o")
 
     def value(i: int):
@@ -309,4 +332,4 @@ def dissect_frame(df, text, tokenizer: str):
     cols = {
         name: absent if name in dropped else state[name] for name in d.output_keys
     }
-    return df, cols, F.col("_dissect_ok"), ["_dissect_ok", "_dissect_o"]
+    return kernel, cols

@@ -25,19 +25,35 @@ from pyspark.sql import functions as F
 
 from ..functions.conditions import compile_condition
 from ..functions.dissect import FLAG_PARSING_ERROR, compile_tokenizer, dissect_frame
+from ..functions.memo import memo
 from ..schema import FLAGS_FIELD
 
 
-def _fcol(df: DataFrame, name: str) -> Column:
+def _fref(df: DataFrame, name: str) -> str:
     """Flat-column-first field reference: a FLAT column whose name
     contains dots (the flat-key document model — enricher outputs like
     ``container.name``, ECS fields like ``source.ip``) wins over the
     struct-path reading of the same string; names not present as flat
     columns keep native struct-path addressing. Same precedence as
     conditions._field and ingest._read_field."""
-    if name in df.columns:
-        return F.col(f"`{name}`")
-    return F.col(name)
+    return f"`{name}`" if name in df.columns else name
+
+
+def _fcol(df: DataFrame, name: str) -> Column:
+    """:func:`_fref` as a Column."""
+    return F.col(_fref(df, name))
+
+
+def _flag_union(has_flags: bool, hit: Column, flag: str) -> Column:
+    """``log_flags`` with ``flag`` added where the NULL-safe ``hit``
+    holds (the reference's ``log.flags`` tags, beat.FlagField);
+    ``has_flags`` says whether the frame already has the column. The
+    result is always a set union, so repeated entries already in
+    ``log_flags`` collapse to one."""
+    empty = F.array().cast("array<string>")
+    base = F.coalesce(F.col(FLAGS_FIELD), empty) if has_flags else empty
+    err = F.when(hit, F.array(F.lit(flag))).otherwise(empty)
+    return F.array_union(base, err)
 
 
 def guard_added_columns(
@@ -75,20 +91,11 @@ class Processor:
     def _add_flag(
         self, df: DataFrame, guard: Column | None, hit: Column, flag: str
     ) -> DataFrame:
-        """Add ``flag`` to the row's ``log_flags`` set where the
-        NULL-safe ``hit`` holds (the reference's ``log.flags`` tags,
-        beat.FlagField). The result is always a set union, so repeated
-        entries already in ``log_flags`` collapse to one."""
-        empty = F.array().cast("array<string>")
-        base = (
-            F.coalesce(F.col(FLAGS_FIELD), empty)
-            if FLAGS_FIELD in df.columns
-            else empty
-        )
-        err = F.when(hit, F.array(F.lit(flag))).otherwise(empty)
+        """Add ``flag`` to the row's ``log_flags`` where ``hit`` holds
+        (:func:`_flag_union`)."""
+        flags = _flag_union(FLAGS_FIELD in df.columns, hit, flag)
         return df.withColumn(
-            FLAGS_FIELD,
-            self._guarded(df, guard, FLAGS_FIELD, F.array_union(base, err)),
+            FLAGS_FIELD, self._guarded(df, guard, FLAGS_FIELD, flags)
         )
 
 
@@ -699,29 +706,32 @@ class Dissect(Processor):
         ``(df, failed, tmp_cols)``. ``failed`` reads the kernel's
         materialized match gate, so it stays the per-row parse failure
         of THIS step (whatever ``log_flags`` held before) until
-        ``tmp_cols`` are dropped."""
+        ``tmp_cols`` are dropped.
+
+        Unguarded, every Column here is built once per JVM (the kernel
+        by :func:`dissect_frame`, the flag append below), so a call
+        issues only two DataFrame operations."""
         d = compile_tokenizer(self.tokenizer)
-        if not self.overwrite:
-            clash = [
-                self._out(k)
-                for k in d.output_keys
-                if self._out(k) in df.columns
-            ]
-            if clash:
-                raise ValueError(
-                    f"dissect would overwrite existing columns: {clash}"
-                )
-        df, cols, ok, tmp_cols = dissect_frame(
-            df, _fcol(df, self.field), self.tokenizer
+        outs = [self._out(k) for k in d.output_keys]
+        clash = [c for c in outs if c in df.columns and not self.overwrite]
+        if FLAGS_FIELD in outs:
+            clash.append(FLAGS_FIELD)
+        if clash:
+            raise ValueError(f"dissect would overwrite existing columns: {clash}")
+        has_flags = FLAGS_FIELD in df.columns
+        df, cols, failed, tmp_cols = dissect_frame(
+            df, _fref(df, self.field), self.tokenizer
         )
-        df = df.withColumns(
-            {
-                self._out(k): self._guarded(df, guard, self._out(k), c)
-                for k, c in cols.items()
-            }
+        # ``failed`` is one expression for every tokenizer
+        flags = memo(
+            ("dissect_flags", has_flags),
+            lambda: _flag_union(has_flags, failed, FLAG_PARSING_ERROR),
         )
-        failed = ~F.coalesce(ok, F.lit(True))
-        return self._add_flag(df, guard, failed, FLAG_PARSING_ERROR), failed, tmp_cols
+        out = {self._out(k): c for k, c in cols.items()}
+        out[FLAGS_FIELD] = flags
+        if guard is not None:
+            out = {k: self._guarded(df, guard, k, c) for k, c in out.items()}
+        return df.withColumns(out), failed, tmp_cols
 
 
 @dataclass

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.memo import memo
+
 PART_COL = "part_id"
 ROW_HASH_COL = "row_hash"
 
@@ -29,9 +31,11 @@ def with_partition_id(df: DataFrame, n_buckets: int) -> DataFrame:
     """Stable logical input partitioning: bucket of conv_id. This is the
     checkpoint unit (registrar state is keyed per source file; ours per
     conv_id bucket)."""
-    return df.withColumn(
-        PART_COL, F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+    part_id = memo(
+        ("part_id", n_buckets),
+        lambda: F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"),
     )
+    return df.withColumn(PART_COL, part_id)
 
 
 def with_row_hash(df: DataFrame) -> DataFrame:
@@ -44,15 +48,20 @@ def with_row_hash(df: DataFrame) -> DataFrame:
     # struct paths and fail to resolve.  MAP columns (e.g. kv/label
     # maps) are prohibited inside hash functions (undefined entry
     # order), so hash their key-sorted entry list instead.
-    exprs = []
-    for f in df.schema.fields:
-        if f.name == ROW_HASH_COL:
-            continue
-        c = F.col(f"`{f.name}`")
-        if f.dataType.typeName() == "map":
-            c = F.array_sort(F.map_entries(c))
-        exprs.append(c)
-    return df.withColumn(ROW_HASH_COL, F.xxhash64(*exprs))
+    schema = df.schema
+
+    def build():
+        exprs = []
+        for f in schema.fields:
+            if f.name == ROW_HASH_COL:
+                continue
+            c = F.col(f"`{f.name}`")
+            if f.dataType.typeName() == "map":
+                c = F.array_sort(F.map_entries(c))
+            exprs.append(c)
+        return F.xxhash64(*exprs)
+
+    return df.withColumn(ROW_HASH_COL, memo(("row_hash", schema), build))
 
 
 def sort_for_fanout(routed: DataFrame) -> DataFrame:
@@ -82,9 +91,13 @@ def sort_for_fanout(routed: DataFrame) -> DataFrame:
             "the fan-out write needs spark.sql.adaptive.enabled=true: "
             "its REBALANCE exchange is planned only under AQE"
         )
-    return routed.hint("rebalance", "sink", PART_COL).sortWithinPartitions(
-        "sink", PART_COL, "conv_id", "turn_idx"
+    # Columns, built once: a name passed to sortWithinPartitions costs
+    # about ten py4j calls per micro-batch to become one
+    order = memo(
+        "fanout_order",
+        lambda: [F.col(c) for c in ("sink", PART_COL, "conv_id", "turn_idx")],
     )
+    return routed.hint("rebalance", "sink", PART_COL).sortWithinPartitions(*order)
 
 
 def write_fanout(routed: DataFrame, root: str, mode: str = "overwrite") -> None:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.conditions import compile_condition
 from ..functions.fmtstr import compile_fmtstr
+from ..functions.memo import memo
 
 
 @dataclass
@@ -65,7 +66,18 @@ def compile_selector(
     ts_col: str = "ts",
     df=None,
 ) -> Column:
-    """Ordered rule list → sink key Column (first non-empty wins)."""
+    """Ordered rule list → sink key Column (first non-empty wins),
+    built once per rules, schema and JVM
+    (:func:`~beats_spark.functions.memo.memo`): a warm
+    ``Pipeline.transform`` or micro-batch reuses it."""
+    schema = None if df is None else df.schema
+    return memo(
+        ("selector", repr(list(rules)), default, ts_col, schema),
+        lambda: _selector(rules, default, ts_col, df),
+    )
+
+
+def _selector(rules, default, ts_col, df) -> Column:
     exprs: list[Column] = []
     for r in rules:
         if isinstance(r, Mapping):

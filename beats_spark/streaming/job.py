@@ -12,8 +12,14 @@ registrar checkpoints. The Spark-native restatement:
   session windows               ← multiline timeout flush (5 s gap)
 
 ``foreachBatch`` reuses the exact batch router (one partitionBy write
-per micro-batch), so batch and streaming share one code path. The
-contract is weaker than the batch job's: the checkpoint makes delivery
+per micro-batch), so batch and streaming share one code path. Every
+micro-batch calls ``Pipeline.transform`` anew, but the expressions it
+builds are memoized per config, input schema and JVM
+(``functions/memo.py``), and every batch of a stream has the source's
+one schema: from the second batch on, the transform issues only its
+DataFrame operations (≈ 45 ms of a ≈ 440 ms trigger on a 4-vCPU VM,
+where rebuilding them took ≈ 115 ms; the 200-row fan-out write takes
+≈ 270 ms). The contract is weaker than the batch job's: the checkpoint makes delivery
 at-least-once, but ``process_batch`` APPENDS and writes no manifest, so
 a micro-batch replayed after a failure appends its rows a second time.
 The batch job's idempotent replace (manifest-gated, per bucket) has no

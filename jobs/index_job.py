@@ -12,12 +12,14 @@ probes, nearest-neighbor inspection of a curated corpus).
 
 Build stages (all bounded the way a 100-TB index build must be):
 
-1. **Train** — IVF coarse centroids and the m per-subspace PQ
-   codebooks via the shared deterministic distributed k-means
-   (`similarity._km_train`): the corpus is scanned map-side per
-   iteration, only k×dim centroid literals ever reach the driver.
-2. **Encode** — `pq_encode` is ONE map-only select (no shuffle, no
-   Python); the IVF cell assignment is the same map-only shape.
+1. **Train** — `ivf_pq_train`: IVF coarse centroids and the m
+   per-subspace PQ codebooks via the shared deterministic distributed
+   k-means (`similarity._km_train`) over one materialized scaled
+   corpus: the corpus is scanned map-side per iteration, only k×dim
+   centroid literals ever reach the driver.
+2. **Encode** — `ivf_pq_cells`: the PQ encoding is ONE map-only select
+   (no shuffle, no Python); the IVF cell assignment is the same
+   map-only shape.
 3. **Write** — the index table (id, cell, codes) lands partitioned
    by cell, `sortWithinPartitions` leading with the partition column
    (the dynamic-partition writer inserts an unstable sort otherwise —
@@ -27,9 +29,10 @@ Build stages (all bounded the way a 100-TB index build must be):
 
 Search stages (optional, when --query-ids is given):
 
-4. **ANN** — `ivf_pq_topk`: probe nprobe cells per query (equi-join
-   on cell), ADC-rank candidates by m integer LUT lookups, exact
-   rerank of the top `--rerank` (the production refine step).
+4. **ANN** — `ivf_pq_search` over the index trained in 1. (no second
+   training): probe nprobe cells per query (equi-join on cell),
+   ADC-rank candidates by m integer LUT lookups, exact rerank of the
+   top `--rerank` (the production refine step).
 5. **Hybrid** — with --documents and --terms: BM25 postings retrieval
    fused with exact cosine by reciprocal-rank fusion
    (`hybrid.hybrid_rrf_topk`), the ES-style hybrid search.
@@ -79,19 +82,25 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = build_session("beats-spark-index")
 
-    from beats_spark.operators.pq import ivf_pq_topk, pq_encode, pq_train
-    from beats_spark.operators.similarity import kmeans_ivf
+    from pyspark.sql import functions as F
+
+    from beats_spark.operators.pq import ivf_pq_cells, ivf_pq_search, ivf_pq_train
 
     t0 = time.monotonic()
     embs = spark.read.parquet(args.embeddings)
 
-    # 1. train + 2. encode
-    assigned = kmeans_ivf(embs, k=args.cells, iters=args.iters).select(
-        "vec_id", "cell"
+    # 1. train (once: the search in 4. reuses it) + 2. encode
+    ix = ivf_pq_train(
+        embs,
+        n_cells=args.cells,
+        ivf_iters=args.iters,
+        m=args.m,
+        ks=args.ks,
+        pq_iters=args.iters,
     )
-    books = pq_train(embs, m=args.m, ks=args.ks, iters=args.iters)
-    codes = pq_encode(embs, books).select("vec_id", "codes")
-    index = codes.join(assigned, "vec_id")
+    index = ivf_pq_cells(ix).select(
+        F.col("vid").alias("vec_id"), "codes", F.col("cell").cast("long")
+    )
 
     # 3. write, clustered by the partition column (writer gotcha)
     (
@@ -103,7 +112,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     meta_rows = [
         (int(j), int(cell), [float(x) for x in cvec])
-        for j, book in enumerate(books)
+        for j, book in enumerate(ix.books)
         for cell, cvec in book
     ]
     local_frame(
@@ -121,17 +130,8 @@ def main(argv: list[str] | None = None) -> int:
     # 4./5. optional batch search
     if args.query_ids:
         qids = [int(q) for q in args.query_ids.split(",")]
-        ann = ivf_pq_topk(
-            embs,
-            qids,
-            k=args.k,
-            n_cells=args.cells,
-            ivf_iters=args.iters,
-            nprobe=args.nprobe,
-            m=args.m,
-            ks=args.ks,
-            pq_iters=args.iters,
-            rerank=args.rerank,
+        ann = ivf_pq_search(
+            ix, qids, k=args.k, nprobe=args.nprobe, rerank=args.rerank
         )
         ann.write.mode("overwrite").parquet(f"{args.output}/results/ann")
         summary["ann_rows"] = spark.read.parquet(
