@@ -698,19 +698,30 @@ class Dissect(Processor):
         return f"{self.target_prefix}{key}"
 
     def apply(self, df, guard=None):
-        df, _, tmp_cols = self.parse(df, guard)
-        return df.drop(*tmp_cols)
+        """Two DataFrame operations: the kernel's ``withColumns``, then
+        one projection that adds the outputs and leaves the kernel's
+        columns out (unguarded, its Column list is built once per input
+        schema)."""
+        kdf, out, _, _ = self._kernel(df, guard)
+        if guard is not None:
+            return kdf.select(*_project(df.columns, out))
+        key = ("dissect_apply", self.tokenizer, self.field, self.target_prefix)
+        cols = memo(key + tuple(df.columns), lambda: _project(df.columns, out))
+        return kdf.select(*cols)
 
     def parse(self, df, guard=None):
         """:meth:`apply` without dropping the kernel's columns: returns
         ``(df, failed, tmp_cols)``. ``failed`` reads the kernel's
         materialized match gate, so it stays the per-row parse failure
         of THIS step (whatever ``log_flags`` held before) until
-        ``tmp_cols`` are dropped.
+        ``tmp_cols`` are dropped."""
+        kdf, out, failed, tmp_cols = self._kernel(df, guard)
+        return kdf.withColumns(out), failed, tmp_cols
 
+    def _kernel(self, df, guard):
+        """``(df + kernel columns, outputs by name, failed, tmp_cols)``.
         Unguarded, every Column here is built once per JVM (the kernel
-        by :func:`dissect_frame`, the flag append below), so a call
-        issues only two DataFrame operations."""
+        by :func:`dissect_frame`, the flag append below)."""
         d = compile_tokenizer(self.tokenizer)
         outs = [self._out(k) for k in d.output_keys]
         clash = [c for c in outs if c in df.columns and not self.overwrite]
@@ -719,7 +730,7 @@ class Dissect(Processor):
         if clash:
             raise ValueError(f"dissect would overwrite existing columns: {clash}")
         has_flags = FLAGS_FIELD in df.columns
-        df, cols, failed, tmp_cols = dissect_frame(
+        kdf, cols, failed, tmp_cols = dissect_frame(
             df, _fref(df, self.field), self.tokenizer
         )
         # ``failed`` is one expression for every tokenizer
@@ -731,7 +742,22 @@ class Dissect(Processor):
         out[FLAGS_FIELD] = flags
         if guard is not None:
             out = {k: self._guarded(df, guard, k, c) for k, c in out.items()}
-        return df.withColumns(out), failed, tmp_cols
+        return kdf, out, failed, tmp_cols
+
+
+def _project(columns: Sequence[str], out: Mapping[str, Column]) -> list[Column]:
+    """The ``select`` list of ``withColumns(out)`` over a frame with
+    ``columns``, names matched the way Spark's default resolver does
+    (case-insensitively): a replaced column keeps its place and takes
+    its new name, new ones follow."""
+    named = {k.lower(): k for k in out}
+    kept = [
+        out[named[c.lower()]].alias(named[c.lower()]) if c.lower() in named
+        else F.col(f"`{c}`")
+        for c in columns
+    ]
+    have = {c.lower() for c in columns}
+    return kept + [c.alias(k) for k, c in out.items() if k.lower() not in have]
 
 
 @dataclass

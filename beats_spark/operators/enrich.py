@@ -11,6 +11,7 @@ process-local cache), the fact side never shuffles.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -41,13 +42,19 @@ class BroadcastLookup(Processor):
     on: Sequence[str]
     prefix: str = ""
 
-    def apply(self, df, guard=None):
+    @cached_property
+    def _hinted_dim(self) -> DataFrame:
+        """``dim`` renamed and hinted, once per instance: every run and
+        micro-batch joins the same DataFrame."""
         dim = self.dim
         if self.prefix:
-            for c in dim.columns:
-                if c not in self.on:
-                    dim = dim.withColumnRenamed(c, f"{self.prefix}{c}")
-        out = df.join(F.broadcast(dim), on=list(self.on), how="left")
+            dim = dim.withColumnsRenamed(
+                {c: f"{self.prefix}{c}" for c in dim.columns if c not in self.on}
+            )
+        return F.broadcast(dim)
+
+    def apply(self, df, guard=None):
+        out = df.join(self._hinted_dim, on=list(self.on), how="left")
         return guard_added_columns(df, out, guard)
 
 

@@ -7,11 +7,13 @@ time zone (required for DuckDB-oracle comparison), and shuffle
 partitions sized to parallelism instead of the 200 default.
 
 ``file:`` paths go through ``jvm/NioLocalFileSystem.java``, Hadoop's
-checksummed local filesystem with permissions set through
-``java.nio``, for ``FileSystem`` and ``FileContext`` (the stream's
-checkpoint logs) alike. Without the native ``libhadoop`` the stock one
-forks a ``chmod`` for every file, ``.crc`` sidecar and directory a
-write creates (≈430 per ``Pipeline.run`` of the 16-bucket job). The
+checksummed local filesystem with modes set and link status read
+through ``java.nio``, for ``FileSystem`` and ``FileContext`` (the
+stream's checkpoint logs) alike. Without the native ``libhadoop`` the
+stock one forks a ``chmod`` for every file, ``.crc`` sidecar and
+directory a write creates (≈430 per ``Pipeline.run`` of the 16-bucket
+job), and a ``readlink`` for both sides of every rename (24 per
+stream micro-batch, from its offset, commit and source logs). The
 class is compiled once with the JDK's ``javac`` into a jar under the
 user cache directory, keyed by the source's hash, and put on the
 driver classpath. Without a JDK, or when a driver JVM without the class is
@@ -142,7 +144,8 @@ def _local_fs_conf(conf: dict[str, str]) -> dict[str, str]:
         jar = _local_fs_jar()
     except (OSError, subprocess.CalledProcessError) as e:
         log.warning(
-            "cannot build %s (%s): Hadoop forks a chmod per local file and directory",
+            "cannot build %s (%s): Hadoop forks a chmod per local file and "
+            "directory and a readlink per rename",
             LOCAL_FS_CLASS, getattr(e, "stderr", None) or e,
         )
         return {}
@@ -159,7 +162,7 @@ def _local_fs_conf(conf: dict[str, str]) -> dict[str, str]:
         }
     log.warning(
         "the running driver JVM has no %s: Hadoop forks a chmod per local "
-        "file and directory",
+        "file and directory and a readlink per rename",
         LOCAL_FS_CLASS,
     )
     return {}

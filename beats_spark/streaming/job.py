@@ -17,9 +17,12 @@ micro-batch calls ``Pipeline.transform`` anew, but the expressions it
 builds are memoized per config, input schema and JVM
 (``functions/memo.py``), and every batch of a stream has the source's
 one schema: from the second batch on, the transform issues only its
-DataFrame operations (≈ 45 ms of a ≈ 440 ms trigger on a 4-vCPU VM,
-where rebuilding them took ≈ 115 ms; the 200-row fan-out write takes
-≈ 270 ms). The contract is weaker than the batch job's: the checkpoint makes delivery
+DataFrame operations. On a 4-vCPU VM a one-file (200-row) micro-batch
+triggers in ≈ 300 ms: the transform ≈ 35–45 ms (≈ 115 ms when it
+rebuilt its expressions), the fan-out write ≈ 250 ms, and the offset,
+WAL and commit logs ≈ 8 ms together (≈ 70 ms while Hadoop forked a
+``readlink`` for each side of their renames; ``session.py``). The
+contract is weaker than the batch job's: the checkpoint makes delivery
 at-least-once, but ``process_batch`` APPENDS and writes no manifest, so
 a micro-batch replayed after a failure appends its rows a second time.
 The batch job's idempotent replace (manifest-gated, per bucket) has no

@@ -24,6 +24,7 @@ import duckdb
 import pytest
 from py4j.clientserver import ClientServerConnection
 from pyspark import SparkContext
+from pyspark.sql import functions as F
 
 from beats_spark.functions import memo as memo_mod
 from beats_spark.operators.actions import Dissect
@@ -76,11 +77,27 @@ def _rows(df):
 
 
 def test_warm_transform_issues_few_py4j_calls(spark, input_path, monkeypatch):
+    """A warm transform issues few py4j calls and no ``drop``
+    (``Dissect`` leaves its kernel columns out of its output projection)
+    or ``hint`` (``BroadcastLookup`` hints its dim once per instance):
+    each would be one more DataFrame operation for the JVM to analyse
+    per micro-batch."""
     pipe = headline_pipeline(spark, n_buckets=16)
     pipe.transform(spark.read.parquet(input_path))  # cold: builds
     fresh = spark.read.parquet(input_path)
+    called = []
+    frame = type(fresh)
+    for owner, name in ((frame, "drop"), (frame, "hint"), (F, "broadcast")):
+        real = getattr(owner, name)
+
+        def spy(*args, _real=real, _name=name, **kwargs):
+            called.append(_name)
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(owner, name, spy)
     warm, calls = _count_calls(monkeypatch, lambda: pipe.transform(fresh))
     assert calls <= WARM_CALLS, calls
+    assert called == []
     # a cold build (empty memo) of a fresh Pipeline collects the same rows
     monkeypatch.setattr(memo_mod, "_entries", OrderedDict())
     cold = headline_pipeline(spark, n_buckets=16).transform(

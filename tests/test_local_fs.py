@@ -1,11 +1,14 @@
 """The local filesystem ``build_session`` installs for ``file:`` paths.
 
 Without the native ``libhadoop``, stock ``RawLocalFileSystem`` sets
-every file's, ``.crc``'s and directory's mode by forking ``chmod``;
-``NioLocalFileSystem`` sets the same modes through ``java.nio``."""
+every file's, ``.crc``'s and directory's mode by forking ``chmod``,
+and reads the link status of both sides of every rename by forking
+``readlink``; ``NioLocalFileSystem`` sets the same modes and reports
+the same link status through ``java.nio``."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import stat
@@ -13,6 +16,8 @@ import subprocess
 import sys
 import textwrap
 from pathlib import Path
+
+from py4j.protocol import Py4JJavaError
 
 from beats_spark import session
 from beats_spark.operators.router import with_partition_id, write_fanout
@@ -69,6 +74,53 @@ def test_modes_nio_cannot_express_still_land(spark, tmp_path):
     assert stat.S_IMODE(os.stat(tmp_path / "shared").st_mode) == 0o1777
     assert stat.S_IMODE(os.stat(tmp_path / "f").st_mode) == 0o640
 
+def _link_status(fs, path):
+    """What ``fs.getFileLinkStatus(path)`` reports, or the exception
+    class it raises."""
+    try:
+        st = fs.getFileLinkStatus(path)
+    except Py4JJavaError as e:
+        return e.java_exception.getClass().getName()
+    target = st.getSymlink().toString() if st.isSymlink() else None
+    return (
+        st.isFile(), st.isDirectory(), st.isSymlink(), st.getLen(),
+        st.getPath().toString(), target,
+    )
+
+def test_link_status_matches_stock_hadoop(spark, tmp_path):
+    """Stock ``getFileLinkStatus`` forks ``readlink`` on the path's
+    string; ours answers the same without one. A qualified ``file:``
+    path names nothing to ``readlink``, so stock reports even a real
+    symlink as its target's plain status there."""
+    fs, _ = _nio_fs(spark, tmp_path.as_uri())
+    ours = fs.getRawFileSystem()
+    jvm = spark._jvm
+    stock = jvm.org.apache.hadoop.fs.RawLocalFileSystem()
+    stock.initialize(jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration())
+    (tmp_path / "f").write_text("abc")
+    (tmp_path / "d").mkdir()
+    (tmp_path / "link").symlink_to("f")
+    (tmp_path / "dir link").symlink_to(tmp_path / "d")
+    cases = {
+        "file": tmp_path.joinpath("f").as_uri(),
+        "dir": tmp_path.joinpath("d").as_uri(),
+        "missing": tmp_path.joinpath("missing").as_uri(),
+        "link": str(tmp_path / "link"),
+        "qualified link": tmp_path.joinpath("link").as_uri(),
+        "dir link": str(tmp_path / "dir link"),
+    }
+    got = {}
+    for name, path in cases.items():
+        jpath = jvm.org.apache.hadoop.fs.Path(path)
+        got[name] = _link_status(ours, jpath)
+        assert got[name] == _link_status(stock, jpath), name
+    assert got["file"][:4] == (True, False, False, 3)
+    assert got["dir"][:3] == (False, True, False)
+    assert got["missing"] == "java.io.FileNotFoundException"
+    assert got["link"][2:] == (True, 3, str(tmp_path / "link"), f"file:{tmp_path}/f")
+    assert got["dir link"][5] == f"file:{tmp_path}/d"
+    assert got["qualified link"][:4] == (True, False, False, 3)
+
 def test_no_javac_leaves_the_conf_stock(monkeypatch, tmp_path):
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
     monkeypatch.setattr(session, "_javac", lambda: None)
@@ -91,23 +143,30 @@ def test_jar_is_appended_to_a_callers_classpath(spark):
 
 _CHILD = textwrap.dedent(
     """
-    import os, sys
+    import json, os, sys
     from beats_spark.plans.headline import headline_pipeline
     from beats_spark.session import build_session
     from beats_spark.streaming.job import run_stream
     from beats_spark.synth import synth_transcripts
 
-    log, out = sys.argv[1], sys.argv[2]
+    log, out, commands = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
 
     def forks():
-        return sum(1 for _ in open(log)) if os.path.exists(log) else 0
+        counts = dict.fromkeys(commands, 0)
+        if os.path.exists(log):
+            for line in open(log):
+                counts[line.split()[0]] += 1
+        return counts
 
-    spark = build_session("chmod-count", cores=2)
+    def since(before):
+        return {c: n - before[c] for c, n in forks().items()}
+
+    spark = build_session("fork-count", cores=2)
     df = synth_transcripts(spark, 300, seed=9).cache()
     df.count()
     before = forks()
     headline_pipeline(spark, n_buckets=4).run(spark, df, out, run_id="c")
-    run = forks() - before
+    got = {"run": since(before)}
     # two input files, drained by an availableNow stream: its
     # checkpoint logs go through Hadoop FileContext
     df.coalesce(1).write.parquet(out + "_in")
@@ -117,30 +176,51 @@ _CHILD = textwrap.dedent(
         spark, headline_pipeline(spark, n_buckets=4), out + "_in",
         out + "_stream", out + "_ckpt",
     ).awaitTermination()
-    stream = forks() - before
-    # the logging chmod sees stock Hadoop's forks
+    got["stream"] = since(before)
+    # the logging commands see stock Hadoop's forks: a mode set and a
+    # mode read through RawLocalFileSystem, and a checkpoint-log-style
+    # rename through FileContext over the stock LocalFs
+    before = forks()
     jvm = spark._jvm
-    raw = jvm.org.apache.hadoop.fs.RawLocalFileSystem()
-    raw.initialize(jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration())
-    path = jvm.org.apache.hadoop.fs.Path(out + "/_SUCCESS_probe")
+    fs = jvm.org.apache.hadoop.fs
+    conf = jvm.org.apache.hadoop.conf.Configuration(spark._jsc.hadoopConfiguration())
+    raw = fs.RawLocalFileSystem()
+    raw.initialize(jvm.java.net.URI("file:///"), conf)
+    path = fs.Path(out + "/_SUCCESS_probe")
     raw.create(path).close()
-    raw.setPermission(path, jvm.org.apache.hadoop.fs.permission.FsPermission("600"))
-    print("FORKS", run, stream, forks() - before - stream)
+    raw.setPermission(path, fs.permission.FsPermission("600"))
+    raw.getFileStatus(path).getPermission()
+    conf.set("fs.AbstractFileSystem.file.impl", "org.apache.hadoop.fs.local.LocalFs")
+    fc = fs.FileContext.getFileContext(jvm.java.net.URI("file:///"), conf)
+    fc.rename(
+        path, fs.Path(out + "/_SUCCESS_renamed"),
+        spark.sparkContext._gateway.new_array(fs.Options.Rename, 0),
+    )
+    got["stock"] = since(before)
+    print("FORKS", json.dumps(got))
     """
 )
 
+#: the shell commands stock Hadoop forks on the local filesystem
+#: without ``libhadoop``: modes set and read, link status
+_SHELL_COMMANDS = ("chmod", "readlink", "stat", "ls")
+
+
 def test_pipeline_run_forks_no_chmod(tmp_path):
-    """A ``build_session`` run in a fresh JVM, with a logging ``chmod``
-    first on its PATH: neither a ``Pipeline.run`` nor a stream's
-    micro-batches and checkpoint logs start one."""
-    real = shutil.which("chmod")
-    assert real is not None
-    bindir, log = tmp_path / "bin", tmp_path / "chmod.log"
+    """A ``build_session`` run in a fresh JVM, with a logging ``chmod``,
+    ``readlink``, ``stat`` and ``ls`` first on its PATH: neither a
+    ``Pipeline.run`` nor a stream's micro-batches and checkpoint logs
+    start one, while stock Hadoop in the same JVM does."""
+    bindir, log = tmp_path / "bin", tmp_path / "forks.log"
     bindir.mkdir()
-    (bindir / "chmod").write_text(
-        f'#!/bin/sh\necho "$*" >> "{log}"\nexec {real} "$@"\n'
-    )
-    (bindir / "chmod").chmod(0o755)
+    for name in _SHELL_COMMANDS:
+        real = shutil.which(name)
+        assert real is not None, name
+        # exec hands the real command's exit code back to Hadoop
+        (bindir / name).write_text(
+            f'#!/bin/sh\necho "{name} $*" >> "{log}"\nexec {real} "$@"\n'
+        )
+        (bindir / name).chmod(0o755)
     env = dict(
         os.environ,
         PATH=f"{bindir}{os.pathsep}{os.environ['PATH']}",
@@ -148,12 +228,17 @@ def test_pipeline_run_forks_no_chmod(tmp_path):
         PYTHONPATH=str(REPO),
     )
     proc = subprocess.run(
-        [sys.executable, "-c", _CHILD, str(log), (tmp_path / "out").as_uri()],
+        [sys.executable, "-c", _CHILD, str(log), (tmp_path / "out").as_uri(),
+         ",".join(_SHELL_COMMANDS)],
         env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     line = [ln for ln in proc.stdout.splitlines() if ln.startswith("FORKS")]
     assert line, proc.stdout[-2000:]
-    run_forks, stream_forks, stock_forks = map(int, line[-1].split()[1:])
-    assert stock_forks >= 1
-    assert (run_forks, stream_forks) == (0, 0)
+    got = json.loads(line[-1].split(" ", 1)[1])
+    none = dict.fromkeys(_SHELL_COMMANDS, 0)
+    assert got["run"] == none, got
+    assert got["stream"] == none, got
+    stock = got["stock"]
+    assert stock["chmod"] >= 1 and stock["readlink"] >= 1, stock
+    assert stock["stat"] + stock["ls"] >= 1, stock
