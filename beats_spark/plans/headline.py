@@ -2,7 +2,7 @@
 
   harvester   ← the transcripts scan (the caller's DataFrame)
   processors  ← dissect on ``synth.TOK_LOGFMT``, then the role and
-                tool broadcast enriches
+                tool lookups
   selector    ← three ordered routes, then the ``default`` sink
   outputs     ← ``Pipeline.run``'s fan-out write
   registrar   ← ``Pipeline.run``'s manifest and metrics commit

@@ -25,9 +25,11 @@ event (processor.go:129-142), the expressions are built once:
 dissect kernel and its flag append, the selector, the bucket and row
 hashes) are memoized per config, input schema and JVM
 (``functions/memo.py``). A warm ``transform`` of the headline chain
-issues 62 py4j calls (rebuilding its Columns took ≈ 710–740), and what
-is left is its DataFrame operations. A step whose expression depends on the
-data is rebuilt every call (``DnsEnrich``).
+issues 77 py4j calls (rebuilding its Columns took ≈ 710–740; 46 when
+its lookups were joins, the rest is the column lists of their two
+``select``s), and what is left is its DataFrame operations. A step
+whose expression depends on the data is rebuilt every call
+(``DnsEnrich``).
 
 Scale notes (100 TB): the only shuffle is the pre-write AQE rebalance
 by (sink, part_id), which is required anyway to control output file
@@ -35,15 +37,18 @@ counts. It keys on the bucket — not raw conv_id — and AQE sizes it
 from the shuffle's map output: small (sink, bucket) partitions are
 coalesced, and one above the advisory partition size (a bucket a hot
 conversation dominates) is split over several writer tasks, so no
-reducer carries a whole hot bucket and no setting has to predict it. The
-enrich joins are broadcast (no shuffle), but not free: every action
-that plans one rebuilds the broadcast, once per run and once per
-micro-batch in a stream. The dims and the commit rows are therefore
-JVM ``LocalRelation``s (``session.local_frame``), collected on the
-driver in milliseconds; a list-backed ``createDataFrame`` makes each
-broadcast and each commit write a Python-worker job of ≈0.3–0.55 s on
-a 4-vCPU VM. Input→bucket mapping is a hash, so rerunning any subset
-of buckets is deterministic.
+reducer carries a whole hot bucket and no setting has to predict it. No
+enrich lookup shuffles either. The headline's dims are driver-side
+``LocalRelation``s of a few rows (``session.local_frame``), read once
+into literal maps that each row looks up inside the scan's own stage:
+no join, no broadcast job and no extra AQE stage per run or
+micro-batch (``BroadcastLookup``). A larger or table-backed dim is a
+broadcast join, whose broadcast every action that plans it builds
+again, once per run and once per micro-batch in a stream. The commit
+rows are ``LocalRelation``s too; a list-backed ``createDataFrame``
+makes each broadcast and each commit write a Python-worker job of
+≈0.3–0.55 s on a 4-vCPU VM. Input→bucket mapping is a hash, so
+rerunning any subset of buckets is deterministic.
 """
 
 from __future__ import annotations

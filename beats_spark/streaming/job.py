@@ -18,13 +18,18 @@ builds are memoized per config, input schema and JVM
 (``functions/memo.py``), and every batch of a stream has the source's
 one schema: from the second batch on, the transform issues only its
 DataFrame operations. On a 4-vCPU VM a one-file (200-row) micro-batch
-triggers in ≈ 300 ms: the transform ≈ 35–45 ms (≈ 115 ms when it
-rebuilt its expressions), the fan-out write ≈ 250 ms, and the offset,
-WAL and commit logs ≈ 8 ms together (≈ 70 ms while Hadoop forked a
-``readlink`` for each side of their renames; ``session.py``). The
-contract is weaker than the batch job's: the checkpoint makes delivery
-at-least-once, but ``process_batch`` APPENDS and writes no manifest, so
-a micro-batch replayed after a failure appends its rows a second time.
+of the headline pipeline triggers in ≈ 200–250 ms, of which
+``addBatch`` is ≈ 185–230 ms: the transform ≈ 30–45 ms (≈ 115 ms when
+it rebuilt its expressions) and the fan-out write the rest, two Spark
+jobs (the ``REBALANCE`` map stage and the write). Its two lookups read
+their dims from literal maps in the scan's stage; as broadcast joins
+they cost two more jobs and an AQE re-plan per batch (``addBatch``
+≈ 255–310 ms; ``operators/enrich.py``). The offset, WAL and commit logs
+take ≈ 8 ms together (≈ 70 ms while Hadoop forked a ``readlink`` for
+each side of their renames; ``session.py``). The contract is weaker
+than the batch job's: the checkpoint makes delivery at-least-once, but
+``process_batch`` APPENDS and writes no manifest, so a micro-batch
+replayed after a failure appends its rows a second time.
 The batch job's idempotent replace (manifest-gated, per bucket) has no
 streaming counterpart yet.
 """

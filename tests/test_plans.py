@@ -1,12 +1,13 @@
 """Physical-plan regression tests — the 100 TB guarantees.
 
-These assert the plan SHAPE, not results: enrich lookups must stay
-broadcast joins (no shuffle of the fact table), parse/filter columns
-must push down to the parquet scan, and the fan-out transform must
-introduce exactly one exchange (the pre-write AQE rebalance). A change
-that silently turns a broadcast into a sort-merge join or defeats
-pushdown would still pass the value tests at sf0.001 and then fall
-over at scale — this file is the guard.
+These assert the plan SHAPE, not results: enrich lookups must never
+shuffle the fact table (a small driver-side dim is a literal map in
+the scan's own projection, any other dim a broadcast join),
+parse/filter columns must push down to the parquet scan, and the
+fan-out transform must introduce exactly one exchange (the pre-write
+AQE rebalance). A change that silently turns a broadcast into a
+sort-merge join or defeats pushdown would still pass the value tests
+at sf0.001 and then fall over at scale — this file is the guard.
 """
 
 from __future__ import annotations
@@ -44,7 +45,29 @@ def _optimized(df) -> str:
 
 
 class TestEnrichIsBroadcast:
-    def test_broadcast_hash_join(self, spark, transcripts_on_disk):
+    def test_broadcast_hash_join(self, spark, transcripts_on_disk, tmp_path):
+        # dims read from a table take the join path (only a small
+        # driver-side LocalRelation is looked up inside the plan)
+        dims = []
+        for name, dim in (("roles", dim_roles(spark)), ("tools", dim_tools(spark))):
+            dim.write.parquet(str(tmp_path / name))
+            dims.append(spark.read.parquet(str(tmp_path / name)))
+        df = spark.read.parquet(transcripts_on_disk)
+        out = apply_chain(
+            df,
+            [
+                BroadcastLookup(dim=dims[0], on=["role"]),
+                BroadcastLookup(dim=dims[1], on=["tool"]),
+            ],
+        )
+        plan = _plan(out)
+        assert plan.count("BroadcastHashJoin") == 2
+        assert "SortMergeJoin" not in plan
+        assert "ShuffledHashJoin" not in plan
+
+    def test_headline_lookups_plan_no_join(self, spark, transcripts_on_disk):
+        # the headline's 4-row local_frame dims are literal maps inside
+        # the scan's projection: no join, no broadcast exchange
         df = spark.read.parquet(transcripts_on_disk)
         out = apply_chain(
             df,
@@ -54,9 +77,10 @@ class TestEnrichIsBroadcast:
             ],
         )
         plan = _plan(out)
-        assert plan.count("BroadcastHashJoin") == 2
-        assert "SortMergeJoin" not in plan
-        assert "ShuffledHashJoin" not in plan
+        assert "Join" not in plan
+        assert "BroadcastExchange" not in plan
+        assert "Exchange" not in plan
+        assert plan.count("element_at(map(") == 5  # one per dim column
 
 
 class TestScanPushdown:
